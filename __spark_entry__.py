@@ -2472,7 +2472,7 @@ _FUZZY_JOIN_SQL = f"""
 
 def q_dedup_exact(spark, sf_dir):
     """Exact dedup groups (hash-groupBy on normalized text)."""
-    from bio2bel_spark.operators.dedup import exact_duplicates
+    from dataops.dedup import exact_duplicates
 
     df = exact_duplicates(_docs_augmented(spark, sf_dir))
     return df.withColumn("all_ids", _arr_str("all_ids"))
@@ -2480,14 +2480,14 @@ def q_dedup_exact(spark, sf_dir):
 
 def q_dedup_drop_exact(spark, sf_dir):
     """Surviving corpus after exact dedup (min-id representative kept)."""
-    from bio2bel_spark.operators.dedup import drop_exact_duplicates
+    from dataops.dedup import drop_exact_duplicates
 
     return drop_exact_duplicates(_docs_augmented(spark, sf_dir)).select("doc_id")
 
 
 def q_minhash_signatures(spark, sf_dir):
     """MinHash signatures (16 perms over word-3-gram portable hashes)."""
-    from bio2bel_spark.operators.dedup import minhash_signature
+    from dataops.dedup import minhash_signature
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     return docs.select("doc_id", _arr_str(minhash_signature("text", 16)).alias("sig"))
@@ -2495,7 +2495,7 @@ def q_minhash_signatures(spark, sf_dir):
 
 def q_dedup_lsh_verified(spark, sf_dir):
     """MinHash-LSH candidates filtered by true n-gram Jaccard ≥ 0.5."""
-    from bio2bel_spark.operators.dedup import jaccard_verify, lsh_candidate_pairs
+    from dataops.dedup import jaccard_verify, lsh_candidate_pairs
 
     docs = _docs_augmented(spark, sf_dir)
     cand = lsh_candidate_pairs(docs, n_hashes=16, bands=8)
@@ -2509,7 +2509,7 @@ def q_dedup_lsh_fast(spark, sf_dir):
     but the exact-Jaccard verify step keeps precision exact, so the exact
     inverted-index pairs remain its oracle (equality asserted at
     sf0.001/0.01/0.1; fixed data + deterministic pipeline keep it stable)."""
-    from bio2bel_spark.operators.dedup import jaccard_verify, lsh_candidate_pairs
+    from dataops.dedup import jaccard_verify, lsh_candidate_pairs
 
     docs = _docs_augmented(spark, sf_dir)
     cand = lsh_candidate_pairs(docs, n_hashes=16, bands=8, backend="xxhash64")
@@ -2519,7 +2519,7 @@ def q_dedup_lsh_fast(spark, sf_dir):
 def q_dedup_fuzzy_clusters(spark, sf_dir):
     """Cluster-level fuzzy dedup: LSH pairs → connected components → one
     survivor (min id) per near-dup cluster; one row per input doc."""
-    from bio2bel_spark.operators.dedup import dedup_fuzzy
+    from dataops.dedup import dedup_fuzzy
 
     docs = _docs_augmented(spark, sf_dir)
     return dedup_fuzzy(docs, n_hashes=16, bands=8, threshold=0.5)
@@ -2528,7 +2528,7 @@ def q_dedup_fuzzy_clusters(spark, sf_dir):
 def q_hll_grouped(spark, sf_dir):
     """Per-group portable HLL: distinct parts per returnflag — the
     distinct-users-per-day shape, O(m) registers per group."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_estimate_grouped,
         hll_state_grouped,
     )
@@ -2547,7 +2547,7 @@ def q_validate_lineitem(spark, sf_dir):
     constraints compiled into ONE scan + one reduce, plus a uniqueness
     check. The l_discount <= 0.05 rule genuinely fails (discounts reach
     0.10), so the report exercises real violation counting."""
-    from bio2bel_spark.operators.validation import check_constraints
+    from dataops.validation import check_constraints
 
     return check_constraints(
         _t(spark, sf_dir, "lineitem"),
@@ -2565,7 +2565,7 @@ def q_validate_lineitem(spark, sf_dir):
 def q_corpus_report(spark, sf_dir):
     """One-row corpus health report over the augmented (duplicate-bearing)
     documents table: volumes, shortness, token mass, exact-dup rate."""
-    from bio2bel_spark.operators.textquality import corpus_report
+    from dataops.textquality import corpus_report
 
     return corpus_report(_docs_augmented(spark, sf_dir))
 
@@ -2573,7 +2573,7 @@ def q_corpus_report(spark, sf_dir):
 def q_lm_perplexity(spark, sf_dir):
     """Bigram-LM perplexity per document (CCNet/KenLM-style quality filter),
     self-trained on the corpus with add-1 smoothing."""
-    from bio2bel_spark.operators.textquality import lm_perplexity
+    from dataops.textquality import lm_perplexity
 
     return lm_perplexity(_spread(spark, _t(spark, sf_dir, "documents")))
 
@@ -2583,7 +2583,7 @@ def q_dsir_weights(spark, sf_dir):
     bag-of-words models fit on the English slice (target) vs the whole
     corpus (raw); per-doc log importance weight = sum of bucket log-ratios.
     The selection tilt a 100 TB crawl toward a curated target domain."""
-    from bio2bel_spark.operators.textquality import dsir_log_weights
+    from dataops.textquality import dsir_log_weights
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     return dsir_log_weights(
@@ -2595,7 +2595,7 @@ def q_perplexity_buckets(spark, sf_dir):
     """CCNet-style head/middle/tail perplexity bucketing per language
     (Wenzek et al. 2020) — self-trained bigram LM, discrete integer
     milli-perplexity thresholds at the 33/67 % order stats."""
-    from bio2bel_spark.operators.textquality import ccnet_perplexity_buckets
+    from dataops.textquality import ccnet_perplexity_buckets
 
     return ccnet_perplexity_buckets(
         _spread(spark, _t(spark, sf_dir, "documents"))
@@ -2606,7 +2606,7 @@ def q_dsir_select(spark, sf_dir):
     """DSIR's selection step: Gumbel top-40 by perturbed log-weight
     (deterministic portable-hash Gumbel, seed 0) — sampling without
     replacement proportional to the importance weight, as TakeOrdered."""
-    from bio2bel_spark.operators.textquality import dsir_select
+    from dataops.textquality import dsir_select
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     return dsir_select(
@@ -2621,7 +2621,7 @@ def q_dsir_maintenance(spark, sf_dir):
     dsir_merge (counter summing — batch-order-invariant, so the one-pass
     DuckDB fit is the truth), then the sub-100 doc ids scored against the
     accumulated state."""
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         dsir_bucket_state,
         dsir_merge,
         dsir_weights_from_state,
@@ -2649,7 +2649,7 @@ def q_perplexity_maintenance(spark, sf_dir):
     accumulated state. Counter summing is batch-order-invariant, so the
     result equals the one-pass ccnet_perplexity_buckets fit — the same
     DuckDB oracle as perplexity_buckets."""
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         lm_model,
         perplexity_buckets_from_state,
         perplexity_hist_merge,
@@ -2676,8 +2676,8 @@ def q_selection_pipeline(spark, sf_dir):
     with reasons) → DSIR fit on the SURVIVING corpus (en slice as target)
     → deterministic Gumbel top-40 — gate-then-tilt, the selection stack a
     training-data pipeline runs end-to-end before packing."""
-    from bio2bel_spark.operators.cleaning import quality_gate
-    from bio2bel_spark.operators.textquality import dsir_select
+    from dataops.cleaning import quality_gate
+    from dataops.textquality import dsir_select
 
     from bio2bel_spark.operators.caching import tracked_persist
 
@@ -2704,9 +2704,9 @@ def q_selection_pipeline_packed(spark, sf_dir):
     chunk packing of the selected docs into 2048-char context windows per
     source — selection feeding packing, the composition a real
     training-data pipeline always runs before tokenization."""
-    from bio2bel_spark.operators.cleaning import quality_gate
-    from bio2bel_spark.operators.packing import pack_concat_chunks
-    from bio2bel_spark.operators.textquality import dsir_select
+    from dataops.cleaning import quality_gate
+    from dataops.packing import pack_concat_chunks
+    from dataops.textquality import dsir_select
 
     from bio2bel_spark.operators.caching import tracked_persist
 
@@ -2742,11 +2742,11 @@ def q_selection_pipeline_tokens(spark, sf_dir):
     by. Still ONE plan: the merges are the only driver scalars (6 rows,
     the k-means-seed convention); encoding is the map-only chained
     rewrite; packing is the same per-source running-sum window."""
-    from bio2bel_spark.operators.bpe import bpe_apply, bpe_learn_merges
-    from bio2bel_spark.operators.cleaning import quality_gate
-    from bio2bel_spark.operators.dedup import normalize_text
-    from bio2bel_spark.operators.packing import pack_concat_chunks
-    from bio2bel_spark.operators.textquality import dsir_select
+    from dataops.bpe import bpe_apply, bpe_learn_merges
+    from dataops.cleaning import quality_gate
+    from dataops.dedup import normalize_text
+    from dataops.packing import pack_concat_chunks
+    from dataops.textquality import dsir_select
 
     from bio2bel_spark.operators.caching import tracked_persist
 
@@ -2797,7 +2797,7 @@ def q_dedup_quality_survivor(spark, sf_dir):
     cluster the LONGEST text survives (ties: lower id) — the curation rule
     that keeps the best version of a duplicated page rather than whichever
     id happens to be smallest."""
-    from bio2bel_spark.operators.dedup import dedup_fuzzy
+    from dataops.dedup import dedup_fuzzy
 
     docs = _docs_augmented(spark, sf_dir).withColumn(
         "score", F.length("text")
@@ -2809,7 +2809,7 @@ def q_dedup_quality_survivor(spark, sf_dir):
 
 def q_ngram_jaccard_pairs(spark, sf_dir):
     """Exact n-gram Jaccard near-dup pairs (shingle inverted index)."""
-    from bio2bel_spark.operators.dedup import ngram_jaccard_pairs
+    from dataops.dedup import ngram_jaccard_pairs
 
     # _spread: the shingle md5 pipeline is heavy enough to want all cores
     # (r14 A/B: 1.35s spread vs 1.80 without)
@@ -2820,7 +2820,7 @@ def q_ngram_jaccard_pairs(spark, sf_dir):
 
 def q_simhash_docs(spark, sf_dir):
     """32-bit SimHash fingerprint per document."""
-    from bio2bel_spark.operators.dedup import simhash
+    from dataops.dedup import simhash
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     return docs.select("doc_id", simhash("text", 32).alias("fp"))
@@ -2850,7 +2850,7 @@ def _docs_multiline(spark, sf_dir):
 def q_line_dedup(spark, sf_dir):
     """C4-style cross-document line dedup: drop lines present in >= 2 docs,
     reassemble surviving lines in order; one row per doc."""
-    from bio2bel_spark.operators.cleaning import drop_boilerplate_lines
+    from dataops.cleaning import drop_boilerplate_lines
 
     return drop_boilerplate_lines(_docs_multiline(spark, sf_dir), min_docs=2)
 
@@ -2859,7 +2859,7 @@ def q_quality_gate(spark, sf_dir):
     """Gopher-style composite quality gate: keep/drop per doc with the
     array of violated rule names (auditable drops — rerunnable threshold
     decisions without re-scoring)."""
-    from bio2bel_spark.operators.cleaning import quality_gate
+    from dataops.cleaning import quality_gate
 
     out = quality_gate(
         _spread(spark, _t(spark, sf_dir, "documents")), min_tokens=40
@@ -2871,21 +2871,21 @@ def q_quality_gate(spark, sf_dir):
 
 def q_repetition_metrics(spark, sf_dir):
     """Gopher-style within-doc repetition fractions (lines/words/2-grams)."""
-    from bio2bel_spark.operators.cleaning import repetition_features
+    from dataops.cleaning import repetition_features
 
     return repetition_features(_t(spark, sf_dir, "documents"))
 
 
 def q_top_word_fraction(spark, sf_dir):
     """Most frequent word per doc and its share of the doc's words."""
-    from bio2bel_spark.operators.cleaning import top_word_fraction
+    from dataops.cleaning import top_word_fraction
 
     return top_word_fraction(_t(spark, sf_dir, "documents"))
 
 
 def q_pii_scrub(spark, sf_dir):
     """PII redaction audit over docs with planted emails/IPs/phones."""
-    from bio2bel_spark.operators.cleaning import pii_counts
+    from dataops.cleaning import pii_counts
 
     d = _t(spark, sf_dir, "documents")
     planted = d.select(
@@ -2911,10 +2911,10 @@ def q_training_pipeline(spark, sf_dir):
     token-count quality gate → exact dedup (min-id survivor) → context-window
     chunk spans. The composition a training-data job actually runs; every
     stage is the same operator the standalone queries check."""
-    from bio2bel_spark.operators.cleaning import drop_boilerplate_lines
-    from bio2bel_spark.operators.dedup import drop_exact_duplicates
-    from bio2bel_spark.operators.packing import chunk_spans
-    from bio2bel_spark.operators.textquality import whitespace_token_count
+    from dataops.cleaning import drop_boilerplate_lines
+    from dataops.dedup import drop_exact_duplicates
+    from dataops.packing import chunk_spans
+    from dataops.textquality import whitespace_token_count
 
     cleaned = drop_boilerplate_lines(
         _docs_multiline(spark, sf_dir), min_docs=2
@@ -2937,13 +2937,13 @@ def q_curation_pipeline_v2(spark, sf_dir):
     same operator the standalone queries check; no materialization
     barriers between stages (localCheckpoint-free — the LSH banding's
     tracked_persist is the only cache, as in the standalone query)."""
-    from bio2bel_spark.operators.dedup import (
+    from dataops.dedup import (
         jaccard_verify,
         lsh_candidate_pairs,
         ngram_contamination,
         winnowing_fingerprints,
     )
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         split_column,
         weighted_sample_per_group,
     )
@@ -3042,7 +3042,7 @@ def q_temperature_mixture(spark, sf_dir):
     the rate table plus the kept count per language. The bounded collect
     is one row per language (the weighted_mixture dict contract)."""
     from bio2bel_spark.operators.caching import tracked_persist
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         temperature_mixture_rates,
         weighted_mixture,
     )
@@ -3069,7 +3069,7 @@ def q_cluster_split(spark, sf_dir):
     a doc and its near-duplicates land on one side by construction —
     (doc_id, cluster, split) over the augmented corpus; same LSH/verify
     parameters as the green dedup_fuzzy_clusters twin."""
-    from bio2bel_spark.operators.dedup import cluster_split
+    from dataops.dedup import cluster_split
 
     docs = _docs_augmented(spark, sf_dir)
     return cluster_split(
@@ -3086,7 +3086,7 @@ def q_join_strategy(spark, sf_dir):
     fact⋈dim (broadcast), fact⋈fact balanced (plain), hot-key self-shape
     (salted) — one engine-side report row per scenario, value-oracled so
     the planner's thresholds can never silently drift."""
-    from bio2bel_spark.operators.skew import join_strategy_report
+    from dataops.skew import join_strategy_report
 
     li = _t(spark, sf_dir, "lineitem").select(F.col("l_partkey").alias("k"))
     part = _t(spark, sf_dir, "part").select(F.col("p_partkey").alias("k"))
@@ -3117,7 +3117,7 @@ def q_cms_maintenance(spark, sf_dir):
     the exact foreachBatch state transition (counter summing is
     batch-order-invariant, so the one-pass DuckDB grid is the truth) —
     probed for the sub-20 user ids."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         cms_estimate,
         cms_merge,
         cms_state,
@@ -3140,7 +3140,7 @@ def q_hll_maintenance(spark, sf_dir):
     micro-batches folded through hll_state + hll_merge (register-wise max
     — idempotent and order-invariant), read with the standard
     small-range-corrected estimator."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_estimate,
         hll_merge,
         hll_state,
@@ -3160,8 +3160,8 @@ def q_token_budget_select(spark, sf_dir):
     'take the best N tokens' data-selection step without a
     single-reducer global window. Deterministic total order
     (n_chars desc, doc_id asc)."""
-    from bio2bel_spark.operators.packing import select_token_budget
-    from bio2bel_spark.operators.textquality import whitespace_token_count
+    from dataops.packing import select_token_budget
+    from dataops.textquality import whitespace_token_count
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -3176,14 +3176,14 @@ def q_token_budget_select(spark, sf_dir):
 
 def q_text_quality(spark, sf_dir):
     """C4/Gopher-style quality signals + composite score per document."""
-    from bio2bel_spark.operators.textquality import quality_features
+    from dataops.textquality import quality_features
 
     return quality_features(_t(spark, sf_dir, "documents"))
 
 
 def q_language_confusion(spark, sf_dir):
     """Labeled lang × detected lang contingency counts (n-gram heuristic)."""
-    from bio2bel_spark.operators.textquality import detect_language
+    from dataops.textquality import detect_language
 
     docs = _t(spark, sf_dir, "documents")
     return (
@@ -3195,7 +3195,7 @@ def q_language_confusion(spark, sf_dir):
 
 def q_token_stats(spark, sf_dir):
     """Whitespace + BPE-ish token counts per document."""
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         bpe_token_count,
         whitespace_token_count,
     )
@@ -3210,7 +3210,7 @@ def q_token_stats(spark, sf_dir):
 
 def q_doc_fingerprints(spark, sf_dir):
     """Order-sensitive rolling fingerprint per document."""
-    from bio2bel_spark.operators.textquality import fingerprint
+    from dataops.textquality import fingerprint
 
     docs = _t(spark, sf_dir, "documents")
     return docs.select("doc_id", fingerprint("text").alias("fp"))
@@ -3242,7 +3242,7 @@ def _docs_spanned(spark, sf_dir):
 def q_dup_span_profile(spark, sf_dir):
     """Exact duplicate-span audit (Lee et al. 2022): per-doc count and
     union-coverage of 8-token spans repeated across >= 2 documents."""
-    from bio2bel_spark.operators.dedup import duplicate_span_profile
+    from dataops.dedup import duplicate_span_profile
 
     return duplicate_span_profile(_docs_spanned(spark, sf_dir), n=8, min_docs=2)
 
@@ -3250,7 +3250,7 @@ def q_dup_span_profile(spark, sf_dir):
 def q_dup_span_scrub(spark, sf_dir):
     """Destructive substring dedup: cut every cross-doc duplicated 8-token
     span, reassemble surviving tokens in order."""
-    from bio2bel_spark.operators.dedup import remove_duplicate_spans
+    from dataops.dedup import remove_duplicate_spans
 
     return remove_duplicate_spans(_docs_spanned(spark, sf_dir), n=8, min_docs=2)
 
@@ -3258,7 +3258,7 @@ def q_dup_span_scrub(spark, sf_dir):
 def q_dup_span_scrub_keep_first(spark, sf_dir):
     """Keep-one-canonical-copy substring scrub: the smallest (doc, pos)
     occurrence of each duplicated 8-token span survives."""
-    from bio2bel_spark.operators.dedup import remove_duplicate_spans
+    from dataops.dedup import remove_duplicate_spans
 
     return remove_duplicate_spans(
         _docs_spanned(spark, sf_dir), n=8, min_docs=2, keep_first=True
@@ -3270,7 +3270,7 @@ def q_embedding_quantize(spark, sf_dir):
     embedding and its dequantized max-abs/127 twin plus the max component
     error — the acceptance gate before swapping an ANN index onto the 4×
     smaller quantized store."""
-    from bio2bel_spark.operators.similarity import quantization_report
+    from dataops.similarity import quantization_report
 
     # _spread: per-row array quantize/dequantize folds; no-op at scale.
     return quantization_report(_spread(spark, _t(spark, sf_dir, "embeddings")))
@@ -3280,7 +3280,7 @@ def q_quantized_recall(spark, sf_dir):
     """Recall@10 of cosine search over the dequantized int8 corpus vs the
     exact float corpus for query vec 0 — the acceptance gate before an ANN
     index switches onto the quantized store."""
-    from bio2bel_spark.operators.similarity import quantized_recall
+    from dataops.similarity import quantized_recall
 
     emb = _t(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -3291,7 +3291,7 @@ def q_quantized_recall(spark, sf_dir):
 
 def q_cosine_topk(spark, sf_dir):
     """Exact brute-force cosine top-10 against vec 0 (ANN baseline)."""
-    from bio2bel_spark.operators.similarity import cosine_topk
+    from dataops.similarity import cosine_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -3327,7 +3327,7 @@ def q_embedding_near_pairs_exact(spark, sf_dir):
     evaluated as a B×B block-matrix grid (one Arrow matmul per grid cell)
     rather than a cartesian HOF join: every pair is still scored, but the
     plan is a single grid-keyed shuffle with no CartesianProduct node."""
-    from bio2bel_spark.operators.similarity import exact_near_pairs_blocked
+    from dataops.similarity import exact_near_pairs_blocked
 
     emb = _emb_augmented(spark, sf_dir)
     return exact_near_pairs_blocked(emb, threshold=0.9, n_blocks=8)
@@ -3337,7 +3337,7 @@ def q_ivf_topk(spark, sf_dir):
     """Approximate top-10 via IVF: probe the 2 nearest of 8 clusters.
     The scale path — with the table partitioned by cluster, the probe
     filter prunes partitions at scan time."""
-    from bio2bel_spark.operators.similarity import ivf_assign, ivf_topk
+    from dataops.similarity import ivf_assign, ivf_topk
 
     emb = _t(spark, sf_dir, "embeddings")
     query = emb.filter(F.col("vec_id") == 0).select("embedding").first()[0]
@@ -3360,7 +3360,7 @@ def q_ivf_topk(spark, sf_dir):
 def q_embedding_near_pairs_ivf(spark, sf_dir):
     """Near-dup pairs (cosine ≥ 0.9) via the cluster-bucketed self-join —
     the approximation whose exact twin is embedding_near_pairs_exact."""
-    from bio2bel_spark.operators.similarity import embedding_near_pairs
+    from dataops.similarity import embedding_near_pairs
 
     emb = _spread(spark, _emb_augmented(spark, sf_dir))
     return embedding_near_pairs(emb, threshold=0.9, n_clusters=8)
@@ -3369,7 +3369,7 @@ def q_embedding_near_pairs_ivf(spark, sf_dir):
 def q_embedding_near_pairs_probe2(spark, sf_dir):
     """Multi-probe IVF near-pairs (nprobe=2): recovers pairs split across a
     cluster boundary — recall strictly above the single-probe query."""
-    from bio2bel_spark.operators.similarity import embedding_near_pairs_multiprobe
+    from dataops.similarity import embedding_near_pairs_multiprobe
 
     emb = _spread(spark, _emb_augmented(spark, sf_dir))
     # 16 IVF lists, not 8: more lists = smaller buckets (quadratic win on the
@@ -3383,7 +3383,7 @@ def q_embedding_near_pairs_probe2(spark, sf_dir):
 def q_kmeans_assign(spark, sf_dir):
     """IVF index refinement: 2 Lloyd iterations from the deterministic seed
     centroids, then the final map-only assignment (vec_id, cluster)."""
-    from bio2bel_spark.operators.similarity import ivf_assign, kmeans_refine
+    from dataops.similarity import ivf_assign, kmeans_refine
 
     emb = _spread(
         spark,
@@ -3445,7 +3445,7 @@ def _kmeans_sql(iters: int = 2, k: int = 8) -> str:
 def q_embedding_dedup(spark, sf_dir):
     """Cluster-level embedding dedup: transitive cosine near-dups collapse
     to the min-id survivor; one row per vector."""
-    from bio2bel_spark.operators.similarity import embedding_dedup
+    from dataops.similarity import embedding_dedup
 
     emb = _spread(spark, _emb_augmented(spark, sf_dir))
     return embedding_dedup(emb, threshold=0.9, n_clusters=16, nprobe=2)
@@ -3454,7 +3454,7 @@ def q_embedding_dedup(spark, sf_dir):
 def q_knn_join(spark, sf_dir):
     """Batch ANN: top-5 corpus neighbors per query (25 queries re-keyed
     +500000), IVF-bucketed with nprobe=2 over the corpus's own index."""
-    from bio2bel_spark.operators.similarity import knn_join
+    from dataops.similarity import knn_join
 
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -3468,7 +3468,7 @@ def q_knn_join(spark, sf_dir):
 
 def q_media_frame_sample(spark, sf_dir):
     """Video frame-sampling plan (metadata-only fan-out, every 5th frame)."""
-    from bio2bel_spark.operators.multimodal import frame_sample, media_from_documents
+    from dataops.multimodal import frame_sample, media_from_documents
 
     media = media_from_documents(_t(spark, sf_dir, "documents"))
     out = frame_sample(media, every_n=5)
@@ -3477,7 +3477,7 @@ def q_media_frame_sample(spark, sf_dir):
 
 def q_media_resize_plan(spark, sf_dir):
     """Aspect-preserving resize targets from metadata (max side 256)."""
-    from bio2bel_spark.operators.multimodal import media_from_documents, resize_plan
+    from dataops.multimodal import media_from_documents, resize_plan
 
     media = media_from_documents(_t(spark, sf_dir, "documents"))
     return resize_plan(media, max_side=256).drop("kind")
@@ -3485,7 +3485,7 @@ def q_media_resize_plan(spark, sf_dir):
 
 def q_media_features(spark, sf_dir):
     """Arrow-batched mapInPandas decode → deterministic stub features."""
-    from bio2bel_spark.operators.multimodal import decode_features, media_from_documents
+    from dataops.multimodal import decode_features, media_from_documents
 
     media = media_from_documents(_t(spark, sf_dir, "documents"))
     # features[i] = k_i / 65536 with k_i a 16-bit int, so *65536 recovers the
@@ -3509,7 +3509,7 @@ def q_audio_features(spark, sf_dir):
     the deterministic sine synthesis replays arithmetically in DuckDB
     (trunc-to-PCM16 + window-lag zero crossings), so the REAL RIFF
     decode is hash-checked end-to-end."""
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         audio_from_documents,
         decode_features,
     )
@@ -3540,7 +3540,7 @@ def q_image_phash_pairs(spark, sf_dir):
     shifted id so every such doc has a perceptual twin — those pairs must
     surface at hamming ≤ 7. Value-oracled: the aHash replays as a 64-point
     integer grid + mean threshold in DuckDB, hamming via bit_count(xor)."""
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         image_from_documents,
         image_near_pairs,
     )
@@ -3563,7 +3563,7 @@ def q_png_features(spark, sf_dir):
     target in one Arrow mapInPandas pass. The pixel grid equals the PPM
     generator's, so the SAME integer-grid DuckDB replay hash-checks the
     full PNG encode→decode round trip."""
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         decode_resize_features,
         png_from_documents,
     )
@@ -3591,7 +3591,7 @@ def q_png_phash_pairs(spark, sf_dir):
     perceptual twins regenerated under shifted ids must surface at
     hamming ≤ 7. Same oracle as image_phash_pairs — the PNG round trip
     is lossless, so the fingerprints are identical."""
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         image_near_pairs,
         png_from_documents,
     )
@@ -3613,7 +3613,7 @@ def q_image_features(spark, sf_dir):
     No codec library — pure numpy on real raster bytes. Value-oracled:
     the modular-gradient rasters + integer-index NN resize replay as an
     integer grid expansion in DuckDB, hash-checking the REAL decode."""
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         decode_resize_features,
         image_from_documents,
     )
@@ -3659,7 +3659,7 @@ def q_asof_join(spark, sf_dir):
     """As-of join (kdb ``aj`` / pandas ``merge_asof`` / DuckDB ``ASOF JOIN``):
     latest purchase at or before each click, per user. Union-sort plan — one
     shuffle on the key, no inequality nested-loop (operators/temporal.py)."""
-    from bio2bel_spark.operators.temporal import asof_join, epoch_us
+    from dataops.temporal import asof_join, epoch_us
 
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -3688,7 +3688,7 @@ def q_asof_join(spark, sf_dir):
 def q_asof_join_forward(spark, sf_dir):
     """Forward as-of: earliest purchase at or after each click, per user —
     same one-shuffle union-sort plan scanned in descending time order."""
-    from bio2bel_spark.operators.temporal import asof_join, epoch_us
+    from dataops.temporal import asof_join, epoch_us
 
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -3717,7 +3717,7 @@ def q_asof_join_tolerance(spark, sf_dir):
     gap are nulled out, not dropped (pandas ``merge_asof(tolerance=...)``
     semantics). Same one-shuffle union-sort plan; the tolerance is a pure
     post-window column expression."""
-    from bio2bel_spark.operators.temporal import asof_join, epoch_us
+    from dataops.temporal import asof_join, epoch_us
 
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -3747,7 +3747,7 @@ def q_asof_join_nearest(spark, sf_dir):
     """Nearest-direction as-of join: whichever purchase is closer in
     absolute time (ties prefer backward) — one shuffle, two window frames
     over the same sort."""
-    from bio2bel_spark.operators.temporal import asof_join, epoch_us
+    from dataops.temporal import asof_join, epoch_us
 
     ev = _t(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
@@ -3775,7 +3775,7 @@ def q_interval_join(spark, sf_dir):
     """Point-in-interval range join, bucketed: signup → 1 h activity window,
     count the user's events inside it. Explode-to-buckets + equi-join — no
     BroadcastNestedLoop (operators/temporal.py)."""
-    from bio2bel_spark.operators.temporal import interval_join
+    from dataops.temporal import interval_join
 
     ev = _t(spark, sf_dir, "events")
     iv = ev.filter(F.col("event_type") == "signup").select(
@@ -3795,7 +3795,7 @@ def q_interval_join(spark, sf_dir):
 def q_interval_overlap(spark, sf_dir):
     """Interval×interval overlap join with owner-bucket dedup: signup
     2h-windows vs error 1h-windows per user, pair counts per user."""
-    from bio2bel_spark.operators.temporal import interval_overlap_join
+    from dataops.temporal import interval_overlap_join
 
     ev = _t(spark, sf_dir, "events")
     signups = ev.filter(F.col("event_type") == "signup").select(
@@ -3817,7 +3817,7 @@ def q_interval_overlap(spark, sf_dir):
 def q_hypertable_rollup(spark, sf_dir):
     """Hour/day/week rollup in ONE pass via GROUPING SETS (TimescaleDB
     continuous-aggregate shape) — one scan + one shuffle for all grains."""
-    from bio2bel_spark.operators.temporal import hypertable_rollup
+    from dataops.temporal import hypertable_rollup
 
     ev = _t(spark, sf_dir, "events")
     return hypertable_rollup(ev).select(
@@ -3832,7 +3832,7 @@ def q_hypertable_rollup(spark, sf_dir):
 def q_timeline_features(spark, sf_dir):
     """Per-user ordered-timeline feature block: lag/lead, running total,
     3-row rolling mean, and a 1-hour event-time RANGE trailing window."""
-    from bio2bel_spark.operators.temporal import timeline_features
+    from dataops.temporal import timeline_features
 
     return timeline_features(_t(spark, sf_dir, "events"), lookback_sec=3600)
 
@@ -3863,7 +3863,7 @@ _TIMELINE_SQL = """
 def q_cms_counts(spark, sf_dir):
     """Count-min sketch point estimates (1024×4 grid) for the first 20 part
     keys of lineitem — the mergeable frequency synopsis, hash-checked."""
-    from bio2bel_spark.operators.sketch import cms_estimate, cms_state
+    from dataops.sketch import cms_estimate, cms_state
 
     li = _t(spark, sf_dir, "lineitem")
     st = cms_state(li, "l_partkey", width=1024, depth=4)
@@ -3875,7 +3875,7 @@ def q_quantile_sketch(spark, sf_dir):
     """Deterministic bottom-k sampled quantiles of l_extendedprice: the
     synopsis is the 1024 hash-smallest rows (TakeOrdered, no full shuffle),
     the estimate is percentile_cont over the sample — SQL-replayable."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_estimate,
         quantile_sample_state,
     )
@@ -3890,7 +3890,7 @@ def q_quantile_sketch(spark, sf_dir):
 def q_quantile_sketch_grouped(spark, sf_dir):
     """Per-returnflag sampled quantiles: 256-row synopsis per group via
     WindowGroupLimit, percentile_cont per group."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_estimate_grouped,
         quantile_sample_state_grouped,
     )
@@ -3910,7 +3910,7 @@ def q_kmv_grouped(spark, sf_dir):
     """Per-group distinct-count sketch: KMV synopses per event_type (k=64
     smallest hashes via WindowGroupLimit — per-group top-k, no full sort),
     estimates exact below k."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         kmv_estimate_grouped,
         kmv_state_grouped,
     )
@@ -3927,7 +3927,7 @@ def q_bloom_decontaminate(spark, sf_dir):
     benchmark set's texts become a ≤m-bit literal bitmask; the corpus probe
     is a pure map (getbit inside codegen — no join, no shuffle). Per-source
     flagged/total counts."""
-    from bio2bel_spark.operators.sketch import bloom_probe, bloom_state
+    from dataops.sketch import bloom_probe, bloom_state
 
     # no _spread (r14 A/B: 1.16s with vs 1.04 without). Backend stays md5 —
     # the flag column IS the result here and the DuckDB oracle replays the
@@ -3952,7 +3952,7 @@ def q_kmv_distinct(spark, sf_dir):
     so even the *estimate* is oracle-checkable (unlike Spark's built-in
     approx_count_distinct, whose HLL++ registers aren't reproducible in
     SQL — the portable HLL below fixes that with an md5-based register)."""
-    from bio2bel_spark.operators.sketch import kmv_distinct
+    from dataops.sketch import kmv_distinct
 
     # no _spread (r14 A/B: 0.92s with vs 0.66 without)
     return kmv_distinct(_t(spark, sf_dir, "lineitem"), "l_partkey", k=256)
@@ -3962,7 +3962,7 @@ def q_hll_distinct(spark, sf_dir):
     """Portable HyperLogLog distinct count (b=9, m=512 registers): md5-based
     registers make state AND estimate replayable in DuckDB bit-for-bit
     (modulo a 4dp rounding on the final float)."""
-    from bio2bel_spark.operators.sketch import hll_distinct
+    from dataops.sketch import hll_distinct
 
     # _spread: per-row md5 register hashing; no-op at scale.
     return hll_distinct(
@@ -3973,7 +3973,7 @@ def q_hll_distinct(spark, sf_dir):
 def q_hash_split_counts(spark, sf_dir):
     """Deterministic train/val/test split by hashed key — pure projection,
     stable under appends; audit query returns per-split counts."""
-    from bio2bel_spark.operators.sketch import split_counts
+    from dataops.sketch import split_counts
 
     return split_counts(
         _t(spark, sf_dir, "documents"),
@@ -3985,7 +3985,7 @@ def q_hash_split_counts(spark, sf_dir):
 def q_heavy_hitters(spark, sf_dir):
     """Exact top-k frequent combinations (map-side partial agg +
     TakeOrderedAndProject)."""
-    from bio2bel_spark.operators.sketch import heavy_hitters
+    from dataops.sketch import heavy_hitters
 
     ev = _t(spark, sf_dir, "events")
     return heavy_hitters(ev, ["event_type", "user_id"], k=20)
@@ -3994,7 +3994,7 @@ def q_heavy_hitters(spark, sf_dir):
 def q_pack_chunks(spark, sf_dir):
     """Concat-then-chunk sequence packing (GPT pretraining layout): window
     cumsum partitioned by source — no global sort. Per-pack summary."""
-    from bio2bel_spark.operators.packing import pack_concat_chunks
+    from dataops.packing import pack_concat_chunks
 
     docs = _t(spark, sf_dir, "documents")
     packed = pack_concat_chunks(docs, "n_chars", budget=2048, by="source")
@@ -4007,7 +4007,7 @@ def q_pack_chunks(spark, sf_dir):
 def q_chunk_spans(spark, sf_dir):
     """Token-offset chunking of long docs (context-window splitting) —
     map-only explode, no shuffle."""
-    from bio2bel_spark.operators.packing import chunk_spans
+    from dataops.packing import chunk_spans
 
     docs = _t(spark, sf_dir, "documents")
     return chunk_spans(docs, "n_chars", budget=150).select(
@@ -4021,7 +4021,7 @@ def q_pack_first_fit(spark, sf_dir):
     open packs' remaining-capacity list through a recursive CTE (one row
     per item rank per group), so the greedy assignment hash-checks
     end-to-end — no longer a rows-only query."""
-    from bio2bel_spark.operators.packing import pack_first_fit
+    from dataops.packing import pack_first_fit
 
     docs = _t(spark, sf_dir, "documents")
     packed = pack_first_fit(docs, "n_chars", budget=2048, by="source")
@@ -4124,7 +4124,7 @@ def q_session_paths(spark, sf_dir):
     """Frequent session paths: 30-min-gap sessionization + ordered
     event-type sequences (first 8 steps), counted with a deterministic
     min-count gate instead of a tie-ambiguous top-k."""
-    from bio2bel_spark.operators.cohort import session_paths
+    from dataops.cohort import session_paths
 
     return session_paths(_t(spark, sf_dir, "events"), gap_sec=1800)
 
@@ -4132,7 +4132,7 @@ def q_session_paths(spark, sf_dir):
 def q_impute_median(spark, sf_dir):
     """Group-median NULL imputation (planted nulls on every 11th event):
     broadcast medians + map-only coalesce."""
-    from bio2bel_spark.operators.stats import impute_group_median
+    from dataops.stats import impute_group_median
 
     ev = _t(spark, sf_dir, "events").select(
         "event_id",
@@ -4150,7 +4150,7 @@ def q_impute_median(spark, sf_dir):
 def q_feature_correlations(spark, sf_dir):
     """Pairwise Pearson correlations of the lineitem numeric features per
     returnflag — one combinable aggregation for every pair."""
-    from bio2bel_spark.operators.stats import feature_correlations
+    from dataops.stats import feature_correlations
 
     return feature_correlations(
         _t(spark, sf_dir, "lineitem"),
@@ -4162,7 +4162,7 @@ def q_feature_correlations(spark, sf_dir):
 def q_zipf_fit(spark, sf_dir):
     """Zipf power-law fit over the top-300 corpus words: the cheap
     'is this even language' gate (slope near -1 for natural text)."""
-    from bio2bel_spark.operators.textquality import zipf_fit
+    from dataops.textquality import zipf_fit
 
     # no _spread (r14 A/B: 0.35s with vs 0.28 without)
     return zipf_fit(_t(spark, sf_dir, "documents"), top_n=300)
@@ -4171,7 +4171,7 @@ def q_zipf_fit(spark, sf_dir):
 def q_psi_drift(spark, sf_dir):
     """PSI drift report: price distribution before vs after 1996 in
     baseline-decile bins — the corpus/feature drift monitor."""
-    from bio2bel_spark.operators.stats import psi_report
+    from dataops.stats import psi_report
 
     # no _spread: bin assignment is cheap arithmetic (r14 A/B: 2.46s with
     # vs 1.45 without)
@@ -4192,8 +4192,8 @@ def q_bpe_encode(spark, sf_dir):
     encode every word map-only with the chained doubled-separator rewrite
     and count subwords per doc — the train-then-apply tokenizer round trip
     a 100 TB token-budget pipeline runs before packing."""
-    from bio2bel_spark.operators.bpe import bpe_apply, bpe_learn_merges
-    from bio2bel_spark.operators.dedup import normalize_text
+    from dataops.bpe import bpe_apply, bpe_learn_merges
+    from dataops.dedup import normalize_text
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     merges = bpe_learn_merges(docs, n_merges=6)
@@ -4221,7 +4221,7 @@ def q_bpe_merges(spark, sf_dir):
     """Corpus BPE tokenizer training: the first 6 learned merges (rank,
     pair, weighted count) — each round is a pair count over the word-
     frequency state + a map-only doubled-separator rewrite."""
-    from bio2bel_spark.operators.bpe import bpe_learn_merges
+    from dataops.bpe import bpe_learn_merges
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     merges = bpe_learn_merges(docs, n_merges=6)
@@ -4236,7 +4236,7 @@ def q_lsh_recall(spark, sf_dir):
     the number that keeps 'LSH is a recall knob' honest. Runs on the even
     half of the corpus (its production mode is a monitoring sample; the
     exact-truth side is the expensive part)."""
-    from bio2bel_spark.operators.dedup import lsh_recall_report
+    from dataops.dedup import lsh_recall_report
 
     # _spread: the exact-truth shingle side wants all cores (r14 A/B:
     # 3.67s spread vs 4.84 without)
@@ -4250,7 +4250,7 @@ def q_lsh_recall(spark, sf_dir):
 def q_target_encoding(spark, sf_dir):
     """Leave-one-out target encoding of part brand against retail price
     (smoothed, leakage-free) — high-cardinality categorical features."""
-    from bio2bel_spark.operators.stats import target_encode_loo
+    from dataops.stats import target_encode_loo
 
     part = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_retailprice")
     out = target_encode_loo(part, "p_brand", "p_retailprice", prior_weight=10.0)
@@ -4260,7 +4260,7 @@ def q_target_encoding(spark, sf_dir):
 def q_cdc_apply(spark, sf_dir):
     """CDC MERGE: latest-wins change feed (stale replays lose, deletes
     remove, inserts add) applied with one window + one outer join."""
-    from bio2bel_spark.operators.scd import cdc_apply
+    from dataops.scd import cdc_apply
 
     cust = _t(spark, sf_dir, "customer")
     base = cust.select("c_custkey", "c_mktsegment", "c_acctbal")
@@ -4303,7 +4303,7 @@ def q_srp_near_pairs(spark, sf_dir):
     """Cosine LSH via signed random projection: 32-bit fingerprints from
     seeded Gaussian hyperplanes, banded hamming pairs (exact recall by
     pigeonhole)."""
-    from bio2bel_spark.operators.similarity import srp_near_pairs
+    from dataops.similarity import srp_near_pairs
 
     # no _spread (r14 A/B: 1.56s with vs 1.00 without)
     emb = _emb_augmented(spark, sf_dir)
@@ -4313,7 +4313,7 @@ def q_srp_near_pairs(spark, sf_dir):
 def q_table_diff(spark, sf_dir):
     """Snapshot regression audit: added/removed/changed/unchanged keys and
     per-column change counts between two customer versions."""
-    from bio2bel_spark.operators.validation import table_diff
+    from dataops.validation import table_diff
 
     cust = _t(spark, sf_dir, "customer")
     old = cust.select("c_custkey", "c_mktsegment", "c_acctbal")
@@ -4346,7 +4346,7 @@ def q_table_diff(spark, sf_dir):
 def q_bm25_search(spark, sf_dir):
     """BM25 lexical relevance of every doc against a 3-term query — the
     keyword-search complement of the ANN tier; postings-only shuffle."""
-    from bio2bel_spark.operators.textquality import bm25_scores
+    from dataops.textquality import bm25_scores
 
     # no _spread (r14 A/B: 1.75s with vs 0.75 without — postings-only
     # shuffle; the tokenize projection is cheap)
@@ -4357,7 +4357,7 @@ def q_bm25_search(spark, sf_dir):
 def q_zscore_outliers(spark, sf_dir):
     """Per-type z-score anomaly screen on events.value (|z| > 2.5):
     broadcast group stats + map-only flag."""
-    from bio2bel_spark.operators.stats import zscore_outliers
+    from dataops.stats import zscore_outliers
 
     return zscore_outliers(
         _t(spark, sf_dir, "events"), "value", "event_type", "event_id",
@@ -4370,7 +4370,7 @@ def q_video_features(spark, sf_dir):
     (Arrow mapInPandas). Value-oracled: the deterministic gradient frames
     replay as an integer grid expansion in DuckDB — the REAL container
     parse is hash-checked end-to-end (plus the numpy round-trip tests)."""
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         video_frame_features,
         video_from_documents,
     )
@@ -4382,7 +4382,7 @@ def q_video_features(spark, sf_dir):
 def q_compression_ratio(spark, sf_dir):
     """zlib compressibility per document (Arrow-batched mapInPandas; no SQL
     twin — zlib is not expressible in DuckDB, exactness unit-tested)."""
-    from bio2bel_spark.operators.cleaning import compression_ratio
+    from dataops.cleaning import compression_ratio
 
     # no _spread (r14 A/B: 0.79s with vs 0.45 without — Arrow batching
     # amortizes the zlib cost below the exchange price locally)
@@ -4392,7 +4392,7 @@ def q_compression_ratio(spark, sf_dir):
 def q_cooccurrence_pmi(spark, sf_dir):
     """Collocation mining: PMI of word pairs within a 3-token window —
     linear pair generation (bounded probe explode + equi-join back)."""
-    from bio2bel_spark.operators.textquality import cooccurrence_pmi
+    from dataops.textquality import cooccurrence_pmi
 
     # no _spread (r14 A/B: 1.13s with vs 0.84 without)
     docs = _t(spark, sf_dir, "documents")
@@ -4405,7 +4405,7 @@ def q_scd2_apply(spark, sf_dir):
     per batch. Timestamps reduced to epoch seconds for the compare."""
     import datetime as _dt
 
-    from bio2bel_spark.operators.scd import scd2_apply
+    from dataops.scd import scd2_apply
 
     cust = _t(spark, sf_dir, "customer")
     ts0, ts1 = _dt.datetime(2024, 1, 1), _dt.datetime(2024, 2, 1)
@@ -4444,7 +4444,7 @@ def q_scd2_apply(spark, sf_dir):
 def q_funnel_counts(spark, sf_dir):
     """Ordered conversion funnel view -> click -> purchase: chained
     combinable aggregations, no self-join over the fact table."""
-    from bio2bel_spark.operators.cohort import funnel_counts
+    from dataops.cohort import funnel_counts
 
     return funnel_counts(
         _t(spark, sf_dir, "events"), steps=("view", "click", "purchase")
@@ -4454,7 +4454,7 @@ def q_funnel_counts(spark, sf_dir):
 def q_retention_matrix(spark, sf_dir):
     """Weekly retention cohorts: first-seen week x week offset, distinct
     active users per cell — the classic two-pass cohort shape."""
-    from bio2bel_spark.operators.cohort import retention_matrix
+    from dataops.cohort import retention_matrix
 
     return retention_matrix(_t(spark, sf_dir, "events"))
 
@@ -4462,7 +4462,7 @@ def q_retention_matrix(spark, sf_dir):
 def q_label_consistency(spark, sf_dir):
     """Label-noise screen: per labeled vector, the share of its 4 nearest
     ANN neighbors (self excluded) agreeing with its label."""
-    from bio2bel_spark.operators.similarity import label_consistency
+    from dataops.similarity import label_consistency
 
     emb = _spread(spark, _t(spark, sf_dir, "embeddings"))
     return label_consistency(emb, "label", k=4, n_clusters=8, nprobe=2)
@@ -4471,7 +4471,7 @@ def q_label_consistency(spark, sf_dir):
 def q_value_histogram(spark, sf_dir):
     """Fixed-width per-type histogram of events.value (20 bins over
     [0, 100) + under/overflow): one projection + one combinable count."""
-    from bio2bel_spark.operators.stats import value_histogram
+    from dataops.stats import value_histogram
 
     return value_histogram(
         _t(spark, sf_dir, "events"), "value", by="event_type",
@@ -4484,7 +4484,7 @@ def q_decayed_sum(spark, sf_dir):
     fixed as-of): the feature-store recency signal, one combinable pass."""
     import datetime as _dt
 
-    from bio2bel_spark.operators.stats import decayed_sum
+    from dataops.stats import decayed_sum
 
     return decayed_sum(
         _t(spark, sf_dir, "events"), "value", "ts", "user_id",
@@ -4495,7 +4495,7 @@ def q_decayed_sum(spark, sf_dir):
 def q_hard_negative_samples(spark, sf_dir):
     """Hard contrastive negatives: 2 deterministic picks from the anchor's
     own IVF cluster — semantically close, no RNG, map-only assignment."""
-    from bio2bel_spark.operators.similarity import hard_negative_samples
+    from dataops.similarity import hard_negative_samples
 
     # no _spread (r14 A/B: 1.29s with vs 1.16 without)
     emb = _t(spark, sf_dir, "embeddings")
@@ -4515,7 +4515,7 @@ def q_negative_samples(spark, sf_dir):
 def q_winsorized_stats(spark, sf_dir):
     """Outlier-robust per-type value stats: clamp to the group's [5%, 95%]
     quantiles, then aggregate — two grouped passes, broadcast cut points."""
-    from bio2bel_spark.operators.stats import winsorized_stats
+    from dataops.stats import winsorized_stats
 
     return winsorized_stats(
         _t(spark, sf_dir, "events"), "value", "event_type"
@@ -4525,7 +4525,7 @@ def q_winsorized_stats(spark, sf_dir):
 def q_event_pivot(spark, sf_dir):
     """Wide per-user summary sheet: sum(value) pivoted over the five event
     types — explicit category list, single pass, deterministic schema."""
-    from bio2bel_spark.operators.stats import pivot_report
+    from dataops.stats import pivot_report
 
     return pivot_report(
         _t(spark, sf_dir, "events"),
@@ -4539,7 +4539,7 @@ def q_event_pivot(spark, sf_dir):
 def q_stratified_sample(spark, sf_dir):
     """Deterministic per-source quota sample (5 docs/source by hash order) —
     reproducible corpus curation, no RNG."""
-    from bio2bel_spark.operators.sketch import sample_per_group
+    from dataops.sketch import sample_per_group
 
     docs = _t(spark, sf_dir, "documents")
     return sample_per_group(docs, by="source", key="doc_id", n=5).select(
@@ -4550,7 +4550,7 @@ def q_stratified_sample(spark, sf_dir):
 def q_weighted_mixture(spark, sf_dir):
     """Deterministic data-mixture downsampling: per-source keep rates via
     hashed key threshold (no shuffle, append-stable)."""
-    from bio2bel_spark.operators.sketch import weighted_mixture
+    from dataops.sketch import weighted_mixture
 
     docs = _t(spark, sf_dir, "documents")
     kept = weighted_mixture(
@@ -4670,7 +4670,7 @@ def q_fuzzy_join(spark, sf_dir):
     """Cross-table similarity join (record linkage): documents vs a
     perturbed-copy table, LSH band-bucket equi-join + true-Jaccard verify.
     The scalable form of the reference's string-at-a-time grounding."""
-    from bio2bel_spark.operators.dedup import fuzzy_join
+    from dataops.dedup import fuzzy_join
 
     # no _spread on either side (r14 A/B: 1.41s with vs 0.81 without)
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
@@ -4686,7 +4686,7 @@ def q_decontaminate(spark, sf_dir):
     """Benchmark decontamination: per-source survivor counts after dropping
     corpus docs that fuzzy-match the benchmark table (fuzzy_join +
     left-anti)."""
-    from bio2bel_spark.operators.dedup import decontaminate
+    from dataops.dedup import decontaminate
 
     # no _spread on either side (r14 A/B: 0.87s with vs 0.76 without)
     docs = _t(spark, sf_dir, "documents")
@@ -4724,7 +4724,7 @@ def q_triangle_count(spark, sf_dir):
 def q_sliding_windows(spark, sf_dir):
     """Overlapping context windows (200 tokens every 100): the stride-based
     training-window construction — map-only explode, no shuffle."""
-    from bio2bel_spark.operators.packing import sliding_window_spans
+    from dataops.packing import sliding_window_spans
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "n_chars")
     return sliding_window_spans(docs, "n_chars", window=200, stride=100)
@@ -4733,7 +4733,7 @@ def q_sliding_windows(spark, sf_dir):
 def q_tfidf_top_terms(spark, sf_dir):
     """Top-3 TF-IDF terms per document (smooth idf, sklearn formulation):
     explode → two map-side-combinable aggs → idf join → per-doc window."""
-    from bio2bel_spark.operators.textquality import tfidf_top_terms
+    from dataops.textquality import tfidf_top_terms
 
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     return tfidf_top_terms(docs, "text", "doc_id", top_n=3)
@@ -4769,7 +4769,7 @@ def q_forecast_revenue(spark, sf_dir):
 def q_quality_topk(spark, sf_dir):
     """Per-source top-3 docs by composite quality score (curation
     selection) — quality scoring + one window shuffle."""
-    from bio2bel_spark.operators.textquality import top_quality_per_group
+    from dataops.textquality import top_quality_per_group
 
     return top_quality_per_group(_t(spark, sf_dir, "documents"), k=3)
 
@@ -4778,7 +4778,7 @@ def q_winnowing(spark, sf_dir):
     """Winnowing (MOSS) fingerprint selection per document, rolled up to a
     full-fidelity per-doc summary (count + sum + min/max of the selected
     fingerprints — any divergence in ANY selected hash moves the sum)."""
-    from bio2bel_spark.operators.dedup import winnowing_fingerprints
+    from dataops.dedup import winnowing_fingerprints
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     fps = winnowing_fingerprints(docs, k=4, window=4)
@@ -4794,7 +4794,7 @@ def q_weighted_sample(spark, sf_dir):
     """Efraimidis–Spirakis weighted sampling without replacement: 20 docs
     per source, inclusion probability ∝ n_chars, from portable hashes (no
     RNG — engine-reproducible row set)."""
-    from bio2bel_spark.operators.sketch import weighted_sample_per_group
+    from dataops.sketch import weighted_sample_per_group
 
     docs = _t(spark, sf_dir, "documents")
     out = weighted_sample_per_group(
@@ -4805,7 +4805,7 @@ def q_weighted_sample(spark, sf_dir):
 
 def q_lexical_diversity(spark, sf_dir):
     """Type/token ratio + word-entropy quality profile per document."""
-    from bio2bel_spark.operators.textquality import lexical_diversity
+    from dataops.textquality import lexical_diversity
 
     return lexical_diversity(_spread(spark, _t(spark, sf_dir, "documents")))
 
@@ -4813,7 +4813,7 @@ def q_lexical_diversity(spark, sf_dir):
 def q_vocab_divergence(spark, sf_dir):
     """Vocabulary drift per source: KL and Jensen–Shannon divergence of
     each slice's unigram distribution against the whole corpus."""
-    from bio2bel_spark.operators.textquality import vocab_divergence
+    from dataops.textquality import vocab_divergence
 
     # no _spread (r14 A/B: 0.75s with vs 0.55 without)
     return vocab_divergence(_t(spark, sf_dir, "documents"), by="source")
@@ -4822,7 +4822,7 @@ def q_vocab_divergence(spark, sf_dir):
 def q_oov_rate(spark, sf_dir):
     """Out-of-vocabulary fraction per document against the corpus top-500
     word vocabulary (broadcast membership join, deterministic ties)."""
-    from bio2bel_spark.operators.textquality import oov_rate
+    from dataops.textquality import oov_rate
 
     return oov_rate(_spread(spark, _t(spark, sf_dir, "documents")), vocab_size=500)
 
@@ -4831,7 +4831,7 @@ def q_zorder(spark, sf_dir):
     """Z-order (Morton) layout of lineitem on (l_partkey, l_suppkey):
     per-curve-bucket occupancy + dimension spans — the full-fidelity probe
     of the interleave arithmetic (any bit off moves a row's bucket)."""
-    from bio2bel_spark.operators.layout import zorder_layout
+    from dataops.layout import zorder_layout
 
     li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     # partition=False: the probe aggregates the codes — the range exchange
@@ -4855,7 +4855,7 @@ def q_loop_detection(spark, sf_dir):
     """Trailing-loop (degenerate-generation) detection over documents with
     a period-2 loop planted on every 7th doc — the detector must fire on
     exactly the planted set with the right period/coverage."""
-    from bio2bel_spark.operators.textquality import trailing_loop_features
+    from dataops.textquality import trailing_loop_features
 
     d = _spread(spark, _t(spark, sf_dir, "documents"))
     planted = d.select(
@@ -4881,7 +4881,7 @@ def q_ngram_contamination(spark, sf_dir):
     """Exact 8-gram benchmark-overlap scan: every 31st document doubles as
     the 'benchmark' corpus, so those training docs must read ~fully
     contaminated while the rest only collide on common phrases."""
-    from bio2bel_spark.operators.dedup import ngram_contamination
+    from dataops.dedup import ngram_contamination
 
     docs = _spread(spark, _t(spark, sf_dir, "documents"))
     bench = docs.filter(F.col("doc_id") % 31 == 0)
@@ -4893,7 +4893,7 @@ def q_bloom_join(spark, sf_dir):
     literal-bitmask prefilter on the large side — the result must be
     IDENTICAL to the plain join (no false negatives), which is exactly
     what the SQL oracle checks."""
-    from bio2bel_spark.operators.sketch import bloom_filtered_join
+    from dataops.sketch import bloom_filtered_join
 
     # _spread: the md5/xxhash probe is the per-row cost and the sf parquet
     # scans as 1 partition; at scale _spread is a no-op (no added shuffle
@@ -4926,7 +4926,7 @@ def q_split_leakage(spark, sf_dir):
     near-dup twins): near-dup pairs × deterministic hash_split — the
     off-diagonal (test,train) row is the leakage the audit exists to
     surface."""
-    from bio2bel_spark.operators.dedup import split_leakage_report
+    from dataops.dedup import split_leakage_report
 
     docs = _docs_augmented(spark, sf_dir)
     return split_leakage_report(
@@ -4948,7 +4948,7 @@ def q_incremental_fuzzy(spark, sf_dir):
     import tempfile
 
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import incremental_fuzzy_dedup
+    from dataops.dedup import incremental_fuzzy_dedup
 
     cat = Catalog(spark, tempfile.mkdtemp(prefix="incfuzzy_"))
     docs = _docs_augmented(spark, sf_dir)
@@ -4977,7 +4977,7 @@ def q_topk_maintenance(spark, sf_dir):
     ``(key, cnt, dropped_max)`` state; the DuckDB twin replays the same
     three truncations with window-ranked CTEs. NULL user_ids are
     filtered on both sides (engine null-ordering differs)."""
-    from bio2bel_spark.streaming.events import topk_merge_batch
+    from dataops.streaming.events import topk_merge_batch
 
     ev = _t(spark, sf_dir, "events").where(F.col("user_id").isNotNull())
     state, dropped = None, 0
@@ -5009,7 +5009,7 @@ def q_psi_maintenance(spark, sf_dir):
     ``psi_from_state`` (same eps floor and contribution formula)."""
     from pyspark.sql import Window
 
-    from bio2bel_spark.streaming.events import psi_bin_counts
+    from dataops.streaming.events import psi_bin_counts
 
     ev = _t(spark, sf_dir, "events")
     state = None
@@ -5040,7 +5040,7 @@ def q_mean_pool(spark, sf_dir):
     """Multi-vector mean-pooling: embeddings grouped 16-ways pooled to one
     vector per group (token→document reduction). Means scaled to 1e6
     integers before the string join so both engines format identically."""
-    from bio2bel_spark.operators.similarity import mean_pool_vectors
+    from dataops.similarity import mean_pool_vectors
 
     emb = _t(spark, sf_dir, "embeddings").select(
         (F.col("vec_id") % 16).alias("g"),
@@ -5061,7 +5061,7 @@ def q_mean_pool(spark, sf_dir):
 def q_robust_scale(spark, sf_dir):
     """Median/IQR scaling of account balance within market segment — the
     outlier-immune normalization (quartile cut table broadcast back)."""
-    from bio2bel_spark.operators.stats import robust_scale
+    from dataops.stats import robust_scale
 
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
@@ -5072,8 +5072,8 @@ def q_robust_scale(spark, sf_dir):
 def q_ab_test(spark, sf_dir):
     """Deterministic A/B assignment (hash_split on user_id) + one-pass
     Welch t readout of event value between the arms."""
-    from bio2bel_spark.operators.sketch import split_column
-    from bio2bel_spark.operators.stats import ab_test_report
+    from dataops.sketch import split_column
+    from dataops.stats import ab_test_report
 
     ev = _t(spark, sf_dir, "events").select("user_id", "value")
     assigned = ev.withColumn(
@@ -5086,7 +5086,7 @@ def q_soft_cluster(spark, sf_dir):
     """Soft (softmax) cluster membership over the embeddings table:
     argmax cluster + probability mass + mixture entropy per vector —
     the boundary-content detector a hard IVF assignment hides."""
-    from bio2bel_spark.operators.similarity import soft_cluster_assign
+    from dataops.similarity import soft_cluster_assign
 
     emb = _t(spark, sf_dir, "embeddings").select(
         "vec_id", F.col("embedding").cast("array<double>").alias("embedding")
@@ -5098,7 +5098,7 @@ def q_join_size(spark, sf_dir):
     """Pre-join audit: exact output cardinality + hottest key of the
     lineitem self-join on supplier key — the 'salt this key?' number,
     computed from the count tables, never the join itself."""
-    from bio2bel_spark.operators.validation import join_size_estimate
+    from dataops.validation import join_size_estimate
 
     li = _t(spark, sf_dir, "lineitem").select(F.col("l_suppkey").alias("k"))
     return join_size_estimate(li, li, on="k")
@@ -5108,7 +5108,7 @@ def q_edit_distance(spark, sf_dir):
     """Levenshtein near-pairs over customer names (length-bucket + prefix
     blocking, exact JVM verify) — names differing in <= 2 trailing digits
     must pair up; the blocked result equals brute force on this data."""
-    from bio2bel_spark.operators.dedup import edit_distance_pairs
+    from dataops.dedup import edit_distance_pairs
 
     cust = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 300)
     return edit_distance_pairs(
@@ -5119,7 +5119,7 @@ def q_edit_distance(spark, sf_dir):
 def q_equiheight_histogram(spark, sf_dir):
     """Quantile-binned (equi-height) histogram of extended price within
     return flag — every bin carries ~10% of the rows regardless of skew."""
-    from bio2bel_spark.operators.stats import equiheight_histogram
+    from dataops.stats import equiheight_histogram
 
     # _spread: the per-row bin-assignment fold (and the percentile partial
     # aggregation) otherwise run on the single sf scan partition; no-op at
@@ -5135,7 +5135,7 @@ def q_hilbert_layout(spark, sf_dir):
     """Hilbert-curve layout of lineitem on (l_partkey, l_suppkey):
     per-curve-bucket occupancy + dimension spans — full-fidelity probe of
     the reflect/rotate fold (any level wrong moves rows across buckets)."""
-    from bio2bel_spark.operators.layout import hilbert_layout
+    from dataops.layout import hilbert_layout
 
     # no _spread: the fold is cheap bit arithmetic (r14 A/B: 2.89s with vs
     # 2.49 without)
@@ -5163,7 +5163,7 @@ def q_hilbert_layout_3d(spark, sf_dir):
     fold (any level/dimension wrong moves rows across buckets). The
     DuckDB twin unrolls the same transpose level-by-level in chained
     CTEs."""
-    from bio2bel_spark.operators.layout import hilbert_layout
+    from dataops.layout import hilbert_layout
 
     # no _spread: same A/B direction as q_hilbert_layout (3.54s with vs
     # 3.10 without)
@@ -5193,7 +5193,7 @@ def q_hilbert_layout_3d(spark, sf_dir):
 def q_quantile_transform(spark, sf_dir):
     """Rank-normalization of account balance within each market segment —
     the outlier-immune feature transform (percent_rank window)."""
-    from bio2bel_spark.operators.stats import quantile_transform
+    from dataops.stats import quantile_transform
 
     cust = _t(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment", "c_acctbal"
@@ -5211,57 +5211,6 @@ QUERIES: dict[str, Callable] = {
     # driver-checked lead, then ascending last-green round. The
     # ledger-freshness test asserts this invariant; regenerate with
     #   python scripts/rotate_window.py
-    "sparql_agg_roundtrip": q_sparql_agg_roundtrip,  # never driver-checked
-    "decontaminate": q_decontaminate,  # last green r09
-    "corpus_report": q_corpus_report,  # last green r09
-    "embedding_near_pairs_probe2": q_embedding_near_pairs_probe2,  # last green r09
-    "cms_counts": q_cms_counts,  # last green r09
-    "bloom_decontaminate": q_bloom_decontaminate,  # last green r09
-    "kmv_distinct": q_kmv_distinct,  # last green r09
-    "kmv_grouped": q_kmv_grouped,  # last green r09
-    "hll_distinct": q_hll_distinct,  # last green r09
-    "pack_chunks": q_pack_chunks,  # last green r09
-    "chunk_spans": q_chunk_spans,  # last green r09
-    "sliding_windows": q_sliding_windows,  # last green r09
-    "hash_split_counts": q_hash_split_counts,  # last green r09
-    "extractor_suite": q_extractor_suite,  # last green r09
-    "filter_suite": q_filter_suite,  # last green r09
-    "semi_join_enrich": q_semi_join_enrich,  # last green r09
-    "value_quantiles": q_value_quantiles,  # last green r09
-    "stratified_sample": q_stratified_sample,  # last green r09
-    "weighted_mixture": q_weighted_mixture,  # last green r09
-    "dict_lookup": q_dict_lookup,  # last green r09
-    "grounding_retry": q_grounding_retry,  # last green r09
-    "point_lookup": q_point_lookup,  # last green r09
-    "kg_degree_distribution": q_kg_degree_distribution,  # last green r09
-    "shipping_priority": q_shipping_priority,  # last green r09
-    "quality_topk": q_quality_topk,  # last green r09
-    "sparql_negated_path": q_sparql_negated_path,  # last green r10
-    "sparql_construct_graph": q_sparql_construct_graph,  # last green r10
-    "sparql_modifiers": q_sparql_modifiers,  # last green r10
-    "sparql_ask_probe": q_sparql_ask_probe,  # last green r10
-    "sparql_bind": q_sparql_bind,  # last green r10
-    "sparql_group_concat": q_sparql_group_concat,  # last green r10
-    "sparql_path_star": q_sparql_path_star,  # last green r10
-    "sparql_group_count": q_sparql_group_count,  # last green r10
-    "sparql_group_having": q_sparql_group_having,  # last green r10
-    "selection_pipeline_tokens": q_selection_pipeline_tokens,  # last green r10
-    "png_features": q_png_features,  # last green r10
-    "png_phash_pairs": q_png_phash_pairs,  # last green r10
-    "sparql_not_exists": q_sparql_not_exists,  # last green r10
-    "ivf_topk": q_ivf_topk,  # last green r10
-    "embedding_near_pairs_ivf": q_embedding_near_pairs_ivf,  # last green r10
-    "media_frame_sample": q_media_frame_sample,  # last green r10
-    "media_resize_plan": q_media_resize_plan,  # last green r10
-    "rdf_reactions": q_rdf_reactions,  # last green r10
-    "kg_components": q_kg_components,  # last green r10
-    "dedup_fuzzy_clusters": q_dedup_fuzzy_clusters,  # last green r10
-    "dedup_lsh_verified": q_dedup_lsh_verified,  # last green r10
-    "dedup_exact": q_dedup_exact,  # last green r10
-    "minhash_signatures": q_minhash_signatures,  # last green r10
-    "relation_dispatch": q_relation_dispatch,  # last green r10
-    "kg_edge_list": q_kg_edge_list,  # last green r10
-    # ---- end of the driver's 50-query correctness window ----
     "kg_triples": q_kg_triples,  # last green r10
     "kg_descendants": q_kg_descendants,  # last green r10
     "events_hourly": q_events_hourly,  # last green r10
@@ -5312,6 +5261,7 @@ QUERIES: dict[str, Callable] = {
     "token_stats": q_token_stats,  # last green r11
     "doc_fingerprints": q_doc_fingerprints,  # last green r11
     "asof_join": q_asof_join,  # last green r11
+    # ---- end of the driver's 50-query correctness window ----
     "asof_join_forward": q_asof_join_forward,  # last green r11
     "interval_join": q_interval_join,  # last green r11
     "funnel_counts": q_funnel_counts,  # last green r11
@@ -5437,6 +5387,56 @@ QUERIES: dict[str, Callable] = {
     "lm_perplexity": q_lm_perplexity,  # last green r13
     "tfidf_top_terms": q_tfidf_top_terms,  # last green r13
     "dedup_quality_survivor": q_dedup_quality_survivor,  # last green r13
+    "sparql_agg_roundtrip": q_sparql_agg_roundtrip,  # last green r15
+    "decontaminate": q_decontaminate,  # last green r15
+    "corpus_report": q_corpus_report,  # last green r15
+    "embedding_near_pairs_probe2": q_embedding_near_pairs_probe2,  # last green r15
+    "cms_counts": q_cms_counts,  # last green r15
+    "bloom_decontaminate": q_bloom_decontaminate,  # last green r15
+    "kmv_distinct": q_kmv_distinct,  # last green r15
+    "kmv_grouped": q_kmv_grouped,  # last green r15
+    "hll_distinct": q_hll_distinct,  # last green r15
+    "pack_chunks": q_pack_chunks,  # last green r15
+    "chunk_spans": q_chunk_spans,  # last green r15
+    "sliding_windows": q_sliding_windows,  # last green r15
+    "hash_split_counts": q_hash_split_counts,  # last green r15
+    "extractor_suite": q_extractor_suite,  # last green r15
+    "filter_suite": q_filter_suite,  # last green r15
+    "semi_join_enrich": q_semi_join_enrich,  # last green r15
+    "value_quantiles": q_value_quantiles,  # last green r15
+    "stratified_sample": q_stratified_sample,  # last green r15
+    "weighted_mixture": q_weighted_mixture,  # last green r15
+    "dict_lookup": q_dict_lookup,  # last green r15
+    "grounding_retry": q_grounding_retry,  # last green r15
+    "point_lookup": q_point_lookup,  # last green r15
+    "kg_degree_distribution": q_kg_degree_distribution,  # last green r15
+    "shipping_priority": q_shipping_priority,  # last green r15
+    "quality_topk": q_quality_topk,  # last green r15
+    "sparql_negated_path": q_sparql_negated_path,  # last green r15
+    "sparql_construct_graph": q_sparql_construct_graph,  # last green r15
+    "sparql_modifiers": q_sparql_modifiers,  # last green r15
+    "sparql_ask_probe": q_sparql_ask_probe,  # last green r15
+    "sparql_bind": q_sparql_bind,  # last green r15
+    "sparql_group_concat": q_sparql_group_concat,  # last green r15
+    "sparql_path_star": q_sparql_path_star,  # last green r15
+    "sparql_group_count": q_sparql_group_count,  # last green r15
+    "sparql_group_having": q_sparql_group_having,  # last green r15
+    "selection_pipeline_tokens": q_selection_pipeline_tokens,  # last green r15
+    "png_features": q_png_features,  # last green r15
+    "png_phash_pairs": q_png_phash_pairs,  # last green r15
+    "sparql_not_exists": q_sparql_not_exists,  # last green r15
+    "ivf_topk": q_ivf_topk,  # last green r15
+    "embedding_near_pairs_ivf": q_embedding_near_pairs_ivf,  # last green r15
+    "media_frame_sample": q_media_frame_sample,  # last green r15
+    "media_resize_plan": q_media_resize_plan,  # last green r15
+    "rdf_reactions": q_rdf_reactions,  # last green r15
+    "kg_components": q_kg_components,  # last green r15
+    "dedup_fuzzy_clusters": q_dedup_fuzzy_clusters,  # last green r15
+    "dedup_lsh_verified": q_dedup_lsh_verified,  # last green r15
+    "dedup_exact": q_dedup_exact,  # last green r15
+    "minhash_signatures": q_minhash_signatures,  # last green r15
+    "relation_dispatch": q_relation_dispatch,  # last green r15
+    "kg_edge_list": q_kg_edge_list,  # last green r15
 }
 
 
@@ -5913,7 +5913,7 @@ def oracle_sql() -> dict[str, str]:
     synonym_cases = "\n".join(
         f"WHEN {_q(raw)} THEN {_q(canon)}" for raw, canon in PREFIX_SYNONYMS.items()
     )
-    from bio2bel_spark.operators.similarity import srp_planes
+    from dataops.similarity import srp_planes
 
     # the identical seeded hyperplanes the Spark srp_signature inlines
     _srp_terms = " + ".join(

@@ -16,10 +16,9 @@ Layout (see SURVEY.md §7.1):
 - :mod:`bio2bel_spark.functions` — column-level transforms (CURIE parsing, HOF
   extractors, hashing, formatting)
 - :mod:`bio2bel_spark.operators` — query surface: pathways (ComPath), graph
-  (BEL nodes/edges), namespace, dedup, similarity, text analysis, multimodal
+  (BEL nodes/edges), namespace
 - :mod:`bio2bel_spark.sources` — per-source DataFrame pipelines (intact,
   biogrid, tfregulons, hmdd, go, rhea, pid)
-- :mod:`bio2bel_spark.streaming` — Structured Streaming ingest path
 - :mod:`bio2bel_spark.io` — sinks (triples TSV, edge lists, namespace files)
 """
 

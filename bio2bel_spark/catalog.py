@@ -234,49 +234,6 @@ class Catalog:
         ``read.parquet`` of the same path loses it)."""
         return self.spark.table(name)
 
-    def export_shards(
-        self,
-        df: DataFrame,
-        name: str,
-        key: str,
-        n_shards: int = 32,
-        seed: int = 0,
-    ) -> DataFrame:
-        """Deterministic sharded training export: every row lands in shard
-        ``pmod(portable_hash(seed || key), n_shards)`` and the table is
-        written hive-partitioned by ``shard`` so a trainer (or a re-run)
-        reads any shard with partition pruning.
-
-        The assignment depends only on (seed, key) — never on row order,
-        partitioning, or engine — it routes through the repo's engine-
-        portable md5 :func:`~bio2bel_spark.operators.dedup.portable_hash`
-        (the same convention every determinism-critical/replayable operator
-        uses), so appending data later keeps old rows' shards and ANY
-        engine that can md5 reproduces byte-identical shard membership.
-        Returns the per-shard row counts (n_shards rows) for the export
-        manifest; records a provenance action.
-        """
-        from pyspark.sql import functions as F
-
-        from bio2bel_spark.operators.dedup import portable_hash
-
-        sharded = df.withColumn(
-            "shard",
-            F.pmod(
-                portable_hash(
-                    F.concat_ws("\x1f", F.lit(str(seed)), F.col(key))
-                ),
-                F.lit(n_shards),
-            ).cast("int"),
-        )
-        self.write_table(sharded, name, partition_by=["shard"])
-        self.store_action(name, "export_shards")
-        return (
-            self.read_table(name)
-            .groupBy("shard")
-            .agg(F.count(F.lit(1)).alias("n_rows"))
-        )
-
     def table_stats(self, name: str) -> DataFrame:
         """One-scan table profile: ``(metric, value)`` rows with row count,
         file count/bytes (listing metadata, no data read), and a

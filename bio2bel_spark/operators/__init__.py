@@ -1,2 +1,1 @@
-"""Query-surface operators: pathways (ComPath), graph (BEL), namespace,
-dedup, similarity search, text analysis, multimodal plumbing."""
+"""Query-surface operators: pathways (ComPath), graph (BEL), namespace."""

@@ -45,7 +45,7 @@ def word_frequencies(
 ) -> DataFrame:
     """``(sym, n)``: corpus word-frequency table with each word in round-0
     symbol form. One explode + one combinable count."""
-    from bio2bel_spark.operators.dedup import normalize_text
+    from dataops.dedup import normalize_text
 
     return (
         docs.select(

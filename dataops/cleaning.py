@@ -337,7 +337,7 @@ def quality_gate(
     map-side-combinable aggregation; the gate is then one equi-join on the
     doc id. Linear, no Python, no windows.
     """
-    from bio2bel_spark.operators.textquality import quality_features
+    from dataops.textquality import quality_features
 
     rep = repetition_features(docs, text_col, id_col, keep=(text_col,))
     qf = quality_features(

@@ -137,7 +137,7 @@ def session_paths(
     """
     from pyspark.sql import Window
 
-    from bio2bel_spark.operators.temporal import epoch_us
+    from dataops.temporal import epoch_us
 
     w = Window.partitionBy(user_col).orderBy(ts_col, id_col)
     new_flag = (

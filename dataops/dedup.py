@@ -1231,7 +1231,7 @@ def split_leakage_report(
 ) -> DataFrame:
     """Train/test contamination audit: near-duplicate pairs (MinHash-LSH
     candidates verified by true Jaccard ≥ ``threshold``) crossed with the
-    deterministic :func:`~bio2bel_spark.operators.sketch.hash_split`
+    deterministic :func:`~dataops.sketch.hash_split`
     assignment — ``(split_a, split_b, n_pairs)`` with splits
     order-normalized. Off-diagonal rows ARE the leakage: an eval split
     that shares near-duplicates with train overstates model quality, the
@@ -1253,7 +1253,7 @@ def split_leakage_report(
     docs the guard excluded (``n_dropped_buckets > 0`` means this report
     UNDERSTATES contamination).
     """
-    from bio2bel_spark.operators.sketch import split_column
+    from dataops.sketch import split_column
 
     pairs = fuzzy_pairs(
         docs, text_col=text_col, id_col=id_col, n_hashes=n_hashes,
@@ -1302,12 +1302,12 @@ def cluster_split(
     (:func:`dedup_fuzzy` — LSH candidates, exact-Jaccard verify,
     min-label components; forward its parameters via ``fuzzy_kwargs``);
     the split is the deterministic
-    :func:`~bio2bel_spark.operators.sketch.split_column` hash of the
+    :func:`~dataops.sketch.split_column` hash of the
     cluster id, so assignment is engine-portable, append-stable for
     singletons, and reproducible. Returns every input doc with
     ``(cluster, split)`` attached.
     """
-    from bio2bel_spark.operators.sketch import split_column
+    from dataops.sketch import split_column
 
     clusters = dedup_fuzzy(docs, text_col, id_col, **fuzzy_kwargs)
     return docs.join(clusters.select(id_col, "cluster"), id_col).withColumn(

@@ -91,7 +91,7 @@ def refresh_distinct_aggregate(
 ) -> DataFrame:
     """Maintain per-group APPROXIMATE DISTINCT counts incrementally: the
     state is a grouped HyperLogLog register table
-    (:func:`bio2bel_spark.operators.sketch.hll_state_grouped`), merged with
+    (:func:`dataops.sketch.hll_state_grouped`), merged with
     each batch by group-wise register max.
 
     Unlike :func:`refresh_sum_aggregate` this needs NO batch ledger —
@@ -99,7 +99,7 @@ def refresh_distinct_aggregate(
     State is O(groups × 2^b) forever. Read estimates with
     ``sketch.hll_estimate_grouped(state, by, b)``.
     """
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_merge_grouped,
         hll_state_grouped,
     )

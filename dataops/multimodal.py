@@ -713,7 +713,7 @@ def image_ahash(media: DataFrame, hash_side: int = 8) -> DataFrame:
     Perceptually-similar images (resizes, small crops, brightness shifts)
     differ in a handful of bits, so near-duplicate detection is a hamming
     problem — feed the output to
-    :func:`bio2bel_spark.operators.dedup.hamming_near_pairs`.
+    :func:`dataops.dedup.hamming_near_pairs`.
     """
     if hash_side * hash_side != 64:
         raise ValueError("image_ahash packs exactly 64 bits: hash_side must be 8")
@@ -753,7 +753,7 @@ def image_near_pairs(
     hamming join (``dedup.hamming_near_pairs``, 64 bits ÷ 8 bands). The
     decode cost is paid once per image; the pair search never touches
     pixels again."""
-    from bio2bel_spark.operators.dedup import hamming_near_pairs
+    from dataops.dedup import hamming_near_pairs
 
     return hamming_near_pairs(
         image_ahash(media, hash_side),

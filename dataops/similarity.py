@@ -713,7 +713,7 @@ def srp_signature(
     expression (the :func:`_centroid_sims` lesson — Column-by-Column
     construction costs seconds of driver time), and each row folds its
     vector once per plane inside whole-stage codegen. Pairs come from
-    :func:`bio2bel_spark.operators.dedup.hamming_near_pairs` over the
+    :func:`dataops.dedup.hamming_near_pairs` over the
     fingerprint — banded, never all-pairs.
     """
     if bits > 63:
@@ -745,7 +745,7 @@ def srp_near_pairs(
     ``(id_a, id_b, hamming)`` — the embedding analog of SimHash text dedup,
     sharing the banded hamming core (equi-join on max_hamming+1 band keys,
     popcount verify, never all-pairs; exact recall by pigeonhole)."""
-    from bio2bel_spark.operators.dedup import hamming_near_pairs
+    from dataops.dedup import hamming_near_pairs
 
     fps = srp_signature(
         embeddings, bits, dim, seed, vec_col, id_col

@@ -29,7 +29,7 @@ from typing import Mapping, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators.dedup import portable_hash
+from dataops.dedup import portable_hash
 
 __all__ = [
     "kmv_state",

@@ -188,7 +188,7 @@ def decayed_sum(
     subquery-free two-phase max: pass an explicit datetime at production
     scale to keep the plan single-pass).
     """
-    from bio2bel_spark.operators.temporal import epoch_us
+    from dataops.temporal import epoch_us
 
     if as_of is None:
         as_of = df.agg(F.max(ts_col)).collect()[0][0]
@@ -437,7 +437,7 @@ def ab_test_report(
     Welch unequal-variance t statistic with Welch–Satterthwaite degrees of
     freedom, the standard guardrail-metric sheet an experimentation
     pipeline prints per assignment (pair with
-    :func:`bio2bel_spark.operators.sketch.hash_split` for deterministic
+    :func:`dataops.sketch.hash_split` for deterministic
     assignment).
 
     Everything reduces to conditional count/avg/var_samp sums, so the plan

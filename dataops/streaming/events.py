@@ -328,7 +328,7 @@ def run_sketch_maintenance(
     :func:`run_state_maintenance` tier applies. Read the estimate at any
     time with ``sketch.kmv_estimate`` over the state table.
     """
-    from bio2bel_spark.operators.sketch import kmv_merge, kmv_state
+    from dataops.sketch import kmv_merge, kmv_state
 
     def transition(prev, batch_df):
         batch_state = kmv_state(batch_df, col, k=k, backend=backend)
@@ -359,7 +359,7 @@ def run_cms_maintenance(
     this runs on the guarded :func:`run_state_maintenance` tier (batch-id
     marker committed in the same atomic overwrite).
     """
-    from bio2bel_spark.operators.sketch import cms_merge, cms_state
+    from dataops.sketch import cms_merge, cms_state
 
     def transition(prev, batch_df):
         batch_state = cms_state(
@@ -392,7 +392,7 @@ def run_bloom_maintenance(
     :func:`run_state_maintenance` tier applies. Probe the accumulated
     filter at any time with ``sketch.bloom_probe`` over the state table.
     """
-    from bio2bel_spark.operators.sketch import bloom_merge, bloom_state
+    from dataops.sketch import bloom_merge, bloom_state
 
     def transition(prev, batch_df):
         batch_state = bloom_state(batch_df, col, m=m, k=k, backend=backend)
@@ -462,7 +462,7 @@ def run_hll_maintenance(
     estimate at any time with ``sketch.hll_estimate`` over the state
     table.
     """
-    from bio2bel_spark.operators.sketch import hll_merge, hll_state
+    from dataops.sketch import hll_merge, hll_state
 
     def transition(prev, batch_df):
         batch_state = hll_state(batch_df, col, b=b)
@@ -494,7 +494,7 @@ def run_quantile_maintenance(
     applies. Read quantiles at any time with ``sketch.quantile_estimate``;
     state is ≤ k rows forever, independent of stream volume.
     """
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_sample_merge,
         quantile_sample_state,
     )
@@ -533,7 +533,7 @@ def run_dsir_maintenance(
     everything the state has seen — the selection model keeps up with a
     growing 100 TB corpus at O(buckets) state, never a history re-scan.
     """
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         dsir_bucket_state,
         dsir_merge,
     )
@@ -586,7 +586,7 @@ def run_perplexity_maintenance(
     pinned tables — per-batch cost is O(batch), not
     O(reference + batch).
     """
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         lm_model,
         perplexity_hist_merge,
         perplexity_histogram_state,
@@ -620,7 +620,7 @@ def run_cdc_apply(
     op_col: str = "op",
 ):
     """Maintain a snapshot table from a streaming CDC feed: each micro-batch
-    merges through :func:`bio2bel_spark.operators.scd.cdc_apply`
+    merges through :func:`dataops.scd.cdc_apply`
     (latest-wins by sequence, deletes remove, upserts overwrite).
 
     Replay-idempotent WITHOUT a batch-id guard: reapplying a change batch
@@ -629,7 +629,7 @@ def run_cdc_apply(
     — MERGE semantics instead of monotone state, same unguarded
     :func:`run_state_maintenance` tier.
     """
-    from bio2bel_spark.operators.scd import cdc_apply
+    from dataops.scd import cdc_apply
 
     def transition(prev, batch_df):
         base = prev if prev is not None else batch_df.sparkSession.createDataFrame(
@@ -663,7 +663,7 @@ def run_windowed_hll_maintenance(
     bucket (no watermark truncation is forced on the metric). Read with
     ``sketch.hll_estimate_grouped(state, "bucket", b)``.
     """
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_merge_grouped,
         hll_state_grouped,
     )

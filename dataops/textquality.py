@@ -363,9 +363,9 @@ def corpus_report(
     aggregates are map-side combinable except ``count_distinct``, which
     Spark plans as a two-stage partial distinct on the 32-bit text hash —
     the same hash the exact-dedup family uses, so the rate agrees with
-    :func:`bio2bel_spark.operators.dedup.exact_duplicates` by construction.
+    :func:`dataops.dedup.exact_duplicates` by construction.
     """
-    from bio2bel_spark.operators.dedup import normalize_text, portable_hash
+    from dataops.dedup import normalize_text, portable_hash
 
     toks = F.when(
         F.col(text_col).isNotNull(), F.size(tokens(text_col))
@@ -416,7 +416,7 @@ def cooccurrence_pmi(
     computed from three combinable counts; pairs below ``min_count`` are
     dropped before the (tiny) count joins.
     """
-    from bio2bel_spark.operators.dedup import normalize_text
+    from dataops.dedup import normalize_text
 
     toks = docs.select(
         F.col(id_col),
@@ -495,7 +495,7 @@ def bm25_scores(
     import math
 
     from bio2bel_spark.operators.caching import tracked_persist
-    from bio2bel_spark.operators.dedup import normalize_text
+    from dataops.dedup import normalize_text
 
     terms = sorted({t.lower() for t in query_terms})
     toks = docs.select(
@@ -565,7 +565,7 @@ def zipf_fit(
     """
     from pyspark.sql import Window
 
-    from bio2bel_spark.operators.dedup import normalize_text
+    from dataops.dedup import normalize_text
 
     wc = (
         docs.select(

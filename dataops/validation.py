@@ -9,7 +9,7 @@ measure violations, gate on the report. Constraints are data, not code:
 when one bound is omitted)
 ``{"type": "in_set", "col": c, "values": [...]}``
 ``{"type": "regex", "col": c, "pattern": r"..."}`` (Java∩RE2 subset, like
-:mod:`bio2bel_spark.operators.cleaning`'s PII patterns, so DuckDB replays)
+:mod:`dataops.cleaning`'s PII patterns, so DuckDB replays)
 ``{"type": "unique", "cols": [a, b]}``
 ``{"type": "ordered", "low": a, "high": b}`` (row-wise ``a <= b``)
 

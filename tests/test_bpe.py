@@ -36,7 +36,7 @@ def _python_bpe(word_counts, n_merges):
 
 
 def test_bpe_matches_python_reference(spark):
-    from bio2bel_spark.operators.bpe import bpe_learn_merges
+    from dataops.bpe import bpe_learn_merges
 
     texts = [
         "low lower lowest low low",
@@ -55,7 +55,7 @@ def test_bpe_matches_python_reference(spark):
 def test_bpe_apply_merges_runs(spark):
     from pyspark.sql import functions as F  # noqa: F401
 
-    from bio2bel_spark.operators.bpe import bpe_apply
+    from dataops.bpe import bpe_apply
 
     # merge (a, b) must collapse EVERY occurrence in a run: "ababab"
     df = spark.createDataFrame([("ababab",)], "w string")
@@ -74,7 +74,7 @@ def test_bpe_encode_roundtrip_and_compression(spark):
     (encoding with k merges is monotonically no longer than with 0)."""
     from pyspark.sql import functions as F
 
-    from bio2bel_spark.operators.bpe import bpe_apply, bpe_learn_merges
+    from dataops.bpe import bpe_apply, bpe_learn_merges
 
     texts = [
         "low lower lowest low low",

@@ -19,13 +19,26 @@ def test_release_cached_unpersists_only_tracked(spark):
     assert release_cached(spark) == 0
 
 
-def test_operator_persists_are_tracked(spark, tables):
-    from bio2bel_spark.operators.dedup import _banded_buckets
+def test_operator_persists_are_tracked(spark, monkeypatch):
+    from bio2bel_spark.operators import caching
+    from bio2bel_spark.operators.graph import pagerank
 
+    # pagerank's persisted intermediates are locals that go out of scope on
+    # return; the spy holds them so the weak registry entries stay live
+    pinned = []
+    real = caching.tracked_persist
+
+    def spy(df, *args, **kwargs):
+        pinned.append(real(df, *args, **kwargs))
+        return pinned[-1]
+
+    monkeypatch.setattr(caching, "tracked_persist", spy)
     release_cached(spark)
-    banded = _banded_buckets(
-        tables["documents"].limit(50), "text", "doc_id",
-        n_hashes=16, bands=4, backend="md5",
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
     )
-    banded.count()
-    assert release_cached(spark) >= 1
+    pagerank(edges, iterations=2).count()
+    # the node set and the degree-joined edge list are both pinned
+    assert len(pinned) == 2
+    assert release_cached(spark) == 2
+    assert not any(df.storageLevel.useMemory for df in pinned)

@@ -85,30 +85,9 @@ def test_compact_table_refuses_partitioned_layout(spark, tmp_path):
     assert catalog.read_table("parted").count() == 100
 
 
-def test_export_shards_deterministic_and_pruned(spark, tmp_path):
-    from bio2bel_spark.catalog import Catalog
-    from pyspark.sql import functions as F
-
-    cat = Catalog(spark, str(tmp_path / "wh"))
-    df = spark.range(500).select(F.col("id").alias("k"), (F.col("id") * 2).alias("v"))
-    counts = {r["shard"]: r["n_rows"] for r in cat.export_shards(df, "shards", "k", n_shards=8).collect()}
-    assert sum(counts.values()) == 500 and set(counts) <= set(range(8))
-    # shard membership is a pure function of (seed, key): re-export agrees
-    again = {r["shard"]: r["n_rows"] for r in cat.export_shards(df, "shards2", "k", n_shards=8).collect()}
-    assert counts == again
-    # partition pruning: reading one shard scans only its directory
-    one = cat.read_table("shards").where(F.col("shard") == 3)
-    plan = one._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters: [isnotnull(shard" in plan or "shard#" in plan
-    assert one.count() == counts.get(3, 0)
-    # provenance recorded
-    acts = {r["action"] for r in cat.actions().collect()}
-    assert "export_shards" in acts
-
-
 def test_refresh_sum_aggregate_incremental_and_replay_safe(spark, tmp_path):
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.incremental import refresh_sum_aggregate
+    from dataops.incremental import refresh_sum_aggregate
     from pyspark.sql import functions as F
 
     cat = Catalog(spark, str(tmp_path / "wh_ivm"))
@@ -138,8 +117,8 @@ def test_refresh_sum_aggregate_incremental_and_replay_safe(spark, tmp_path):
 
 def test_refresh_distinct_aggregate_matches_direct(spark, tmp_path):
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.incremental import refresh_distinct_aggregate
-    from bio2bel_spark.operators.sketch import (
+    from dataops.incremental import refresh_distinct_aggregate
+    from dataops.sketch import (
         hll_estimate_grouped,
         hll_state_grouped,
     )

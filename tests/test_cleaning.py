@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators import cleaning
+from dataops import cleaning
 
 
 @pytest.fixture(scope="module")
@@ -107,7 +107,7 @@ def test_redact_pii_and_counts(spark):
 def test_compression_ratio_matches_zlib(spark):
     import zlib
 
-    from bio2bel_spark.operators.cleaning import compression_ratio
+    from dataops.cleaning import compression_ratio
 
     rows = [
         (1, "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaaa"),   # repetitive
@@ -125,7 +125,7 @@ def test_compression_ratio_matches_zlib(spark):
 
 
 def test_quality_gate_reasons_and_keep(spark):
-    from bio2bel_spark.operators.cleaning import quality_gate
+    from dataops.cleaning import quality_gate
 
     good = " ".join(
         "the word%d and next%d of item%d" % (i, i, i) for i in range(10)

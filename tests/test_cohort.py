@@ -14,7 +14,7 @@ def _ev(spark, rows):
 
 
 def test_funnel_counts_respects_order(spark):
-    from bio2bel_spark.operators.cohort import funnel_counts
+    from dataops.cohort import funnel_counts
 
     b = dt.datetime(2024, 1, 1)
     h = dt.timedelta(hours=1)
@@ -38,7 +38,7 @@ def test_funnel_counts_respects_order(spark):
 
 
 def test_funnel_same_timestamp_counts(spark):
-    from bio2bel_spark.operators.cohort import funnel_counts
+    from dataops.cohort import funnel_counts
 
     b = dt.datetime(2024, 1, 1)
     rows = [(1, b, "view"), (1, b, "click")]  # simultaneous: >= is inclusive
@@ -50,7 +50,7 @@ def test_funnel_same_timestamp_counts(spark):
 
 
 def test_retention_matrix_offsets(spark):
-    from bio2bel_spark.operators.cohort import retention_matrix
+    from dataops.cohort import retention_matrix
 
     # week starts Monday; 2024-01-01 is a Monday
     w0 = dt.datetime(2024, 1, 2)
@@ -73,7 +73,7 @@ def test_retention_matrix_offsets(spark):
 
 
 def test_session_paths_gap_split(spark):
-    from bio2bel_spark.operators.cohort import session_paths
+    from dataops.cohort import session_paths
 
     b = dt.datetime(2024, 1, 1)
     m = dt.timedelta(minutes=1)

@@ -53,7 +53,7 @@ def _funnel_model(rows, steps):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(events=EVENTS)
 def test_funnel_matches_model(spark, events):
-    from bio2bel_spark.operators.cohort import funnel_counts
+    from dataops.cohort import funnel_counts
 
     rows, df = _mk(spark, events)
     steps = ("view", "click", "purchase")
@@ -86,7 +86,7 @@ def _paths_model(rows, gap_sec, max_steps, min_count):
 @settings(max_examples=8, deadline=None, suppress_health_check=list(HealthCheck))
 @given(events=EVENTS)
 def test_session_paths_match_model(spark, events):
-    from bio2bel_spark.operators.cohort import session_paths
+    from dataops.cohort import session_paths
 
     # unique (user, ts) so the model's sort and Spark's tie-break agree
     seen = set()

@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators import dedup
+from dataops import dedup
 
 
 @pytest.fixture(scope="module")
@@ -151,7 +151,7 @@ def test_max_bucket_guard(spark):
 
 
 def test_fuzzy_join_links_perturbed_copies(spark):
-    from bio2bel_spark.operators.dedup import fuzzy_join
+    from dataops.dedup import fuzzy_join
 
     left = spark.createDataFrame(
         [
@@ -173,7 +173,7 @@ def test_fuzzy_join_links_perturbed_copies(spark):
 
 
 def test_fuzzy_join_max_bucket_caps_pairs(spark):
-    from bio2bel_spark.operators.dedup import fuzzy_join
+    from dataops.dedup import fuzzy_join
 
     same = [(i, "identical boilerplate text repeated everywhere") for i in range(20)]
     left = spark.createDataFrame(same, "doc_id BIGINT, text STRING")
@@ -186,7 +186,7 @@ def test_fuzzy_join_max_bucket_caps_pairs(spark):
 
 
 def test_decontaminate_drops_benchmark_overlaps(spark):
-    from bio2bel_spark.operators.dedup import decontaminate
+    from dataops.dedup import decontaminate
 
     corpus = spark.createDataFrame(
         [
@@ -207,7 +207,7 @@ def test_decontaminate_drops_benchmark_overlaps(spark):
 
 def test_incremental_dedup_across_batches(spark, tmp_path):
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import incremental_dedup
+    from dataops.dedup import incremental_dedup
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     b1 = spark.createDataFrame(
@@ -508,7 +508,7 @@ def test_incremental_fuzzy_dedup_rejects_cross_batch_neardups(spark, tmp_path):
     the persisted band index + signature estimate — without batch 1's text
     ever being re-read."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import incremental_fuzzy_dedup
+    from dataops.dedup import incremental_fuzzy_dedup
 
     cat = Catalog(spark, str(tmp_path / "wh"))
     base = "the quick brown fox jumps over the lazy dog near the river bank"
@@ -540,7 +540,7 @@ def test_incremental_fuzzy_dedup_within_batch_and_identity(spark, tmp_path):
     """Within-batch near-dups collapse to one survivor; re-presenting an
     already-admitted document is rejected by its own signature."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import incremental_fuzzy_dedup
+    from dataops.dedup import incremental_fuzzy_dedup
 
     cat = Catalog(spark, str(tmp_path / "wh2"))
     t = "some reasonably long document text that minhash can fingerprint well"
@@ -560,7 +560,7 @@ def test_incremental_fuzzy_dedup_bands_override(spark, tmp_path):
     reach the within-batch banding, while index rows stay on the OUTER
     bands so the historical collision join keys stay compatible."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import incremental_fuzzy_dedup
+    from dataops.dedup import incremental_fuzzy_dedup
 
     cat = Catalog(spark, str(tmp_path / "wh3"))
     t = "some reasonably long document text that minhash can fingerprint well"
@@ -587,7 +587,7 @@ def test_cluster_split_is_leakage_free(spark):
     """Splitting on the near-dup cluster key puts every near-duplicate
     pair on ONE side by construction — zero cross-split verified pairs,
     while a doc-id hash split on the same corpus does leak."""
-    from bio2bel_spark.operators.dedup import (
+    from dataops.dedup import (
         cluster_split,
         jaccard_verify,
         lsh_candidate_pairs,

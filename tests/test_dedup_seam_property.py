@@ -56,7 +56,7 @@ def _shingles(text: str, n: int) -> set:
 def _python_verified_pairs(rows, n_hashes, bands, shingle_n, threshold):
     """Independent replay of the LSH pipeline: md5 shingle hashes → minhash
     via the same per-slot arithmetic the Spark fold uses → banded buckets →
-    true-Jaccard verify. Must track bio2bel_spark.operators.dedup exactly."""
+    true-Jaccard verify. Must track dataops.dedup exactly."""
     P = (1 << 31) - 1  # MINHASH_PRIME
 
     def h64(s):
@@ -96,7 +96,7 @@ def _python_verified_pairs(rows, n_hashes, bands, shingle_n, threshold):
 @pytest.mark.parametrize("seed", range(3))
 def test_fuzzy_family_shares_one_pair_universe(spark, tmp_path, seed):
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import (
+    from dataops.dedup import (
         dedup_fuzzy,
         fuzzy_join,
         fuzzy_pairs,

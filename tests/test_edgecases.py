@@ -13,7 +13,7 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators import dedup, textquality
+from dataops import dedup, textquality
 
 EDGE_ROWS = [
     (0, None),

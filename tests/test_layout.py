@@ -15,7 +15,7 @@ def _morton(vals: list[int], bits: int) -> int:
 
 
 def test_zorder_value_matches_model(spark):
-    from bio2bel_spark.operators.layout import zorder_value
+    from dataops.layout import zorder_value
 
     rows = [(x, y) for x in (0, 1, 5, 127, 255) for y in (0, 3, 200, 255)]
     df = spark.createDataFrame(rows, "x long, y long")
@@ -27,7 +27,7 @@ def test_zorder_value_matches_model(spark):
 
 
 def test_zorder_value_three_dims_and_budget(spark):
-    from bio2bel_spark.operators.layout import zorder_value
+    from dataops.layout import zorder_value
 
     df = spark.createDataFrame([(3, 5, 6)], "a long, b long, c long")
     r = df.withColumn(
@@ -45,7 +45,7 @@ def test_zorder_layout_improves_both_dim_spans(spark):
     each partition's min/max span is narrow in BOTH dimensions — so
     min/max pruning works for either predicate. Compare against a layout
     ordered by x alone, where y spans stay full-width."""
-    from bio2bel_spark.operators.layout import zorder_layout
+    from dataops.layout import zorder_layout
 
     n = 64
     rows = [(x, y) for x in range(n) for y in range(n)]
@@ -77,7 +77,7 @@ def test_zorder_layout_improves_both_dim_spans(spark):
 
 
 def test_zorder_layout_degenerate_columns(spark):
-    from bio2bel_spark.operators.layout import zorder_layout
+    from dataops.layout import zorder_layout
 
     df = spark.createDataFrame(
         [(1, 7, None), (2, 7, None), (3, 7, None)],
@@ -93,7 +93,7 @@ def test_zorder_write_prunes_both_dims(spark, tmp_path):
     """End-to-end: write a Z-ordered table, derive per-file zone maps, and
     show a narrow predicate on EITHER dimension skips most files — while
     an x-only range layout cannot prune on y at all."""
-    from bio2bel_spark.operators.layout import (
+    from dataops.layout import (
         file_stats,
         pruning_selectivity,
         zorder_layout,
@@ -145,7 +145,7 @@ def test_hilbert_value_matches_model_and_is_a_curve(spark):
     4-bit grid, plus the two curve properties that make Hilbert useful:
     bijection and unit-step adjacency (consecutive indices are adjacent
     cells — the locality guarantee Z-order lacks)."""
-    from bio2bel_spark.operators.layout import hilbert_value
+    from dataops.layout import hilbert_value
 
     grid = spark.createDataFrame(
         [(x, y) for x in range(16) for y in range(16)], "x long, y long"
@@ -163,7 +163,7 @@ def test_hilbert_value_matches_model_and_is_a_curve(spark):
 
 
 def test_hilbert_layout_prunes_both_dims(spark):
-    from bio2bel_spark.operators.layout import hilbert_layout
+    from dataops.layout import hilbert_layout
     import pytest
 
     n = 64
@@ -190,7 +190,7 @@ def test_hilbert_value_nd_is_a_curve_3d(spark):
     """The d-dimensional Skilling transpose is a true Hilbert curve in
     3-D: bijective over the full 3-bit grid with unit-step adjacency
     between consecutive indices (Manhattan distance exactly 1)."""
-    from bio2bel_spark.operators.layout import hilbert_value_nd
+    from dataops.layout import hilbert_value_nd
 
     side = 8  # bits=3
     grid = spark.createDataFrame(
@@ -213,7 +213,7 @@ def test_hilbert_value_nd_2d_parity_and_budget(spark):
     the 62-bit budget guard trips."""
     import pytest
 
-    from bio2bel_spark.operators.layout import hilbert_value_nd
+    from dataops.layout import hilbert_value_nd
 
     grid = spark.createDataFrame(
         [(x, y) for x in range(16) for y in range(16)], "x long, y long"
@@ -236,7 +236,7 @@ def test_hilbert_layout_3d_prunes_all_dims(spark):
     """3-D hilbert_layout keeps per-partition spans narrow in EVERY
     dimension at once — the pruning_selectivity e2e gauge extended past
     2-D."""
-    from bio2bel_spark.operators.layout import hilbert_layout
+    from dataops.layout import hilbert_layout
 
     n = 16
     df = spark.createDataFrame(
@@ -266,7 +266,7 @@ def test_hilbert_layout_3d_prunes_all_dims(spark):
 def test_layout_partition_false_same_rows_no_range_exchange(spark):
     """partition=False must return the exact same rows (codes included) as
     the partitioned form, with no RangePartitioning exchange in the plan."""
-    from bio2bel_spark.operators.layout import hilbert_layout, zorder_layout
+    from dataops.layout import hilbert_layout, zorder_layout
 
     rows = [(x, y) for x in range(0, 40, 3) for y in range(0, 40, 7)]
     df = spark.createDataFrame(rows, "a long, b long")

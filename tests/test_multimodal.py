@@ -6,7 +6,7 @@ import math
 
 import pytest
 
-from bio2bel_spark.operators.multimodal import (
+from dataops.multimodal import (
     FEATURE_DIM,
     _wav_bytes,
     _wav_features,
@@ -56,7 +56,7 @@ def test_decode_features_stub_and_unknown_backend(spark, tables):
 def test_ppm_roundtrip_decode():
     import numpy as np
 
-    from bio2bel_spark.operators.multimodal import _ppm_bytes, _ppm_decode
+    from dataops.multimodal import _ppm_bytes, _ppm_decode
 
     img = _ppm_decode(_ppm_bytes(3, 40, 20))
     assert img.shape == (20, 40, 3)
@@ -72,7 +72,7 @@ def test_ppm_roundtrip_decode():
 def test_nn_resize_shapes_and_values():
     import numpy as np
 
-    from bio2bel_spark.operators.multimodal import _nn_resize
+    from dataops.multimodal import _nn_resize
 
     img = np.arange(4 * 6 * 3, dtype=np.uint8).reshape(4, 6, 3)
     small = _nn_resize(img, 3, 2)
@@ -82,7 +82,7 @@ def test_nn_resize_shapes_and_values():
 
 
 def test_decode_resize_features_end_to_end(spark):
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         decode_resize_features,
         image_from_documents,
     )
@@ -112,7 +112,7 @@ def test_decode_resize_features_end_to_end(spark):
 def test_ppm_decode_payload_starting_with_whitespace_byte():
     import numpy as np
 
-    from bio2bel_spark.operators.multimodal import _ppm_decode
+    from dataops.multimodal import _ppm_decode
 
     # spec-valid P6 whose first pixel byte is 0x20 (space) — a whitespace
     # split would swallow it and mis-report truncation
@@ -123,7 +123,7 @@ def test_ppm_decode_payload_starting_with_whitespace_byte():
 
 
 def test_resize_targets_match_resize_plan_exactly(spark):
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         decode_resize_features,
         image_from_documents,
         resize_plan,
@@ -152,7 +152,7 @@ def test_image_ahash_and_near_pairs(spark):
     Verified against brute-force hamming over all pairs."""
     from itertools import combinations
 
-    from bio2bel_spark.operators import multimodal as mm
+    from dataops import multimodal as mm
 
     rows = []
     for doc_id, seed, bright in [
@@ -190,7 +190,7 @@ def test_image_ahash_and_near_pairs(spark):
 def test_y4m_roundtrip_and_frame_features(spark):
     import numpy as np
 
-    from bio2bel_spark.operators import multimodal as mm
+    from dataops import multimodal as mm
 
     # roundtrip: generated planes decode back bit-for-bit
     raw = mm._y4m_bytes(7, 20, 12, 3)
@@ -223,7 +223,7 @@ def test_y4m_roundtrip_and_frame_features(spark):
 def test_y4m_decode_rejects_corrupt(spark):
     import pytest as _pytest
 
-    from bio2bel_spark.operators import multimodal as mm
+    from dataops import multimodal as mm
 
     with _pytest.raises(ValueError, match="not a YUV4MPEG2"):
         mm._y4m_decode(b"garbage")
@@ -243,7 +243,7 @@ def test_gated_backend_missing_lib_raises_clearly(spark):
     opaque executor task failure (mirrors the openpyxl xlsx gate)."""
     import pytest
 
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         decode_features,
         decode_resize_features,
         media_from_documents,
@@ -269,7 +269,7 @@ def test_gated_backend_missing_lib_raises_clearly(spark):
 def test_unknown_decode_backend_still_not_implemented(spark):
     import pytest
 
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         decode_features,
         media_from_documents,
     )
@@ -293,7 +293,7 @@ def test_pillow_backend_decodes_png(spark):
     import numpy as np
     from PIL import Image
 
-    from bio2bel_spark.operators.multimodal import decode_resize_features
+    from dataops.multimodal import decode_resize_features
 
     y, x = np.mgrid[0:40, 0:60]
     img = np.dstack([(x % 256), (y % 256), ((x + y) % 256)]).astype(np.uint8)
@@ -319,7 +319,7 @@ def test_soundfile_backend_decodes_flac(spark):
 
     import numpy as np
 
-    from bio2bel_spark.operators.multimodal import (
+    from dataops.multimodal import (
         _signal_features,
         decode_features,
     )

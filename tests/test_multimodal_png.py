@@ -14,7 +14,7 @@ import zlib
 import numpy as np
 import pytest
 
-from bio2bel_spark.operators.multimodal import (
+from dataops.multimodal import (
     _png_bytes,
     _png_decode,
     _ppm_bytes,

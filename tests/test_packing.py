@@ -10,7 +10,7 @@ def _docs(spark, rows):
 
 
 def test_pack_concat_chunks_boundaries(spark):
-    from bio2bel_spark.operators.packing import pack_concat_chunks
+    from dataops.packing import pack_concat_chunks
 
     docs = _docs(
         spark,
@@ -28,7 +28,7 @@ def test_pack_concat_chunks_boundaries(spark):
 
 
 def test_pack_concat_chunks_groups_independent(spark):
-    from bio2bel_spark.operators.packing import pack_concat_chunks
+    from dataops.packing import pack_concat_chunks
 
     docs = _docs(spark, [("a", 1, 900), ("b", 2, 900), ("a", 3, 900)])
     out = {(r.source, r.doc_id): r.pack_id for r in
@@ -38,7 +38,7 @@ def test_pack_concat_chunks_groups_independent(spark):
 
 
 def test_pack_first_fit_respects_budget(spark):
-    from bio2bel_spark.operators.packing import pack_first_fit
+    from dataops.packing import pack_first_fit
 
     docs = _docs(
         spark,
@@ -54,7 +54,7 @@ def test_pack_first_fit_respects_budget(spark):
 
 
 def test_pack_first_fit_oversized_singleton(spark):
-    from bio2bel_spark.operators.packing import pack_first_fit
+    from dataops.packing import pack_first_fit
 
     docs = _docs(spark, [("s", 1, 5000), ("s", 2, 100)])
     out = {r.doc_id: r.pack_id for r in
@@ -63,7 +63,7 @@ def test_pack_first_fit_oversized_singleton(spark):
 
 
 def test_pack_first_fit_deterministic(spark):
-    from bio2bel_spark.operators.packing import pack_first_fit
+    from dataops.packing import pack_first_fit
 
     docs = _docs(
         spark, [("s", i, (i * 37) % 500 + 50) for i in range(40)]
@@ -80,7 +80,7 @@ def test_pack_first_fit_deterministic(spark):
 
 
 def test_first_fit_never_looser_than_chunks(spark):
-    from bio2bel_spark.operators.packing import (
+    from dataops.packing import (
         pack_concat_chunks,
         pack_first_fit,
     )
@@ -100,7 +100,7 @@ def test_first_fit_never_looser_than_chunks(spark):
 
 
 def test_chunk_spans_covers_exactly(spark):
-    from bio2bel_spark.operators.packing import chunk_spans
+    from dataops.packing import chunk_spans
 
     docs = spark.createDataFrame(
         [(1, 350), (2, 150), (3, 1), (4, 0)], "doc_id BIGINT, toks BIGINT"
@@ -129,7 +129,7 @@ def test_chunk_spans_covers_exactly(spark):
 
 
 def test_sliding_window_spans_coverage_and_overlap(spark):
-    from bio2bel_spark.operators.packing import sliding_window_spans
+    from dataops.packing import sliding_window_spans
 
     docs = spark.createDataFrame(
         [(1, 10), (2, 4), (3, 0), (4, 11)], "doc_id long, n long"
@@ -156,7 +156,7 @@ def test_sliding_window_spans_coverage_and_overlap(spark):
 
 
 def test_sliding_window_spans_rejects_bad_params(spark):
-    from bio2bel_spark.operators.packing import sliding_window_spans
+    from dataops.packing import sliding_window_spans
 
     docs = spark.createDataFrame([(1, 5)], "doc_id long, n long")
     import pytest as _pytest
@@ -173,7 +173,7 @@ def test_select_token_budget_exact_cut(spark):
     cum_tokens globally correct, nulls dropped."""
     import pytest
 
-    from bio2bel_spark.operators.packing import select_token_budget
+    from dataops.packing import select_token_budget
 
     rows = [(i, float(100 - i), 10 + i % 3) for i in range(40)]
     rows += [(100, None, 5), (101, 50.0, None)]  # un-orderable: excluded
@@ -201,7 +201,7 @@ def test_select_token_budget_exact_cut(spark):
 def test_select_token_budget_matches_partition_counts(spark):
     """Partition count must not change the selection (the offsets stitch
     partitions into one global order)."""
-    from bio2bel_spark.operators.packing import select_token_budget
+    from dataops.packing import select_token_budget
 
     rows = [(i, float(i % 7), 3 + i % 5) for i in range(200)]
     df = spark.createDataFrame(rows, "doc_id long, q double, toks long")

@@ -12,7 +12,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from bio2bel_spark.catalog import Catalog
-from bio2bel_spark.operators.similarity import ivf_assign
+from dataops.similarity import ivf_assign
 
 
 def test_ivf_partitioned_probe_prunes(spark, tmp_path, sf_dir):
@@ -36,7 +36,7 @@ def test_ivf_partitioned_probe_prunes(spark, tmp_path, sf_dir):
 def test_time_partitioned_events_rollup_prunes(spark, tmp_path, sf_dir):
     """Hypertable layout: events partitioned by day; a one-day rollup must
     read only that day's partition (the TimescaleDB chunk-exclusion shape)."""
-    from bio2bel_spark.operators.temporal import hypertable_rollup
+    from dataops.temporal import hypertable_rollup
     from bio2bel_spark.tables import load_table
 
     cat = Catalog(spark, str(tmp_path / "wh"))

@@ -62,7 +62,7 @@ def test_ngram_contamination_hashes_grams_once_per_side(spark, sf_dir):
     re-inlining the ENTIRE md5 gram pipeline into a Filter — the corpus
     pays the gram hash twice, part of it on the pre-repartition partition
     layout (measured 4.9s → 1.4s at sf0.1 when removed)."""
-    from bio2bel_spark.operators.dedup import ngram_contamination
+    from dataops.dedup import ngram_contamination
     from bio2bel_spark.tables import load_table
 
     from pyspark.sql import functions as F
@@ -85,7 +85,7 @@ def test_asof_join_is_single_shuffle(spark, sf_dir):
     viable at 100 TB."""
     from pyspark.sql import functions as F
 
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
     from bio2bel_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")
@@ -104,7 +104,7 @@ def test_timeline_features_is_single_exchange(spark, sf_dir):
     """All seven timeline features must share ONE hash exchange on the
     entity key — lag/lead/rolling/range frames are windows over the same
     sort, never joins."""
-    from bio2bel_spark.operators.temporal import timeline_features
+    from dataops.temporal import timeline_features
     from bio2bel_spark.tables import load_table
 
     plan = (
@@ -118,7 +118,7 @@ def test_timeline_features_is_single_exchange(spark, sf_dir):
 def test_quantile_sketch_is_take_ordered(spark, sf_dir):
     """The bottom-k quantile synopsis must be TakeOrdered over a map-side
     projection — no full-table sort exchange."""
-    from bio2bel_spark.operators.sketch import quantile_sample_state
+    from dataops.sketch import quantile_sample_state
     from bio2bel_spark.tables import load_table
 
     from pyspark.sql import functions as F
@@ -143,7 +143,7 @@ def test_bloom_probe_stage_is_exchange_free(spark, sf_dir):
     only."""
     from pyspark.sql import functions as F
 
-    from bio2bel_spark.operators.sketch import bloom_probe, bloom_state
+    from dataops.sketch import bloom_probe, bloom_state
     from bio2bel_spark.tables import load_table
 
     li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_quantity")
@@ -165,7 +165,7 @@ def test_nearest_asof_is_single_shuffle(spark, sf_dir):
     single exchange, no join."""
     from pyspark.sql import functions as F
 
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
     from bio2bel_spark.tables import load_table
 
     ev = load_table(spark, sf_dir, "events")

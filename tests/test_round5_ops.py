@@ -20,7 +20,7 @@ def _h(s: str) -> int:
 
 def test_winnowing_matches_reference_model(spark):
     """Direct re-implementation of Schleimer et al. window-min selection."""
-    from bio2bel_spark.operators.dedup import winnowing_fingerprints
+    from dataops.dedup import winnowing_fingerprints
 
     text = "a b c d e f g h i j a b c d"
     docs = spark.createDataFrame([(1, text)], "doc_id long, text string")
@@ -41,7 +41,7 @@ def test_winnowing_matches_reference_model(spark):
 def test_winnowing_shared_substring_guarantee(spark):
     """Any shared run of >= k + window - 1 tokens must yield a shared
     fingerprint (the winnowing correctness theorem)."""
-    from bio2bel_spark.operators.dedup import winnowing_fingerprints
+    from dataops.dedup import winnowing_fingerprints
 
     shared = "lorem ipsum dolor sit amet consectetur adipiscing"  # 7 tokens
     docs = spark.createDataFrame(
@@ -63,7 +63,7 @@ def test_winnowing_shared_substring_guarantee(spark):
 
 
 def test_winnowing_short_docs(spark):
-    from bio2bel_spark.operators.dedup import winnowing_fingerprints
+    from dataops.dedup import winnowing_fingerprints
 
     docs = spark.createDataFrame(
         [(1, "a b"), (2, "a b c d e")], "doc_id long, text string"
@@ -85,7 +85,7 @@ def test_winnowing_short_docs(spark):
 
 
 def test_weighted_sample_is_deterministic_and_bounded(spark):
-    from bio2bel_spark.operators.sketch import weighted_sample_per_group
+    from dataops.sketch import weighted_sample_per_group
 
     rows = [(f"g{i % 2}", i, float(1 + i % 5)) for i in range(100)]
     df = spark.createDataFrame(rows, "g string, k long, w double")
@@ -104,7 +104,7 @@ def test_weighted_sample_is_deterministic_and_bounded(spark):
 
 def test_weighted_sample_matches_aes_model(spark):
     """Exact A-ES model twin: score = ln((h+1)/2^32)/w, top-n per group."""
-    from bio2bel_spark.operators.sketch import weighted_sample_per_group
+    from dataops.sketch import weighted_sample_per_group
 
     rows = [("g", i, float(1 + (i * 7) % 13)) for i in range(50)]
     df = spark.createDataFrame(rows, "g string, k long, w double")
@@ -119,7 +119,7 @@ def test_weighted_sample_matches_aes_model(spark):
 
 
 def test_weighted_sample_excludes_nonpositive_weights(spark):
-    from bio2bel_spark.operators.sketch import weighted_sample_per_group
+    from dataops.sketch import weighted_sample_per_group
 
     df = spark.createDataFrame(
         [("g", 1, 0.0), ("g", 2, -1.0), ("g", 3, 2.0)],
@@ -133,7 +133,7 @@ def test_weighted_sample_excludes_nonpositive_weights(spark):
 def test_weighted_sample_respects_weights_statistically(spark):
     """A key with 50x the weight must be sampled far more often across
     many disjoint groups (inclusion frequency tracks weight)."""
-    from bio2bel_spark.operators.sketch import weighted_sample_per_group
+    from dataops.sketch import weighted_sample_per_group
 
     rows = []
     for g in range(200):
@@ -152,7 +152,7 @@ def test_weighted_sample_respects_weights_statistically(spark):
 
 
 def test_lexical_diversity_model(spark):
-    from bio2bel_spark.operators.textquality import lexical_diversity
+    from dataops.textquality import lexical_diversity
 
     docs = spark.createDataFrame(
         [(1, "a a b c"), (2, "x x x x")], "doc_id long, text string"
@@ -168,7 +168,7 @@ def test_lexical_diversity_model(spark):
 
 
 def test_oov_rate_model(spark):
-    from bio2bel_spark.operators.textquality import oov_rate
+    from dataops.textquality import oov_rate
 
     docs = spark.createDataFrame(
         [(1, "a a a b"), (2, "a b zz qq")], "doc_id long, text string"
@@ -180,7 +180,7 @@ def test_oov_rate_model(spark):
 
 
 def test_vocab_divergence_identical_slices_are_zero(spark):
-    from bio2bel_spark.operators.textquality import vocab_divergence
+    from dataops.textquality import vocab_divergence
 
     docs = spark.createDataFrame(
         [(1, "s1", "a b c"), (2, "s2", "a b c")],
@@ -192,7 +192,7 @@ def test_vocab_divergence_identical_slices_are_zero(spark):
 
 def test_vocab_divergence_model(spark):
     """Hand-computed KL/JS for a two-slice corpus with disjoint tails."""
-    from bio2bel_spark.operators.textquality import vocab_divergence
+    from dataops.textquality import vocab_divergence
 
     docs = spark.createDataFrame(
         [(1, "s1", "a a b"), (2, "s2", "a c")],
@@ -221,7 +221,7 @@ def test_vocab_divergence_model(spark):
 
 
 def test_quantile_transform_model(spark):
-    from bio2bel_spark.operators.stats import quantile_transform
+    from dataops.stats import quantile_transform
 
     df = spark.createDataFrame(
         [("g", 10.0), ("g", 20.0), ("g", 20.0), ("g", 40.0), ("g", None)],
@@ -249,7 +249,7 @@ def test_quantile_transform_model(spark):
 
 
 def test_trailing_loop_detector(spark):
-    from bio2bel_spark.operators.textquality import trailing_loop_features
+    from dataops.textquality import trailing_loop_features
 
     docs = spark.createDataFrame(
         [
@@ -276,7 +276,7 @@ def test_trailing_loop_detector(spark):
 
 def test_trailing_loop_prefers_smallest_period(spark):
     """'a a a a a a' loops at EVERY period; the smallest (1) must win."""
-    from bio2bel_spark.operators.textquality import trailing_loop_features
+    from dataops.textquality import trailing_loop_features
 
     docs = spark.createDataFrame([(1, "a a a a a a")], "doc_id long, text string")
     r = trailing_loop_features(docs, max_period=4, min_repeats=3).collect()[0]
@@ -287,7 +287,7 @@ def test_trailing_loop_prefers_smallest_period(spark):
 
 
 def test_ngram_contamination_model(spark):
-    from bio2bel_spark.operators.dedup import ngram_contamination
+    from dataops.dedup import ngram_contamination
 
     train = spark.createDataFrame(
         [
@@ -313,7 +313,7 @@ def test_ngram_contamination_model(spark):
 
 
 def test_ngram_contamination_counts_distinct_grams_once(spark):
-    from bio2bel_spark.operators.dedup import ngram_contamination
+    from dataops.dedup import ngram_contamination
 
     # the same 3-gram repeats inside one doc: counted once (distinct)
     train = spark.createDataFrame(
@@ -327,7 +327,7 @@ def test_ngram_contamination_counts_distinct_grams_once(spark):
 
 def test_ab_test_report_matches_scipy_free_model(spark):
     """Welch t/dof vs hand-computed values on a tiny fixture."""
-    from bio2bel_spark.operators.stats import ab_test_report
+    from dataops.stats import ab_test_report
 
     a = [1.0, 2.0, 3.0, 4.0]
     b = [2.0, 4.0, 6.0]
@@ -347,7 +347,7 @@ def test_ab_test_report_matches_scipy_free_model(spark):
 
 
 def test_ab_test_report_degenerate_sides(spark):
-    from bio2bel_spark.operators.stats import ab_test_report
+    from dataops.stats import ab_test_report
 
     df = spark.createDataFrame(
         [("a", 1.0), ("b", 2.0), ("b", 3.0)], "arm string, v double"
@@ -361,7 +361,7 @@ def test_ab_test_report_degenerate_sides(spark):
 
 def test_bloom_filtered_join_is_exact(spark):
     """Result must equal the plain inner join (no false negatives)."""
-    from bio2bel_spark.operators.sketch import bloom_filtered_join
+    from dataops.sketch import bloom_filtered_join
 
     big = spark.createDataFrame(
         [(i, f"v{i}") for i in range(500)], "k long, payload string"
@@ -380,7 +380,7 @@ def test_bloom_filtered_join_is_exact(spark):
 
 
 def test_bloom_filtered_join_semi_and_bad_how(spark):
-    from bio2bel_spark.operators.sketch import bloom_filtered_join
+    from dataops.sketch import bloom_filtered_join
 
     big = spark.createDataFrame([(1, "a"), (2, "b")], "k long, p string")
     small = spark.createDataFrame([(1,)], "k long")
@@ -394,7 +394,7 @@ def test_bloom_filtered_join_semi_and_bad_how(spark):
 
 
 def test_mean_pool_vectors_model(spark):
-    from bio2bel_spark.operators.similarity import mean_pool_vectors
+    from dataops.similarity import mean_pool_vectors
 
     df = spark.createDataFrame(
         [
@@ -415,7 +415,7 @@ def test_mean_pool_vectors_degenerate_groups(spark):
     different denominator; null/empty vectors are excluded from the mean
     but the count makes the exclusion visible; all-null groups survive
     with n_vectors=0."""
-    from bio2bel_spark.operators.similarity import mean_pool_vectors
+    from dataops.similarity import mean_pool_vectors
 
     df = spark.createDataFrame(
         [
@@ -438,7 +438,7 @@ def test_mean_pool_vectors_degenerate_groups(spark):
 def test_mean_pool_vectors_null_group_key(spark):
     """Round-7 ADVICE fix: a NULL group key groups fine, so its vectors
     must pool — the counts↔pooled join is null-SAFE, not a silent miss."""
-    from bio2bel_spark.operators.similarity import mean_pool_vectors
+    from dataops.similarity import mean_pool_vectors
 
     df = spark.createDataFrame(
         [
@@ -455,7 +455,7 @@ def test_mean_pool_vectors_null_group_key(spark):
 
 
 def test_robust_scale_model(spark):
-    from bio2bel_spark.operators.stats import robust_scale
+    from dataops.stats import robust_scale
 
     # group g: values 0..8 -> median 4, IQR = 6 - 2 = 4
     rows = [("g", float(i)) for i in range(9)] + [("c", 5.0), ("c", 5.0)]
@@ -475,7 +475,7 @@ def test_robust_scale_model(spark):
 def test_split_leakage_surfaces_cross_split_neardups(spark):
     """Plant near-dup twins assigned to OPPOSITE splits by construction
     and assert the audit reports them off-diagonal."""
-    from bio2bel_spark.operators.dedup import split_leakage_report
+    from dataops.dedup import split_leakage_report
 
     base = "the quick brown fox jumps over the lazy dog again and again"
     # pick two ids that hash_split sends to different splits
@@ -509,7 +509,7 @@ def test_lsh_bucket_audit_observes_hub_guard(spark):
     """The audit reports how many docs a max_bucket cap excludes from the
     candidate join, and split_leakage_report's exposed max_bucket widens
     the guard so hub-bucket leaks become visible."""
-    from bio2bel_spark.operators.dedup import (
+    from dataops.dedup import (
         lsh_bucket_audit,
         split_leakage_report,
     )
@@ -549,7 +549,7 @@ def test_equiheight_histogram_approx_tier(spark):
     GK rank-error: on 2000 rows per group every bin holds ~1/n_bins of
     the rows (tolerance widened to 2x the bound for tiny groups), and the
     exact invariants (full coverage, observed extremes) still hold."""
-    from bio2bel_spark.operators.stats import equiheight_histogram
+    from dataops.stats import equiheight_histogram
 
     rows = [("g", float(i)) for i in range(2000)]
     rows += [("skew", float(i * i)) for i in range(2000)]
@@ -567,7 +567,7 @@ def test_equiheight_histogram_approx_tier(spark):
 
 
 def test_equiheight_histogram_model(spark):
-    from bio2bel_spark.operators.stats import equiheight_histogram
+    from dataops.stats import equiheight_histogram
 
     # 100 uniform values -> 4 bins of ~25 each; skewed tail still balanced
     rows = [("g", float(i)) for i in range(100)]
@@ -595,7 +595,7 @@ def test_equiheight_histogram_model(spark):
 
 
 def test_edit_distance_pairs_model(spark):
-    from bio2bel_spark.operators.dedup import edit_distance_pairs
+    from dataops.dedup import edit_distance_pairs
 
     df = spark.createDataFrame(
         [
@@ -621,7 +621,7 @@ def test_edit_distance_pairs_model(spark):
 def test_edit_distance_blocking_covers_length_straddle(spark):
     """Strings whose lengths straddle a bucket boundary (diff <= max_dist)
     must still pair via the +1 probe."""
-    from bio2bel_spark.operators.dedup import edit_distance_pairs
+    from dataops.dedup import edit_distance_pairs
 
     # len 5 (bucket 1) vs len 7 (bucket 2) with dist 2
     df = spark.createDataFrame(
@@ -640,7 +640,7 @@ def test_soft_cluster_assign_properties(spark):
     and entropy is bounded by ln(K)."""
     import math
 
-    from bio2bel_spark.operators.similarity import (
+    from dataops.similarity import (
         ivf_assign,
         soft_cluster_assign,
     )

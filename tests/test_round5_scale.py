@@ -67,7 +67,7 @@ def test_winnowing_fingerprints_10x(spark):
     """Per-doc fingerprinting is map-parallel: 10 disjoint replicas owe
     exactly 10x the base run's rows — any superlinear re-evaluation
     (the round-5 projection-collapse trap) shows up as wall clock."""
-    from bio2bel_spark.operators.dedup import winnowing_fingerprints
+    from dataops.dedup import winnowing_fingerprints
 
     docs = _docs(spark)
     base = winnowing_fingerprints(docs)
@@ -87,7 +87,7 @@ def test_winnowing_fingerprints_10x(spark):
 def test_ngram_contamination_10x(spark):
     """The benchmark side stays broadcast; 10x training rows cost one
     linear pass and owe exactly 10x the per-doc report rows."""
-    from bio2bel_spark.operators.dedup import ngram_contamination
+    from dataops.dedup import ngram_contamination
 
     docs = _docs(spark)
     bench = docs.filter(F.col("doc_id") < 50).select(
@@ -103,7 +103,7 @@ def test_edit_distance_pairs_10x(spark):
     """Length/prefix blocking keeps replicas disjoint (the replica suffix
     changes the prefix-block key), so pairs scale exactly 10x — a
     regression that lets replicas share blocks goes quadratic (100x)."""
-    from bio2bel_spark.operators.dedup import edit_distance_pairs
+    from dataops.dedup import edit_distance_pairs
     from bio2bel_spark.tables import load_table
 
     # the generated c_name is FIXED-FORMAT (one length, one prefix), so
@@ -137,7 +137,7 @@ def test_split_leakage_report_10x(spark):
     near-dups: total verified cross-split pairs scale exactly 10x (split
     labels per replica differ — ids differ — but the pair structure is
     replica-local)."""
-    from bio2bel_spark.operators.dedup import split_leakage_report
+    from dataops.dedup import split_leakage_report
 
     docs = _docs(spark)
     planted = docs.unionByName(

@@ -87,7 +87,7 @@ def _synth_batches(spark, n: int):
 
 def _run_replay(spark, batches, tmp_path, tag):
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.dedup import incremental_fuzzy_dedup
+    from dataops.dedup import incremental_fuzzy_dedup
 
     cat = Catalog(spark, str(tmp_path / f"wh_{tag}"))
     admitted = []
@@ -116,8 +116,8 @@ def test_select_token_budget_10x(spark):
     the selected set equals a driver-side replay of the same total order
     (sort → cumsum → cut), and the inclusive running total never crosses
     the budget."""
-    from bio2bel_spark.operators.packing import select_token_budget
-    from bio2bel_spark.operators.textquality import whitespace_token_count
+    from dataops.packing import select_token_budget
+    from dataops.textquality import whitespace_token_count
     from bio2bel_spark.tables import load_table
 
     docs = (
@@ -156,7 +156,7 @@ def test_cluster_split_10x(spark):
     exact twins: 10× rows out, and EVERY planted twin pair stays
     co-clustered and co-split at scale (exact-duplicate LSH collision is
     hash-certain, so the invariant is deterministic)."""
-    from bio2bel_spark.operators.dedup import cluster_split
+    from dataops.dedup import cluster_split
 
     docs = _docs(spark)
     twins = docs.filter(F.col("doc_id") < 50).select(
@@ -190,7 +190,7 @@ def test_hilbert_layout_nd_10x(spark):
     """The N-D Hilbert code is a pure codegen expression: 10 exact
     coordinate replicas owe exactly the SAME code histogram scaled 10×
     (any drift means the expression stopped being deterministic)."""
-    from bio2bel_spark.operators.layout import hilbert_value_nd
+    from dataops.layout import hilbert_value_nd
     from bio2bel_spark.tables import load_table
 
     ev = (

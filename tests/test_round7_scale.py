@@ -56,7 +56,7 @@ def _duplicate(df, replicas: int = 10):
 
 
 def test_dsir_weights_10x_alpha_equivariance(spark):
-    from bio2bel_spark.operators.textquality import dsir_log_weights
+    from dataops.textquality import dsir_log_weights
 
     docs = _docs(spark)
     base = {
@@ -89,7 +89,7 @@ def test_dsir_weights_10x_alpha_equivariance(spark):
 def test_perplexity_buckets_10x(spark):
     from collections import Counter
 
-    from bio2bel_spark.operators.textquality import ccnet_perplexity_buckets
+    from dataops.textquality import ccnet_perplexity_buckets
 
     docs = _docs(spark)
     base = Counter(
@@ -129,7 +129,7 @@ def test_quality_gate_10x(spark):
     (reasons, keep) population by exactly 10."""
     from collections import Counter
 
-    from bio2bel_spark.operators.cleaning import quality_gate
+    from dataops.cleaning import quality_gate
 
     docs = _docs(spark)
     base = Counter(
@@ -146,7 +146,7 @@ def test_quality_gate_10x(spark):
 def test_bpe_learn_merges_10x_invariant(spark):
     """Exact duplication multiplies every word frequency by 10, so the
     learned merge SEQUENCE is identical and each pair count is 10x."""
-    from bio2bel_spark.operators.bpe import bpe_learn_merges
+    from dataops.bpe import bpe_learn_merges
 
     docs = _docs(spark)
     base = bpe_learn_merges(docs, n_merges=6)
@@ -158,7 +158,7 @@ def test_bpe_learn_merges_10x_invariant(spark):
 def test_embedding_quantize_10x(spark):
     """Quantization is per-vector: the replicated store reports the same
     fidelity rows, 10x over."""
-    from bio2bel_spark.operators.similarity import quantization_report
+    from dataops.similarity import quantization_report
     from bio2bel_spark.tables import load_table
 
     emb = load_table(spark, SF_DIR, "embeddings").repartition(

@@ -12,7 +12,7 @@ def _dim(spark, rows):
 
 
 def test_scd2_versions_changes_and_inserts(spark):
-    from bio2bel_spark.operators.scd import scd2_apply
+    from dataops.scd import scd2_apply
 
     t0 = dt.datetime(2024, 1, 1)
     t1 = dt.datetime(2024, 2, 1)
@@ -43,7 +43,7 @@ def test_scd2_versions_changes_and_inserts(spark):
 
 
 def test_scd2_null_transition_versions(spark):
-    from bio2bel_spark.operators.scd import scd2_apply
+    from dataops.scd import scd2_apply
 
     t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
     current = _dim(spark, [(1, None, t0, None)])
@@ -58,7 +58,7 @@ def test_scd2_null_transition_versions(spark):
 
 
 def test_cdc_apply_latest_wins_and_deletes(spark):
-    from bio2bel_spark.operators.scd import cdc_apply
+    from dataops.scd import cdc_apply
 
     base = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "k long, attr string"
@@ -77,7 +77,7 @@ def test_cdc_apply_latest_wins_and_deletes(spark):
 
 
 def test_cdc_apply_replayed_insert_after_update(spark):
-    from bio2bel_spark.operators.scd import cdc_apply
+    from dataops.scd import cdc_apply
 
     base = spark.createDataFrame([(1, "v2")], "k long, attr string")
     # a replayed low-seq insert must NOT resurrect the original attributes
@@ -92,7 +92,7 @@ def test_cdc_apply_replayed_insert_after_update(spark):
 def test_cdc_apply_matches_model_random(spark):
     import random
 
-    from bio2bel_spark.operators.scd import cdc_apply
+    from dataops.scd import cdc_apply
 
     for seed in range(4):
         rng = random.Random(seed)
@@ -128,7 +128,7 @@ def test_scd2_apply_matches_model_random(spark):
     import datetime as dt
     import random
 
-    from bio2bel_spark.operators.scd import scd2_apply
+    from dataops.scd import scd2_apply
 
     t0, t1 = dt.datetime(2024, 1, 1), dt.datetime(2024, 2, 1)
     for seed in range(4):
@@ -180,7 +180,7 @@ def test_scd2_empty_tracked_cols_raises(spark):
     an opaque TypeError from `~None` mid-plan."""
     import pytest
 
-    from bio2bel_spark.operators.scd import scd2_apply
+    from dataops.scd import scd2_apply
 
     cur = spark.createDataFrame(
         [], "k long, attr string, valid_from timestamp, valid_to timestamp"

@@ -7,7 +7,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators import similarity
+from dataops import similarity
 
 
 def _py_cos(a, b):
@@ -92,7 +92,7 @@ def test_knn_join_exact_on_small_corpus(spark):
     import itertools
     import math
 
-    from bio2bel_spark.operators.similarity import knn_join
+    from dataops.similarity import knn_join
 
     def vec(i):
         return [math.cos(0.7 * i + j) + 2.0 for j in range(4)]
@@ -130,7 +130,7 @@ def test_knn_join_probes_restrict_candidates(spark):
     with its query, and ranks are dense from 1."""
     from pyspark.sql import functions as F
 
-    from bio2bel_spark.operators.similarity import knn_join
+    from dataops.similarity import knn_join
 
     import math
 
@@ -158,7 +158,7 @@ def test_knn_join_probes_restrict_candidates(spark):
 def test_kmeans_refine_recovers_planted_clusters(spark):
     """Two tight planted blobs: refined centroids land on the blob means and
     the refined assignment separates the blobs exactly."""
-    from bio2bel_spark.operators.similarity import ivf_assign, kmeans_refine
+    from dataops.similarity import ivf_assign, kmeans_refine
 
     blob_a = [[1.0 + 0.01 * i, 0.1, 0.1, 0.1] for i in range(10)]
     blob_b = [[0.1, 0.1, 0.1, 1.0 + 0.01 * i] for i in range(10)]
@@ -180,7 +180,7 @@ def test_kmeans_refine_recovers_planted_clusters(spark):
 
 def test_embedding_dedup_collapses_transitive_chain(spark):
     """v, v*1.01+eps, v*1.02+eps2 all near-dup -> one cluster, min id kept."""
-    from bio2bel_spark.operators.similarity import embedding_dedup
+    from dataops.similarity import embedding_dedup
 
     base = [1.0, 2.0, 3.0, 4.0]
     rows = [
@@ -280,7 +280,7 @@ def test_grid_near_pairs_property(spark):
 
 
 def test_hard_negative_samples_in_cluster(spark):
-    from bio2bel_spark.operators.similarity import hard_negative_samples, ivf_assign
+    from dataops.similarity import hard_negative_samples, ivf_assign
 
     import random
 
@@ -314,7 +314,7 @@ def test_hard_negative_samples_in_cluster(spark):
 
 
 def test_label_consistency_flags_planted_outlier(spark):
-    from bio2bel_spark.operators.similarity import label_consistency
+    from dataops.similarity import label_consistency
 
     # two tight, well-separated clusters; one vector carries the wrong label
     rows = []
@@ -339,7 +339,7 @@ def test_label_consistency_flags_planted_outlier(spark):
 def test_srp_near_pairs_finds_planted_duplicate(spark):
     import random
 
-    from bio2bel_spark.operators.similarity import srp_near_pairs
+    from dataops.similarity import srp_near_pairs
 
     rng = random.Random(1)
     rows = [(i, [rng.uniform(-1, 1) for _ in range(16)]) for i in range(30)]
@@ -367,7 +367,7 @@ def test_srp_near_pairs_finds_planted_duplicate(spark):
 
 
 def test_quantize_vectors_bounds_and_zero(spark):
-    from bio2bel_spark.operators.similarity import quantize_vectors
+    from dataops.similarity import quantize_vectors
 
     df = spark.createDataFrame(
         [(1, [0.5, -1.0, 0.25]), (2, [0.0, 0.0, 0.0]), (3, [2.0])],
@@ -385,7 +385,7 @@ def test_quantize_vectors_bounds_and_zero(spark):
 def test_quantization_report_error_bound(spark, tables):
     """Dequantization error is bounded by half a quantization step
     (scale/254) and cosine fidelity stays ~1 on real embeddings."""
-    from bio2bel_spark.operators.similarity import quantization_report
+    from dataops.similarity import quantization_report
 
     rows = quantization_report(tables["embeddings"]).collect()
     assert len(rows) == 500
@@ -396,7 +396,7 @@ def test_quantization_report_error_bound(spark, tables):
 
 
 def test_quantized_recall_bounds(spark, tables):
-    from bio2bel_spark.operators.similarity import quantized_recall
+    from dataops.similarity import quantized_recall
 
     emb = tables["embeddings"]
     from pyspark.sql import functions as F

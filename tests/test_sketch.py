@@ -7,7 +7,7 @@ from pyspark.sql import functions as F
 
 
 def test_kmv_exact_below_k(spark):
-    from bio2bel_spark.operators.sketch import kmv_distinct
+    from dataops.sketch import kmv_distinct
 
     df = spark.range(100).select((F.col("id") % 37).alias("v"))
     row = kmv_distinct(df, "v", k=256).collect()[0]
@@ -16,7 +16,7 @@ def test_kmv_exact_below_k(spark):
 
 
 def test_kmv_estimate_within_error_bounds(spark):
-    from bio2bel_spark.operators.sketch import kmv_distinct
+    from dataops.sketch import kmv_distinct
 
     n = 20_000
     df = spark.range(n).select(F.col("id").alias("v"))
@@ -27,7 +27,7 @@ def test_kmv_estimate_within_error_bounds(spark):
 
 
 def test_kmv_ignores_nulls_and_duplicates(spark):
-    from bio2bel_spark.operators.sketch import kmv_distinct
+    from dataops.sketch import kmv_distinct
 
     df = spark.createDataFrame(
         [("a",), ("a",), ("b",), (None,)] * 10, "v STRING"
@@ -38,7 +38,7 @@ def test_kmv_ignores_nulls_and_duplicates(spark):
 
 def test_kmv_merge_equals_union_state(spark):
     """min-k of merged per-shard states == min-k of the union (mergeability)."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         kmv_estimate,
         kmv_merge,
         kmv_state,
@@ -57,7 +57,7 @@ def test_kmv_merge_equals_union_state(spark):
 
 
 def test_hash_split_is_stable_and_rowwise(spark):
-    from bio2bel_spark.operators.sketch import hash_split
+    from dataops.sketch import hash_split
 
     fr = {"train": 0.8, "val": 0.1, "test": 0.1}
     df = spark.range(2000).select(F.col("id"))
@@ -80,14 +80,14 @@ def test_hash_split_is_stable_and_rowwise(spark):
 
 
 def test_hash_split_rejects_bad_fractions(spark):
-    from bio2bel_spark.operators.sketch import hash_split
+    from dataops.sketch import hash_split
 
     with pytest.raises(ValueError, match="sum to 1"):
         hash_split(spark.range(1), "id", {"a": 0.5, "b": 0.4}).collect()
 
 
 def test_heavy_hitters_order_and_ties(spark):
-    from bio2bel_spark.operators.sketch import heavy_hitters
+    from dataops.sketch import heavy_hitters
 
     df = spark.createDataFrame(
         [("x",)] * 5 + [("y",)] * 3 + [("z",)] * 3 + [("w",)] * 1, "v STRING"
@@ -97,7 +97,7 @@ def test_heavy_hitters_order_and_ties(spark):
 
 
 def test_heavy_hitters_plan_is_take_ordered(spark):
-    from bio2bel_spark.operators.sketch import heavy_hitters
+    from dataops.sketch import heavy_hitters
 
     df = spark.range(100).select((F.col("id") % 7).alias("v"))
     plan = heavy_hitters(df, "v", k=5)._jdf.queryExecution().executedPlan().toString()
@@ -105,7 +105,7 @@ def test_heavy_hitters_plan_is_take_ordered(spark):
 
 
 def test_sample_per_group_quota_and_determinism(spark):
-    from bio2bel_spark.operators.sketch import sample_per_group
+    from dataops.sketch import sample_per_group
 
     df = spark.createDataFrame(
         [(f"g{i % 3}", i) for i in range(100)] + [("tiny", 999)],
@@ -126,7 +126,7 @@ def test_sample_per_group_quota_and_determinism(spark):
 
 
 def test_weighted_mixture_nested_keep_sets(spark):
-    from bio2bel_spark.operators.sketch import weighted_mixture
+    from dataops.sketch import weighted_mixture
 
     df = spark.createDataFrame(
         [("s", i) for i in range(400)], "src STRING, k BIGINT"
@@ -153,7 +153,7 @@ def test_temperature_mixture_rates_flatten(spark):
     everything (rate 1), the dominant group downsamples, and the KEPT
     shares sit strictly between natural and uniform; alpha=1 is the
     identity mixture (all rates 1)."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         temperature_mixture_rates,
         weighted_mixture,
     )
@@ -180,7 +180,7 @@ def test_temperature_mixture_rates_flatten(spark):
 
 
 def test_weighted_mixture_rejects_bad_rate(spark):
-    from bio2bel_spark.operators.sketch import weighted_mixture
+    from dataops.sketch import weighted_mixture
 
     with pytest.raises(ValueError, match="must be in"):
         weighted_mixture(
@@ -190,7 +190,7 @@ def test_weighted_mixture_rejects_bad_rate(spark):
 
 
 def test_kmv_empty_input(spark):
-    from bio2bel_spark.operators.sketch import kmv_distinct
+    from dataops.sketch import kmv_distinct
 
     df = spark.createDataFrame([], "v STRING")
     row = kmv_distinct(df, "v", k=16).collect()[0]
@@ -200,7 +200,7 @@ def test_kmv_empty_input(spark):
 def test_cms_estimate_bounds_and_merge(spark):
     """CMS point estimates are upper bounds, exact for a wide sketch, and
     merged per-shard states equal the single-pass state."""
-    from bio2bel_spark.operators.sketch import cms_estimate, cms_merge, cms_state
+    from dataops.sketch import cms_estimate, cms_merge, cms_state
 
     df = spark.createDataFrame(
         [("a",)] * 50 + [("b",)] * 7 + [("c",)] * 1, "v STRING"
@@ -226,7 +226,7 @@ def test_cms_estimate_bounds_and_merge(spark):
 # ----------------------------------------------------------------- bloom
 
 def test_bloom_no_false_negatives(spark):
-    from bio2bel_spark.operators.sketch import bloom_probe, bloom_state
+    from dataops.sketch import bloom_probe, bloom_state
 
     members = spark.createDataFrame([(f"doc-{i}",) for i in range(50)], "v string")
     state = bloom_state(members, "v", m=1 << 12, k=4)
@@ -235,7 +235,7 @@ def test_bloom_no_false_negatives(spark):
 
 
 def test_bloom_rejects_most_non_members_and_nulls(spark):
-    from bio2bel_spark.operators.sketch import bloom_probe, bloom_state
+    from dataops.sketch import bloom_probe, bloom_state
 
     members = spark.createDataFrame([(f"in-{i}",) for i in range(20)], "v string")
     state = bloom_state(members, "v", m=1 << 14, k=4)
@@ -250,7 +250,7 @@ def test_bloom_rejects_most_non_members_and_nulls(spark):
 
 
 def test_bloom_merge_is_union(spark):
-    from bio2bel_spark.operators.sketch import bloom_merge, bloom_probe, bloom_state
+    from dataops.sketch import bloom_merge, bloom_probe, bloom_state
 
     a = spark.createDataFrame([("x",), ("y",)], "v string")
     b = spark.createDataFrame([("z",)], "v string")
@@ -268,7 +268,7 @@ def test_bloom_merge_is_union(spark):
 # ----------------------------------------------------------- grouped kmv
 
 def test_kmv_grouped_exact_below_k(spark):
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         kmv_estimate_grouped,
         kmv_state_grouped,
     )
@@ -287,7 +287,7 @@ def test_kmv_grouped_exact_below_k(spark):
 
 
 def test_kmv_grouped_state_bounded_and_mergeable(spark):
-    from bio2bel_spark.operators.sketch import kmv_state_grouped
+    from dataops.sketch import kmv_state_grouped
 
     df = spark.createDataFrame(
         [("g", i) for i in range(200)], "g string, v long"
@@ -307,7 +307,7 @@ def test_kmv_grouped_state_bounded_and_mergeable(spark):
 def test_hll_accuracy_and_merge(spark, tables):
     """HLL estimate lands within the m=512 error envelope of the exact
     count, and merging per-shard states equals the whole-corpus state."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_distinct,
         hll_estimate,
         hll_merge,
@@ -339,7 +339,7 @@ def test_hll_accuracy_and_merge(spark, tables):
 def test_hll_rho_exact_at_powers_of_two(spark):
     """Registers must use integer bit-length, never float log2: feed values
     whose remaining bits are exact powers of two and check rho directly."""
-    from bio2bel_spark.operators.sketch import hll_state
+    from dataops.sketch import hll_state
 
     # craft strings whose md5-60 hash is irrelevant: we just check that the
     # state builds and every rho is within [1, 52] for b=9
@@ -352,7 +352,7 @@ def test_hll_rho_exact_at_powers_of_two(spark):
 def test_hll_grouped_matches_per_group_global(spark, tables):
     """A group's register table must equal the global state of that group's
     rows filtered out — grouping changes bookkeeping, never registers."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_estimate,
         hll_estimate_grouped,
         hll_state,
@@ -383,7 +383,7 @@ def test_hll_grouped_matches_per_group_global(spark, tables):
 
 
 def test_hll_empty_state_estimates_zero(spark):
-    from bio2bel_spark.operators.sketch import hll_distinct
+    from dataops.sketch import hll_distinct
 
     empty = spark.createDataFrame([], "x string")
     r = hll_distinct(empty, "x").collect()[0]
@@ -391,7 +391,7 @@ def test_hll_empty_state_estimates_zero(spark):
 
 
 def test_quantile_sample_state_deterministic_merge(spark):
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_estimate,
         quantile_sample_merge,
         quantile_sample_state,
@@ -413,7 +413,7 @@ def test_quantile_sample_state_deterministic_merge(spark):
 
 
 def test_quantile_sample_small_input_is_exact(spark):
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_estimate,
         quantile_sample_state,
     )
@@ -428,7 +428,7 @@ def test_quantile_sample_small_input_is_exact(spark):
 
 
 def test_quantile_grouped_matches_global_per_group(spark):
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_estimate,
         quantile_estimate_grouped,
         quantile_sample_state,

@@ -23,7 +23,7 @@ WORDS = st.lists(
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(values=VALUES)
 def test_cms_estimates_bound_true_counts(spark, values):
-    from bio2bel_spark.operators.sketch import cms_estimate, cms_state
+    from dataops.sketch import cms_estimate, cms_state
 
     df = spark.createDataFrame([(v,) for v in values], "v long")
     state = cms_state(df, "v", width=64, depth=3)
@@ -42,7 +42,7 @@ def test_cms_estimates_bound_true_counts(spark, values):
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(values=VALUES)
 def test_cms_state_equals_merge_of_shards(spark, values):
-    from bio2bel_spark.operators.sketch import cms_merge, cms_state
+    from dataops.sketch import cms_merge, cms_state
 
     df = spark.createDataFrame([(v,) for v in values], "v long")
     whole = {
@@ -65,7 +65,7 @@ def test_cms_state_equals_merge_of_shards(spark, values):
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(members=WORDS, probes=WORDS)
 def test_bloom_membership_properties(spark, members, probes):
-    from bio2bel_spark.operators.sketch import bloom_probe, bloom_state
+    from dataops.sketch import bloom_probe, bloom_state
 
     mdf = spark.createDataFrame([(w,) for w in members], "v string")
     state = bloom_state(mdf, "v", m=1 << 12, k=3)
@@ -116,7 +116,7 @@ def test_triangle_count_matches_brute_force(spark, edges):
 def test_quantile_sample_merge_associative(spark, vals, cut1, cut2, k):
     """Any split of the input and any merge order must reproduce the
     direct sketch exactly (bottom-k is a lattice join)."""
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_sample_merge,
         quantile_sample_state,
     )

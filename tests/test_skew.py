@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators import skew
+from dataops import skew
 
 
 @pytest.fixture(scope="module")

@@ -6,7 +6,7 @@ from pyspark.sql import functions as F
 
 
 def test_winsorized_stats_clamps_outliers(spark):
-    from bio2bel_spark.operators.stats import winsorized_stats
+    from dataops.stats import winsorized_stats
 
     # group a: 0..99 plus one outlier 1_000_000 that must be clamped
     rows = [("a", float(i)) for i in range(100)] + [("a", 1_000_000.0)]
@@ -24,7 +24,7 @@ def test_winsorized_stats_clamps_outliers(spark):
 
 
 def test_pivot_report_explicit_categories(spark):
-    from bio2bel_spark.operators.stats import pivot_report
+    from dataops.stats import pivot_report
 
     rows = [
         (1, "x", 1.0),
@@ -42,7 +42,7 @@ def test_pivot_report_explicit_categories(spark):
 
 
 def test_value_histogram_bins_and_overflow(spark):
-    from bio2bel_spark.operators.stats import value_histogram
+    from dataops.stats import value_histogram
 
     rows = [("a", -1.0), ("a", 0.0), ("a", 4.9), ("a", 5.0), ("a", 100.0), ("a", None)]
     df = spark.createDataFrame(rows, "g string, v double")
@@ -61,7 +61,7 @@ def test_value_histogram_bins_and_overflow(spark):
 def test_decayed_sum_halves_per_half_life(spark):
     import datetime as dt
 
-    from bio2bel_spark.operators.stats import decayed_sum
+    from dataops.stats import decayed_sum
 
     base = dt.datetime(2024, 1, 1)
     rows = [
@@ -84,7 +84,7 @@ def test_decayed_sum_halves_per_half_life(spark):
 
 
 def test_zscore_outliers_flags_planted_spike(spark):
-    from bio2bel_spark.operators.stats import zscore_outliers
+    from dataops.stats import zscore_outliers
 
     rows = [(i, "a", 10.0 + (i % 5) * 0.1) for i in range(50)]
     rows.append((99, "a", 1000.0))          # planted spike
@@ -96,7 +96,7 @@ def test_zscore_outliers_flags_planted_spike(spark):
 
 
 def test_impute_group_median(spark):
-    from bio2bel_spark.operators.stats import impute_group_median
+    from dataops.stats import impute_group_median
 
     rows = [
         ("a", 1.0), ("a", 3.0), ("a", None),   # median 2.0
@@ -110,7 +110,7 @@ def test_impute_group_median(spark):
 
 
 def test_feature_correlations_pairs(spark):
-    from bio2bel_spark.operators.stats import feature_correlations
+    from dataops.stats import feature_correlations
 
     rows = [(float(i), float(2 * i), float(-i)) for i in range(20)]
     df = spark.createDataFrame(rows, "x double, y double, z double")
@@ -119,7 +119,7 @@ def test_feature_correlations_pairs(spark):
 
 
 def test_target_encode_loo_excludes_own_row(spark):
-    from bio2bel_spark.operators.stats import target_encode_loo
+    from dataops.stats import target_encode_loo
 
     rows = [("a", 10.0), ("a", 20.0), ("a", 30.0), ("b", 100.0)]
     df = spark.createDataFrame(rows, "cat string, y double")
@@ -143,7 +143,7 @@ def test_target_encode_loo_excludes_own_row(spark):
 
 
 def test_psi_report_detects_shift(spark):
-    from bio2bel_spark.operators.stats import psi_report
+    from dataops.stats import psi_report
 
     base = spark.createDataFrame([(float(i % 100),) for i in range(1000)], "v double")
     same = spark.createDataFrame([(float((i * 7) % 100),) for i in range(500)], "v double")
@@ -167,7 +167,7 @@ def test_value_histogram_matches_model_random(spark):
         rng = random.Random(seed)
         vals = [rng.uniform(-20, 130) for _ in range(300)]
         df = spark.createDataFrame([(v,) for v in vals], "v double")
-        from bio2bel_spark.operators.stats import value_histogram
+        from dataops.stats import value_histogram
 
         got = {
             r["bin"]: r["n"]
@@ -190,7 +190,7 @@ def test_winsorized_stats_matches_model(spark):
     vals = [float(x) for x in
             [1, 2, 3, 4, 5, 6, 7, 8, 9, 10, 11, 12, 13, 14, 15, 16, 17, 18, 19, 1000]]
     df = spark.createDataFrame([("g", v) for v in vals], "g string, v double")
-    from bio2bel_spark.operators.stats import winsorized_stats
+    from dataops.stats import winsorized_stats
 
     r = winsorized_stats(df, "v", "g", lower=0.05, upper=0.95).collect()[0]
     # exact interpolated percentiles over the sorted data
@@ -217,7 +217,7 @@ def test_pivot_report_matches_model_random(spark):
             for _ in range(120)
         ]
         df = spark.createDataFrame(rows, "uid long, cat string, v double")
-        from bio2bel_spark.operators.stats import pivot_report
+        from dataops.stats import pivot_report
 
         got = {
             r["uid"]: {c: r[c] for c in cats}
@@ -236,7 +236,7 @@ def test_pivot_report_matches_model_random(spark):
 def test_feature_correlations_requires_two_cols(spark):
     import pytest
 
-    from bio2bel_spark.operators.stats import feature_correlations
+    from dataops.stats import feature_correlations
 
     df = spark.createDataFrame([(1.0,)], "a double")
     with pytest.raises(ValueError, match="at least 2"):
@@ -244,7 +244,7 @@ def test_feature_correlations_requires_two_cols(spark):
 
 
 def test_target_encode_loo_is_exported():
-    from bio2bel_spark.operators import stats
+    from dataops import stats
 
     assert "target_encode_loo" in stats.__all__
     assert callable(stats.target_encode_loo)

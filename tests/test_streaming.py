@@ -12,7 +12,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from bio2bel_spark.streaming import events as sev
+from dataops.streaming import events as sev
 
 
 def _us(minutes: float) -> int:
@@ -244,7 +244,7 @@ def test_kmv_sketch_maintenance_incremental(spark, tmp_path_factory):
     """Two incremental maintenance runs == the direct sketch of all data
     (mergeable state), and the estimate is exact below k."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.sketch import kmv_estimate, kmv_state
+    from dataops.sketch import kmv_estimate, kmv_state
 
     catalog = Catalog(spark, str(tmp_path_factory.mktemp("wh_kmv")))
     src = str(tmp_path_factory.mktemp("kmv_src"))
@@ -287,7 +287,7 @@ def test_cms_maintenance_incremental_and_replay_guarded(spark, tmp_path_factory)
     """Two incremental CMS runs == direct sketch of all data; the batch-id
     guard makes counter-summing safe against foreachBatch replays."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.sketch import cms_state
+    from dataops.sketch import cms_state
 
     catalog = Catalog(spark, str(tmp_path_factory.mktemp("wh_cms")))
     src = str(tmp_path_factory.mktemp("cms_src"))
@@ -330,7 +330,7 @@ def test_bloom_maintenance_incremental(spark, tmp_path_factory):
     """Incremental bloom state == direct state; accumulated filter has no
     false negatives over everything streamed so far."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.sketch import bloom_probe, bloom_state
+    from dataops.sketch import bloom_probe, bloom_state
     from pyspark.sql import functions as F
 
     catalog = Catalog(spark, str(tmp_path_factory.mktemp("wh_bloom")))
@@ -466,7 +466,7 @@ def test_hll_maintenance_matches_direct_state(spark, tmp_path_factory):
     """Two incremental batches must produce exactly the register table a
     single direct pass over everything builds (max-merge is lossless)."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.sketch import hll_estimate, hll_state
+    from dataops.sketch import hll_estimate, hll_state
 
     catalog = Catalog(spark, str(tmp_path_factory.mktemp("wh_hll")))
     src = str(tmp_path_factory.mktemp("hll_src"))
@@ -506,7 +506,7 @@ def test_quantile_maintenance_matches_direct_state(spark, tmp_path_factory):
     """Two incremental batches must produce exactly the sample a single
     direct pass over everything builds (bottom-k merge is lossless)."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         quantile_estimate,
         quantile_sample_state,
     )
@@ -587,7 +587,7 @@ def test_windowed_hll_maintenance(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.sketch import (
+    from dataops.sketch import (
         hll_estimate_grouped,
         hll_state_grouped,
     )
@@ -782,7 +782,7 @@ def test_dsir_maintenance_incremental_matches_onepass(spark, tmp_path_factory):
     from pyspark.sql import functions as F
 
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         dsir_log_weights,
         dsir_weights_from_state,
     )
@@ -842,7 +842,7 @@ def test_perplexity_maintenance_incremental_matches_onepass(
     the maintained state equal ccnet_perplexity_buckets over everything
     (counter summing is batch-order-invariant)."""
     from bio2bel_spark.catalog import Catalog
-    from bio2bel_spark.operators.textquality import (
+    from dataops.textquality import (
         ccnet_perplexity_buckets,
         perplexity_buckets_from_state,
         perplexity_thresholds_from_state,

@@ -35,7 +35,7 @@ def trades_quotes(spark):
 
 
 def test_asof_backward_inclusive(spark, trades_quotes):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     trades, quotes = trades_quotes
     out = asof_join(trades, quotes, on="ts", by="sym")
@@ -55,7 +55,7 @@ def test_asof_backward_inclusive(spark, trades_quotes):
 
 
 def test_asof_tolerance(spark, trades_quotes):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     trades, quotes = trades_quotes
     out = asof_join(trades, quotes, on="ts", by="sym", tolerance_sec=2)
@@ -66,7 +66,7 @@ def test_asof_tolerance(spark, trades_quotes):
 
 
 def test_asof_right_tie_is_deterministic(spark):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = spark.createDataFrame(
         [(1, _ts("2024-01-01 10:00:01"))], "k BIGINT, ts TIMESTAMP"
@@ -90,7 +90,7 @@ def test_asof_nearest_forward_tie_matches_forward_convention(spark):
     rows share that future timestamp, the tie must break struct-max — the
     same convention backward/forward use — so nearest and forward agree on
     identical inputs (round-4 ADVICE item, temporal.py nearest frame)."""
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = spark.createDataFrame(
         [(1, _ts("2024-01-01 10:00:01"))], "k BIGINT, ts TIMESTAMP"
@@ -118,7 +118,7 @@ def test_asof_nearest_forward_tie_matches_forward_convention(spark):
 
 
 def test_interval_join_end_exclusive_and_span(spark):
-    from bio2bel_spark.operators.temporal import interval_join
+    from dataops.temporal import interval_join
 
     intervals = spark.createDataFrame(
         [
@@ -144,7 +144,7 @@ def test_interval_join_end_exclusive_and_span(spark):
 
 
 def test_interval_join_no_key(spark):
-    from bio2bel_spark.operators.temporal import interval_join
+    from dataops.temporal import interval_join
 
     intervals = spark.createDataFrame(
         [(_ts("2024-01-01 00:00:00"), _ts("2024-01-02 00:00:00"), "day1")],
@@ -159,7 +159,7 @@ def test_interval_join_no_key(spark):
 
 
 def test_hypertable_rollup_grains_consistent(spark):
-    from bio2bel_spark.operators.temporal import hypertable_rollup
+    from dataops.temporal import hypertable_rollup
 
     ev = spark.createDataFrame(
         [
@@ -196,7 +196,7 @@ def test_hypertable_rollup_grains_consistent(spark):
 
 
 def test_interval_join_fanout_guard(spark):
-    from bio2bel_spark.operators.temporal import interval_join
+    from dataops.temporal import interval_join
 
     intervals = spark.createDataFrame(
         [(_ts("2024-01-01 00:00:00"), _ts("9999-01-01 00:00:00"), "bad")],
@@ -217,7 +217,7 @@ def test_interval_join_fanout_guard(spark):
 
 
 def test_asof_empty_right_side(spark):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = spark.createDataFrame(
         [(1, _ts("2024-01-01 10:00:00"), 5.0)], "k BIGINT, ts TIMESTAMP, v DOUBLE"
@@ -228,7 +228,7 @@ def test_asof_empty_right_side(spark):
 
 
 def test_asof_multi_key_by(spark):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = spark.createDataFrame(
         [(1, "a", _ts("2024-01-01 10:00:01"))], "k BIGINT, s STRING, ts TIMESTAMP"
@@ -245,14 +245,14 @@ def test_asof_multi_key_by(spark):
 
 
 def test_hypertable_rollup_empty_input(spark):
-    from bio2bel_spark.operators.temporal import hypertable_rollup
+    from dataops.temporal import hypertable_rollup
 
     ev = spark.createDataFrame([], "ts TIMESTAMP, event_type STRING, value DOUBLE")
     assert hypertable_rollup(ev).count() == 0
 
 
 def test_asof_forward_direction(spark, trades_quotes):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     trades, quotes = trades_quotes
     out = asof_join(trades, quotes, on="ts", by="sym", direction="forward")
@@ -274,7 +274,7 @@ def test_asof_forward_direction(spark, trades_quotes):
 def test_asof_forward_matches_pandas(spark):
     import pandas as pd
 
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     lrows = [(1, _ts(f"2024-01-01 10:00:{s:02d}"), i) for i, s in enumerate([0, 7, 13, 40])]
     rrows = [(1, _ts(f"2024-01-01 10:00:{s:02d}"), float(s)) for s in [5, 13, 20]]
@@ -297,7 +297,7 @@ def test_asof_forward_matches_pandas(spark):
 
 
 def test_interval_overlap_join_semantics(spark):
-    from bio2bel_spark.operators.temporal import interval_overlap_join
+    from dataops.temporal import interval_overlap_join
 
     left = spark.createDataFrame(
         [
@@ -329,7 +329,7 @@ def test_interval_overlap_join_semantics(spark):
 
 def test_interval_overlap_join_matches_naive(spark):
     """Bucketed plan ≡ naive inequality join on dense random-ish intervals."""
-    from bio2bel_spark.operators.temporal import interval_overlap_join
+    from dataops.temporal import interval_overlap_join
 
     rows_l = [
         (i, _ts("2024-01-01 00:00:00"), (i * 37) % 5000, (i * 53) % 3000 + 10)
@@ -367,7 +367,7 @@ def test_interval_overlap_join_matches_naive(spark):
 
 
 def test_asof_null_timestamps(spark):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = spark.createDataFrame(
         [(1, _ts("2024-01-01 10:00:00"), "real"), (1, None, "null-ts")],
@@ -388,7 +388,7 @@ def test_asof_forward_null_left_timestamp(spark):
     # forward scan orders by __t desc, which sorts nulls LAST by default —
     # regression: a null-ts left row must keep the null-match contract in
     # BOTH directions (desc_nulls_first)
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = spark.createDataFrame(
         [(1, _ts("2024-01-01 10:00:00"), "real"), (1, None, "null-ts")],
@@ -409,7 +409,7 @@ def test_interval_join_reversed_interval_is_empty(spark):
     # end <= start covers nothing; a reversed interval (end in 1970) has a
     # NEGATIVE bucket span that passes the `< max_buckets` assert — it must
     # emit zero bucket rows, not a descending sequence
-    from bio2bel_spark.operators.temporal import interval_join, interval_overlap_join
+    from dataops.temporal import interval_join, interval_overlap_join
 
     intervals = spark.createDataFrame(
         [
@@ -438,7 +438,7 @@ def test_interval_join_reversed_interval_is_empty(spark):
 
 
 def test_hypertable_rollup_missing_value_column_errors(spark):
-    from bio2bel_spark.operators.temporal import hypertable_rollup
+    from dataops.temporal import hypertable_rollup
 
     df = spark.createDataFrame(
         [(_ts("2024-01-01 10:00:00"), "a")], "ts TIMESTAMP, event_type STRING"
@@ -453,7 +453,7 @@ def test_hypertable_rollup_missing_value_column_errors(spark):
 
 
 def test_timeline_features_small(spark):
-    from bio2bel_spark.operators.temporal import timeline_features
+    from dataops.temporal import timeline_features
 
     rows = [
         # user 1: three events 30 min apart
@@ -495,7 +495,7 @@ def test_hypertable_rollup_paths_agree(spark):
             )
         )
     ev = spark.createDataFrame(rows, "ts timestamp, event_type string, value double")
-    from bio2bel_spark.operators.temporal import hypertable_rollup
+    from dataops.temporal import hypertable_rollup
 
     hier = {
         (r["grain"], r["event_type"], r["bucket"]): (r["n_events"], r["total_value"])

@@ -31,7 +31,7 @@ RIGHT = st.lists(
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(left=LEFT, right=RIGHT, tol=st.one_of(st.none(), st.integers(1, 100)))
 def test_asof_matches_pandas_merge_asof(spark, left, right, tol):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     # dedupe (key, ts) pairs: both engines need a deterministic pick
     left = sorted(set(left))
@@ -65,7 +65,7 @@ def test_asof_matches_pandas_merge_asof(spark, left, right, tol):
 @settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
 @given(left=LEFT, right=RIGHT, tol=st.one_of(st.none(), st.integers(1, 100)))
 def test_asof_nearest_matches_pandas_merge_asof(spark, left, right, tol):
-    from bio2bel_spark.operators.temporal import asof_join
+    from dataops.temporal import asof_join
 
     left = sorted(set(left))
     right = sorted(set(right))
@@ -103,7 +103,7 @@ def test_asof_nearest_matches_pandas_merge_asof(spark, left, right, tol):
     )
 )
 def test_timeline_features_match_pandas(spark, events):
-    from bio2bel_spark.operators.temporal import timeline_features
+    from dataops.temporal import timeline_features
 
     rows = [
         (i, BASE + dt.timedelta(seconds=s), k, "t", float(v))
@@ -152,7 +152,7 @@ def test_timeline_features_match_pandas(spark, events):
 def test_interval_join_matches_bruteforce(spark, ivs, pts, bucket_sec):
     """Bucketing is a physical knob: any bucket width must give exactly the
     brute-force containment set (incl. empty/reversed intervals)."""
-    from bio2bel_spark.operators.temporal import interval_join
+    from dataops.temporal import interval_join
 
     iv_rows = [
         (i, k, BASE + dt.timedelta(seconds=s), BASE + dt.timedelta(seconds=s + d))
@@ -196,7 +196,7 @@ def test_interval_join_matches_bruteforce(spark, ivs, pts, bucket_sec):
 def test_interval_overlap_matches_bruteforce(spark, left, right, bucket_sec):
     """Owner-bucket dedup must emit every overlapping pair exactly once for
     any bucket width."""
-    from bio2bel_spark.operators.temporal import interval_overlap_join
+    from dataops.temporal import interval_overlap_join
 
     lr = [
         (i, k, BASE + dt.timedelta(seconds=s), BASE + dt.timedelta(seconds=s + d))

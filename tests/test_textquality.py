@@ -5,7 +5,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from bio2bel_spark.operators import textquality as tq
+from dataops import textquality as tq
 
 
 def test_token_counts(spark):
@@ -81,7 +81,7 @@ def test_fingerprint_properties(spark):
 
 
 def test_tfidf_top_terms_basic(spark):
-    from bio2bel_spark.operators.textquality import tfidf_top_terms
+    from dataops.textquality import tfidf_top_terms
 
     docs = spark.createDataFrame(
         [
@@ -109,7 +109,7 @@ def test_tfidf_top_terms_basic(spark):
 
 
 def test_tfidf_empty_text_yields_no_rows(spark):
-    from bio2bel_spark.operators.textquality import tfidf_top_terms
+    from dataops.textquality import tfidf_top_terms
 
     docs = spark.createDataFrame(
         [(1, "   "), (2, "word")], "doc_id long, text string"
@@ -124,7 +124,7 @@ def test_lm_perplexity_matches_hand_model(spark):
     a row with null scores."""
     import math
 
-    from bio2bel_spark.operators.textquality import lm_perplexity
+    from dataops.textquality import lm_perplexity
 
     docs = spark.createDataFrame(
         [
@@ -154,7 +154,7 @@ def test_lm_perplexity_matches_hand_model(spark):
 
 
 def test_corpus_report_counts(spark):
-    from bio2bel_spark.operators.textquality import corpus_report
+    from dataops.textquality import corpus_report
 
     docs = spark.createDataFrame(
         [
@@ -185,7 +185,7 @@ def test_lm_perplexity_property(spark):
     from hypothesis import HealthCheck, given, settings
     from hypothesis import strategies as st
 
-    from bio2bel_spark.operators.textquality import lm_perplexity
+    from dataops.textquality import lm_perplexity
 
     WORD = st.sampled_from(["a", "bb", "ccc", "dd", "e"])
 
@@ -220,7 +220,7 @@ def test_lm_perplexity_property(spark):
 def test_cooccurrence_pmi_window_and_counts(spark):
     from math import log
 
-    from bio2bel_spark.operators.textquality import cooccurrence_pmi
+    from dataops.textquality import cooccurrence_pmi
 
     # "a b" adjacent twice; "a z" always > 3 tokens apart (never a pair)
     rows = [
@@ -241,7 +241,7 @@ def test_cooccurrence_pmi_window_and_counts(spark):
 
 
 def test_bm25_ranks_term_frequency_and_rarity(spark):
-    from bio2bel_spark.operators.textquality import bm25_scores
+    from dataops.textquality import bm25_scores
 
     rows = [
         (1, "spark spark spark join"),   # heavy on both terms
@@ -259,7 +259,7 @@ def test_bm25_ranks_term_frequency_and_rarity(spark):
 def test_zipf_fit_recovers_planted_slope(spark):
     from math import exp
 
-    from bio2bel_spark.operators.textquality import zipf_fit
+    from dataops.textquality import zipf_fit
 
     # corpus engineered so word w_r appears round(1000 * r^-1) times:
     # the fit must recover slope ~ -1 with near-perfect r2
@@ -278,7 +278,7 @@ def test_bm25_matches_python_model(spark):
     import math
     from collections import Counter
 
-    from bio2bel_spark.operators.textquality import bm25_scores
+    from dataops.textquality import bm25_scores
 
     texts = {
         1: "spark joins data with spark sql engines",

@@ -53,7 +53,7 @@ def _py_dsir(docs, target_rows, buckets=32, alpha=1.0):
 def test_dsir_weights_match_python_model(spark, docs, split):
     from pyspark.sql import functions as F
 
-    from bio2bel_spark.operators.textquality import dsir_log_weights
+    from dataops.textquality import dsir_log_weights
 
     split = min(split, len(docs) - 1)
     df = spark.createDataFrame(

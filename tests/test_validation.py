@@ -4,7 +4,7 @@ from __future__ import annotations
 
 import pytest
 
-from bio2bel_spark.operators.validation import assert_constraints, check_constraints
+from dataops.validation import assert_constraints, check_constraints
 
 
 @pytest.fixture(scope="module")
@@ -83,7 +83,7 @@ def test_unknown_constraint_raises(df):
 
 
 def test_table_diff_counts(spark):
-    from bio2bel_spark.operators.validation import table_diff
+    from dataops.validation import table_diff
 
     old = spark.createDataFrame(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0), (4, None, 40.0)],
@@ -112,7 +112,7 @@ def test_table_diff_counts(spark):
 def test_table_diff_empty_compare_cols_raises(spark):
     import pytest
 
-    from bio2bel_spark.operators.validation import table_diff
+    from dataops.validation import table_diff
 
     df = spark.createDataFrame([(1, "a")], "k long, v string")
     with pytest.raises(ValueError, match="non-empty"):
@@ -122,7 +122,7 @@ def test_table_diff_empty_compare_cols_raises(spark):
 def test_join_size_estimate_matches_actual_join(spark):
     """The estimate must EQUAL the realized join cardinality, and the
     hottest key's contribution must match a hand count."""
-    from bio2bel_spark.operators.validation import join_size_estimate
+    from dataops.validation import join_size_estimate
 
     left = spark.createDataFrame(
         [(k,) for k in [1, 1, 1, 2, 2, 3, 9]], "k long"
