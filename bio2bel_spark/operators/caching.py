@@ -7,30 +7,28 @@ executor memory after the query's action finishes — harmless for one query,
 but a session that runs the whole 89-query registry accumulates dozens of
 dead MEMORY_AND_DISK blocks that squeeze live shuffles at scale.
 
-Every operator persist goes through :func:`tracked_persist`, which records a
-weak reference per session; :func:`release_cached` unpersists everything the
+Every operator persist goes through :func:`tracked_persist`, which records
+the DataFrame per session; :func:`release_cached` unpersists everything the
 library pinned in that session — and ONLY that, so a caller's own ``cache()``
 data survives (unlike ``spark.catalog.clearCache()``). The bench harness
 calls it between queries; long-lived applications should call it whenever a
 query's results have been fully consumed.
 
-Weak references keep the registry from leaking plans: a DataFrame that was
-garbage-collected has already had its blocks released by the ContextCleaner,
-so dead entries are simply dropped.
+The registry holds STRONG references. ``Dataset.persist`` registers the plan
+with Spark's CacheManager, which keeps the cached data until ``unpersist`` is
+called; garbage-collecting the Python DataFrame releases nothing. An op's
+persisted locals go out of scope when it returns, so only the registry can
+still unpersist them.
 """
 
 from __future__ import annotations
-
-import weakref
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 __all__ = ["tracked_persist", "release_cached"]
 
-_REGISTRY: "weakref.WeakKeyDictionary[SparkSession, list]" = (
-    weakref.WeakKeyDictionary()
-)
+_REGISTRY: "dict[SparkSession, list[DataFrame]]" = {}
 
 
 def tracked_persist(
@@ -38,7 +36,7 @@ def tracked_persist(
 ) -> DataFrame:
     """``df.persist(level)``, recorded for later :func:`release_cached`."""
     df = df.persist(level)
-    _REGISTRY.setdefault(df.sparkSession, []).append(weakref.ref(df))
+    _REGISTRY.setdefault(df.sparkSession, []).append(df)
     return df
 
 
@@ -49,12 +47,8 @@ def release_cached(spark: SparkSession) -> int:
     executors drop blocks asynchronously, the plans stay valid (re-running
     them just recomputes).
     """
-    refs = _REGISTRY.pop(spark, [])
     released = 0
-    for ref in refs:
-        df = ref()
-        if df is None:
-            continue
+    for df in _REGISTRY.pop(spark, []):
         try:
             df.unpersist(blocking=False)
             released += 1

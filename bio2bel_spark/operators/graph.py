@@ -14,16 +14,21 @@ Multigraph semantics (SURVEY §7.4 hard part 2): node identity is
 relation + citation + annotations, so duplicate qualified edges are
 well-defined for dedup/counting while plain duplicates keep multiplicity.
 
-Everything here is a pure DataFrame transform — the graph is never collected
-to the driver (the reference holds the whole graph in RAM,
-``compath/manager.py:384-394``; at 100 TB that is not an option).
+Everything here is a DataFrame transform. The one exception is the size
+gate in :func:`min_label_components`: an edge list at or below its
+``driver_threshold`` is collected and resolved by a driver union-find, and
+anything larger stays distributed (the reference holds the whole graph in
+RAM, ``compath/manager.py:384-394``; at 100 TB that is not an option).
+Each traversal exists once: :func:`reachable` is the frontier BFS behind
+:meth:`KnowledgeGraph.descendants` and SPARQL's constant-endpoint closures,
+and :func:`min_label_components` is the components path.
 """
 
 from __future__ import annotations
 
-from typing import Optional
+import warnings
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 NODE_KEY = ["namespace", "identifier"]
@@ -78,8 +83,8 @@ def edge_key(edges: DataFrame) -> DataFrame:
 def _propagate_min_labels(
     sym: DataFrame, labels: DataFrame, max_iterations: int
 ) -> DataFrame:
-    """Min-label propagation core shared by the KG components and the
-    cluster-dedup operator.
+    """Min-label propagation: the distributed tier of
+    :func:`min_label_components`, its only caller.
 
     ``sym`` is a symmetric ``(a, b)`` edge list; ``labels`` is the seed
     ``(node, label)`` assignment. Each iteration is one shuffle (groupBy on
@@ -120,8 +125,6 @@ def _propagate_min_labels(
             break
     else:
         # silent partial labels are worse than a loud approximation
-        import warnings
-
         warnings.warn(
             f"min-label propagation did not converge in {max_iterations} "
             "iterations (graph diameter exceeds the budget); labels may "
@@ -220,6 +223,44 @@ def min_label_components(
     )
     labels = _propagate_min_labels(sym, seeds, max_iterations)
     return labels.select("node", F.col("label").alias("component"))
+
+
+def reachable(
+    hop: DataFrame, starts: DataFrame, max_depth: int
+) -> "tuple[DataFrame, bool]":
+    """Zero-or-more reachability BFS: every ``node`` reached from
+    ``starts(node)`` along ``hop(src, dst)`` in at most ``max_depth``
+    rounds, plus whether the traversal converged within that bound.
+
+    Each round broadcasts the frontier (the small side) into a join
+    against ``hop``, anti-joins the result against the reached set and
+    eagerly checkpoints the delta, so lineage stays O(1) deep and the
+    emptiness test reads materialized data. The reached set is a flat
+    union of pinned deltas, never re-materialized as a whole. Per-round
+    state is the frontier, never the graph's pair closure.
+
+    ``hop`` is not pinned here: a caller that reads it again afterwards
+    checkpoints it first. ``converged`` costs one extra probe round, run
+    only when the bound is hit.
+    """
+
+    def _new(frontier: DataFrame, reached: DataFrame) -> DataFrame:
+        return (
+            hop.join(F.broadcast(frontier.withColumnRenamed("node", "src")), "src")
+            .select(F.col("dst").alias("node"))
+            .distinct()
+            .join(reached, "node", "left_anti")
+        )
+
+    reached = starts.select("node").distinct().localCheckpoint(eager=True)
+    frontier = reached
+    for _ in range(max_depth):
+        new = _new(frontier, reached).localCheckpoint(eager=True)
+        if new.limit(1).count() == 0:
+            return reached, True
+        reached = reached.union(new)
+        frontier = new
+    return reached, _new(frontier, reached).limit(1).count() == 0
 
 
 def pagerank(
@@ -327,17 +368,14 @@ class KnowledgeGraph:
     def summary(self, with_components: bool = True) -> dict:
         """Graph summary stats matching the reference's published metrics
         (``sources/intact.py:174-190``): nodes, edges, citations, components,
-        density. One job per scalar; components via the distributed loop."""
+        density. Edge and citation counts share one aggregate job."""
         n_nodes = self.nodes.count()
-        n_edges = self.edges.count()
-        n_citations = (
-            self.edges.filter(F.col("citation").isNotNull())
-            .select("citation")
-            .distinct()
-            .count()
+        citations = (
+            F.countDistinct("citation")
             if "citation" in self.edges.columns
-            else 0
+            else F.lit(0)
         )
+        n_edges, n_citations = self.edges.agg(F.count(F.lit(1)), citations).first()
         density = (
             float(n_edges) / (n_nodes * (n_nodes - 1)) if n_nodes > 1 else 0.0
         )
@@ -355,39 +393,38 @@ class KnowledgeGraph:
 
     # ------------------------------------------------------ components (G4/G5)
     def connected_components(self, max_iterations: int = 50) -> DataFrame:
-        """Connected components via distributed min-label propagation.
+        """Connected components of the subgraph induced by the declared
+        nodes.
 
-        Returns ``(namespace, identifier, component)`` where ``component`` is
-        the minimum 64-bit node hash in the component.
+        Returns ``(namespace, identifier, component)`` for every declared
+        node, where ``component`` is the minimum 64-bit node hash
+        (``xxhash64`` of ``namespace:identifier``) in the component. An edge
+        counts only when both endpoints are declared nodes; a node with no
+        such edge is its own component.
 
-        Scale notes: each iteration is one shuffle (groupBy on node);
-        convergence is O(graph diameter) — small for interaction networks
-        (the reference's own published stats imply short diameters). Lineage
-        is truncated every iteration with ``localCheckpoint`` so plans don't
-        grow unboundedly. For adversarial long-chain graphs swap in
-        GraphFrames' large-star/small-star; the API here is the stable
-        surface.
+        The hashed pair list goes to :func:`min_label_components`, so a
+        graph at or below its size gate is resolved by one driver
+        union-find, and a larger one by distributed min-label propagation
+        (``max_iterations`` bounds its rounds).
         """
-        nodes = self.nodes.select(
-            node_key_col().alias("node"),
-            F.xxhash64(node_key_col()).alias("label"),
-        ).dropDuplicates(["node"])
-
-        sym = (
-            self.edges.select(
-                F.concat_ws(":", "source_ns", "source_id").alias("a"),
-                F.concat_ws(":", "target_ns", "target_id").alias("b"),
-            )
-            .union(
-                self.edges.select(
-                    F.concat_ws(":", "target_ns", "target_id").alias("a"),
-                    F.concat_ws(":", "source_ns", "source_id").alias("b"),
-                )
-            )
-            .filter(F.col("a") != F.col("b"))
-            .distinct()
+        nodes = (
+            self.nodes.select(node_key_col().alias("node"))
+            .dropDuplicates(["node"])
+            .withColumn("h", F.xxhash64("node"))
         )
-        labels = _propagate_min_labels(sym, nodes, max_iterations)
+        declared = nodes.select("h")
+        pairs = (
+            self.edges.select(
+                F.xxhash64(F.concat_ws(":", "source_ns", "source_id")).alias("a"),
+                F.xxhash64(F.concat_ws(":", "target_ns", "target_id")).alias("b"),
+            )
+            .join(declared.withColumnRenamed("h", "a"), "a", "left_semi")
+            .join(declared.withColumnRenamed("h", "b"), "b", "left_semi")
+        )
+        comp = min_label_components(pairs, "a", "b", max_iterations)
+        labels = nodes.join(
+            comp.withColumnRenamed("node", "h"), "h", "left"
+        ).select("node", F.coalesce("component", "h").alias("component"))
         # identifiers may themselves contain ':' (e.g. 'GO:0001'), so split
         # only on the first separator
         ns = F.substring_index(F.col("node"), ":", 1)
@@ -396,7 +433,7 @@ class KnowledgeGraph:
             F.expr("substring(node, length(substring_index(node, ':', 1)) + 2)").alias(
                 "identifier"
             ),
-            F.col("label").alias("component"),
+            "component",
         )
 
     # ------------------------------------------------------ hierarchy BFS (G5)
@@ -409,31 +446,25 @@ class KnowledgeGraph:
         max_depth: int = 30,
     ) -> DataFrame:
         """Subhierarchy traversal (``pyobo.get_subhierarchy`` usage,
-        reference ``sources/go.py:106-122``): all nodes reachable downward
-        from ``roots(node)`` via ``edges(child, parent)``.
+        reference ``sources/go.py:106-122``): the roots and every node
+        reachable downward from ``roots(node)`` via ``edges(child, parent)``
+        within ``max_depth`` levels, by :func:`reachable`.
 
-        Iterative frontier-expansion joins with checkpointing; the broadcast
-        side is the (small) frontier each round.
+        A hierarchy deeper than ``max_depth`` below a root returns the
+        nodes within the bound and raises a ``RuntimeWarning``.
         """
-        reached = roots.select(F.col("node")).distinct().localCheckpoint(eager=True)
-        frontier = reached
-        for _ in range(max_depth):
-            step = (
-                edges.join(
-                    F.broadcast(frontier.withColumnRenamed("node", parent_col)),
-                    parent_col,
-                )
-                .select(F.col(child_col).alias("node"))
-                .distinct()
+        hop = edges.select(
+            F.col(parent_col).alias("src"), F.col(child_col).alias("dst")
+        )
+        reached, converged = reachable(hop, roots, max_depth)
+        if not converged:
+            warnings.warn(
+                f"descendants did not converge in {max_depth} rounds "
+                "(hierarchy depth exceeds the budget); the reached set is "
+                "truncated — raise max_depth",
+                RuntimeWarning,
+                stacklevel=2,
             )
-            new = step.join(reached, "node", "left_anti").localCheckpoint(eager=True)
-            if new.limit(1).count() == 0:
-                break
-            # both sides already checkpointed: keep the reached set a flat
-            # union of pinned per-round deltas instead of re-materializing
-            # the whole accumulated set every round
-            reached = reached.union(new)
-            frontier = new
         return reached
 
     def degree_distribution(self) -> DataFrame:
@@ -690,8 +721,6 @@ def k_core(
             break
         n_edges = n_next
     else:
-        import warnings
-
         warnings.warn(
             f"k_core did not reach its fixpoint in {max_iterations} rounds; "
             "the defensive degree filter below keeps the output sound "
@@ -764,8 +793,8 @@ def k_hop_profile(
     frontier empties). The per-node expansion-rate feature used for graph
     sampling curricula and influence screens.
 
-    Same bounded-alternating-join shape as :meth:`KnowledgeGraph.descendants`
-    but tracked PER SEED: the frontier table carries ``(seed, node)`` pairs,
+    Same bounded-alternating-join shape as :func:`reachable` but tracked
+    PER SEED: the frontier table carries ``(seed, node)`` pairs,
     one join + one anti-semantics dedup per hop, lineage truncated each
     round. Memory is O(Σ reached) — run it on a bounded seed set, not every
     node of a 100 TB graph.
@@ -806,7 +835,7 @@ def k_hop_profile(
                 F.count(F.lit(1)).alias("n_new_nodes"),
             )
         )
-        # flat union of pinned deltas — see descendants()
+        # flat union of pinned deltas — see reachable()
         visited = visited.unionByName(nxt)
         frontier = nxt
     if not out:

@@ -52,9 +52,10 @@ Supported subset (everything the reference's queries use, plus FILTER)::
   path length doubles per equi-join round, so a depth-D hierarchy
   closes in ``ceil(log2(D))`` rounds, bounded by ``max_path_depth``;
   a constant endpoint instead seeds an O(frontier)-state reachability
-  BFS; evaluation of a closing hop is eager), ``p*`` zero-or-more
-  (the closure plus the zero-length rows: a constant endpoint matches
-  itself, two variables bind every subject/object in the graph),
+  BFS, ``operators.graph.reachable``; evaluation of a closing hop is
+  eager), ``p*`` zero-or-more (the closure plus the zero-length rows:
+  a constant endpoint matches itself, two variables bind every
+  subject/object in the graph),
   ``p?`` zero-or-one, and negated property sets ``!p`` / ``!(a|b)``
   (one NOT-IN scan; composes with ``^`` and length modifiers; inverse
   members inside the set are outside the subset). Only constant
@@ -149,6 +150,8 @@ import threading
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+
+from bio2bel_spark.operators.graph import reachable
 
 __all__ = [
     "sparql_select", "sparql_ask", "sparql_construct", "sparql_describe",
@@ -1921,15 +1924,14 @@ def _compile_triple(triples: DataFrame, s, p, o, g=None) -> DataFrame:
     return out.select(*cols)
 
 
-def _raise_unconverged(frontier: DataFrame, max_depth: int) -> None:
+def _unconverged(max_depth: int) -> SparqlError:
     """Truncating a ``p+`` closure would return silently WRONG results —
     make exhaustion loud instead (the caller raises ``max_path_depth``)."""
-    if frontier.limit(1).count() != 0:
-        raise SparqlError(
-            f"p+ closure did not converge within max_path_depth="
-            f"{max_depth} rounds — the graph has longer paths; raise "
-            "sparql_select(max_path_depth=...)"
-        )
+    return SparqlError(
+        f"p+ closure did not converge within max_path_depth="
+        f"{max_depth} rounds — the graph has longer paths; raise "
+        "sparql_select(max_path_depth=...)"
+    )
 
 
 class _ClosureStats(threading.local):
@@ -1942,7 +1944,6 @@ class _ClosureStats(threading.local):
 
     def __init__(self):
         self.pair_rounds = 0
-        self.seed_rounds = 0
 
     def __getitem__(self, key: str) -> int:
         return getattr(self, key)
@@ -1952,6 +1953,17 @@ class _ClosureStats(threading.local):
 
 
 _closure_stats = _ClosureStats()
+
+
+def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
+    """Relational composition ``a ∘ b`` of two ``(__ps, __po)`` relations:
+    one equi-join on the middle node, set semantics."""
+    return (
+        a.select(F.col("__ps"), F.col("__po").alias("__pm"))
+        .join(b.select(F.col("__ps").alias("__pm"), F.col("__po")), "__pm")
+        .select("__ps", "__po")
+        .distinct()
+    )
 
 
 def _pair_closure(rel: DataFrame, max_depth: int) -> DataFrame:
@@ -1964,7 +1976,7 @@ def _pair_closure(rel: DataFrame, max_depth: int) -> DataFrame:
     depth-1000 hierarchy converges in ~10 equi-join rounds instead of
     1000 (sequential job-launch latency is the dominant cost of deep
     closures on a cluster). The final closure is the same size either
-    way, so unlike the seeded tier (:func:`_closure_from`) nothing is
+    way, so unlike the seeded BFS (:func:`reachable`) nothing is
     saved by keeping per-round state small — halving round count is pure
     win. Each round anti-joins against the known set and checkpoints
     (lineage stays O(1) deep). ``max_depth`` bounds the reachable path
@@ -1979,22 +1991,10 @@ def _pair_closure(rel: DataFrame, max_depth: int) -> DataFrame:
     paths = rel
     rounds = math.ceil(math.log2(max_depth + 1)) if max_depth > 0 else 0
     _closure_stats["pair_rounds"] = 0
-
-    def _compose(p: DataFrame) -> DataFrame:
-        return (
-            p.select(F.col("__ps"), F.col("__po").alias("__pm"))
-            .join(
-                p.select(F.col("__ps").alias("__pm"), F.col("__po")),
-                "__pm",
-            )
-            .select("__ps", "__po")
-            .distinct()
-        )
-
     for _ in range(rounds):
         _closure_stats["pair_rounds"] += 1
         new = (
-            _compose(paths)
+            _compose(paths, paths)
             .join(paths, ["__ps", "__po"], "left_anti")
             .localCheckpoint(eager=True)
         )
@@ -2007,116 +2007,10 @@ def _pair_closure(rel: DataFrame, max_depth: int) -> DataFrame:
         paths = paths.union(new)
     # one more probe round decides converged-exactly-at-the-bound vs not
     _closure_stats["pair_rounds"] += 1
-    final = _compose(paths).join(paths, ["__ps", "__po"], "left_anti")
-    _raise_unconverged(final, max_depth)
+    final = _compose(paths, paths).join(paths, ["__ps", "__po"], "left_anti")
+    if final.limit(1).count() != 0:
+        raise _unconverged(max_depth)
     return paths
-
-
-def _closure_from(rel: DataFrame, start: str, max_depth: int) -> DataFrame:
-    """``(start, reached)`` pairs of the one-or-more closure FROM a
-    constant subject — plain reachability BFS, so per-round state is the
-    start node's frontier, never the whole graph's pair closure (the
-    kg_descendants shape; the scale answer for ``<node> p+ ?o``).
-
-    Deliberately NOT pointer doubling: doubling accelerates by squaring
-    the RELATION, i.e. materializing the graph's bounded pair closure —
-    the exact O(nodes × depth) state this seeded tier exists to avoid.
-    From a single seed, information moves one hop per join against the
-    original relation, so O(depth) rounds with an O(frontier)-sized
-    state is the scalable trade; a caller who prefers log rounds at
-    pair-closure cost can leave the endpoint unbound and filter."""
-    # pin the hop relation once — every BFS round joins against it, and
-    # without the checkpoint each round would re-execute the full
-    # per-predicate scan/union lineage (the _pair_closure discipline)
-    rel = rel.distinct().localCheckpoint(eager=True)
-    reached = (
-        rel.filter(F.col("__ps") == F.lit(start))
-        .select(F.col("__po").alias("__n"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = reached
-    _closure_stats["seed_rounds"] = 0
-    for _ in range(max_depth):
-        _closure_stats["seed_rounds"] += 1
-        step = (
-            frontier.join(
-                rel.select(F.col("__ps").alias("__n"), F.col("__po")), "__n"
-            )
-            .select(F.col("__po").alias("__n"))
-            .distinct()
-        )
-        new = step.join(reached, "__n", "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new.limit(1).count() == 0:
-            return reached.select(
-                F.lit(start).alias("__ps"), F.col("__n").alias("__po")
-            )
-        # no re-checkpoint of the union: both sides are checkpointed, so
-        # the accumulated reached set stays a flat union of O(depth)
-        # pinned deltas (saves one materialization job per BFS round)
-        reached = reached.union(new)
-        frontier = new
-    final = (
-        frontier.join(
-            rel.select(F.col("__ps").alias("__n"), F.col("__po")), "__n"
-        )
-        .select(F.col("__po").alias("__n"))
-        .join(reached, "__n", "left_anti")
-    )
-    _raise_unconverged(final, max_depth)
-    return reached.select(
-        F.lit(start).alias("__ps"), F.col("__n").alias("__po")
-    )
-
-
-def _closure_from_multi(
-    rel: DataFrame, starts: DataFrame, max_depth: int
-) -> DataFrame:
-    """Reachability BFS from a SET of seed nodes — the constant-endpoint
-    closure inside ``GRAPH ?var``, where the seed exists once per named
-    graph (``starts``: one ``__ps`` row per graph-scoped seed). Per-round
-    state is (seed, frontier) pairs — O(seeds × frontier), never the
-    graph's all-pairs closure; same checkpoint/convergence discipline as
-    :func:`_closure_from`."""
-    rel = rel.distinct().localCheckpoint(eager=True)
-    starts = starts.distinct()
-    reached = (
-        rel.join(starts, "__ps")
-        .select("__ps", F.col("__po").alias("__n"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    frontier = reached
-    _closure_stats["seed_rounds"] = 0
-    for _ in range(max_depth):
-        _closure_stats["seed_rounds"] += 1
-        step = (
-            frontier.join(
-                rel.select(F.col("__ps").alias("__n"), F.col("__po")),
-                "__n",
-            )
-            .select("__ps", F.col("__po").alias("__n"))
-            .distinct()
-        )
-        new = step.join(reached, ["__ps", "__n"], "left_anti").localCheckpoint(
-            eager=True
-        )
-        if new.limit(1).count() == 0:
-            return reached.select("__ps", F.col("__n").alias("__po"))
-        # flat union of pinned deltas — see _closure_from
-        reached = reached.union(new)
-        frontier = new
-    final = (
-        frontier.join(
-            rel.select(F.col("__ps").alias("__n"), F.col("__po")), "__n"
-        )
-        .select("__ps", F.col("__po").alias("__n"))
-        .join(reached, ["__ps", "__n"], "left_anti")
-    )
-    _raise_unconverged(final, max_depth)
-    return reached.select("__ps", F.col("__n").alias("__po"))
 
 
 def _zero_length_rows(triples: DataFrame, s, o) -> DataFrame:
@@ -2195,18 +2089,6 @@ def _range_paths(
     Set semantics throughout (distinct after the final union — powers
     of different lengths can connect the same pair)."""
     rel = rel.distinct()
-
-    def _compose(a: DataFrame, b: DataFrame) -> DataFrame:
-        return (
-            a.select(F.col("__ps"), F.col("__po").alias("__pm"))
-            .join(
-                b.select(F.col("__ps").alias("__pm"), F.col("__po")),
-                "__pm",
-            )
-            .select("__ps", "__po")
-            .distinct()
-        )
-
     if hi is None:
         if lo > max_depth:
             # the floor shift below is lo-1 chained equi-joins built on
@@ -2266,13 +2148,22 @@ def _compile_pathhop(
     term``) — the closure algorithms run unchanged and compute every
     graph's closure in the same distributed joins; the endpoints (and
     the graph variable) decode back out of the composite at binding
-    time. Constant endpoints seed the multi-source BFS (one seed per
-    named graph) instead of the single-seed form."""
+    time. A constant endpoint seeds one pooled BFS from its one-hop
+    successors in every named graph: graph-scoped nodes of different
+    graphs never reach each other, so each reached node's seed is its
+    own graph prefix plus the constant."""
     scoped = gvar is not None
 
     def _node(col: str) -> Column:
         c = F.col(col)
         return F.concat(F.col("g"), F.lit(_GSEP), c) if scoped else c
+
+    def _dec(col: str) -> Column:
+        # the term part of a graph-scoped composite node
+        c = F.col(col)
+        return c.substr(
+            F.length(F.substring_index(c, _GSEP, 1)) + 2, F.length(c)
+        )
 
     if seg.get("negated"):
         # negated property set: ONE scan keeping every predicate outside
@@ -2304,12 +2195,31 @@ def _compile_pathhop(
         )
 
     def _seeded(r: DataFrame, const: str) -> DataFrame:
-        if not scoped:
-            return _closure_from(r, const, max_path_depth)
-        seeds = triples.select("g").distinct().select(
-            F.concat(F.col("g"), F.lit(_GSEP), F.lit(const)).alias("__ps")
+        """``(const, reached)`` pairs of the one-or-more closure FROM a
+        constant subject: a BFS whose per-round state is the frontier,
+        never the relation's pair closure (pointer doubling would
+        materialize exactly that O(nodes × depth) state)."""
+        # pin the hop relation once: every BFS round joins against it
+        r = r.distinct().localCheckpoint(eager=True)
+        subject = _dec("__ps") if scoped else F.col("__ps")
+        starts = r.filter(subject == F.lit(const)).select(
+            F.col("__po").alias("node")
         )
-        return _closure_from_multi(r, seeds, max_path_depth)
+        reached, converged = reachable(
+            r.select(F.col("__ps").alias("src"), F.col("__po").alias("dst")),
+            starts,
+            max_path_depth,
+        )
+        if not converged:
+            raise _unconverged(max_path_depth)
+        seed = (
+            F.concat(
+                F.substring_index("node", _GSEP, 1), F.lit(_GSEP), F.lit(const)
+            )
+            if scoped
+            else F.lit(const)
+        )
+        return reached.select(seed.alias("__ps"), F.col("node").alias("__po"))
 
     rng = seg.get("range")
     if rng is not None and eager:
@@ -2352,13 +2262,6 @@ def _compile_pathhop(
         # variable (both endpoints carry the same graph by
         # construction), remainder -> the endpoint term
         gcol = F.substring_index(F.col("__ps"), _GSEP, 1)
-
-        def _dec(col: str) -> Column:
-            c = F.col(col)
-            return c.substr(
-                F.length(F.substring_index(c, _GSEP, 1)) + 2, F.length(c)
-            )
-
         cols, filters = [gcol.alias(gvar)], []
         seen: dict = {gvar: gcol}
         terms = ((_dec("__ps"), s), (_dec("__po"), o))

@@ -42,6 +42,18 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture(autouse=True)
+def _release_operator_persists():
+    """Start every test with an empty persist registry: ``tracked_persist``
+    holds its DataFrames until ``release_cached``, so release what the
+    previous test's operators pinned."""
+    yield
+    from bio2bel_spark.operators import caching
+
+    for session in list(caching._REGISTRY):
+        caching.release_cached(session)
+
+
 @pytest.fixture()
 def warehouse(tmp_path):
     return str(tmp_path / "warehouse")

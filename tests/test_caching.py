@@ -42,3 +42,30 @@ def test_operator_persists_are_tracked(spark, monkeypatch):
     assert len(pinned) == 2
     assert release_cached(spark) == 2
     assert not any(df.storageLevel.useMemory for df in pinned)
+
+
+def test_release_cached_empties_the_jvm_cache(spark):
+    """Persists an op made on locals that died when it returned are still
+    unpersisted: the registry holds them until release."""
+    from bio2bel_spark.operators.graph import KnowledgeGraph, pagerank
+
+    release_cached(spark)
+    spark.catalog.clearCache()
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    edges = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 1), (3, 4)], "src long, dst long"
+    )
+    pagerank(edges, iterations=2).count()
+    kg = KnowledgeGraph(
+        spark.createDataFrame(
+            [("x", "1"), ("x", "2")], "namespace string, identifier string"
+        ),
+        spark.createDataFrame(
+            [("x", "1", "x", "2")],
+            "source_ns string, source_id string, target_ns string, target_id string",
+        ),
+    )
+    kg.edge_list().collect()
+    assert not cache.isEmpty()
+    assert release_cached(spark) == 3
+    assert cache.isEmpty()

@@ -189,7 +189,11 @@ def test_components_long_chain_converges(spark):
 
 
 def test_components_nonconvergence_warns(spark):
-    from bio2bel_spark.operators.graph import KnowledgeGraph
+    """Only the distributed tier of min_label_components can truncate; a
+    10-node chain under the size gate is resolved exactly by the driver
+    union-find even with a 2-round budget."""
+    from bio2bel_spark.operators.graph import KnowledgeGraph, min_label_components
+    import pyspark.sql.functions as F
     import warnings
 
     edges = spark.createDataFrame(
@@ -199,10 +203,74 @@ def test_components_nonconvergence_warns(spark):
     )
     kg = KnowledgeGraph(None, edges)
     kg.nodes = kg.induced_nodes()
+    comp = kg.connected_components(max_iterations=2)
+    assert comp.select("component").distinct().count() == 1
+    pairs = edges.select(F.col("source_id").alias("src"), F.col("target_id").alias("dst"))
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        kg.connected_components(max_iterations=2)
+        min_label_components(pairs, driver_threshold=0, max_iterations=2).collect()
     assert any("did not converge" in str(w.message) for w in caught)
+
+
+def test_components_tiers_agree(spark, kg, monkeypatch):
+    """connected_components returns the same rows whichever tier of
+    min_label_components resolves it."""
+    from bio2bel_spark.operators import graph
+
+    def rows(g):
+        return sorted(tuple(r) for r in g.connected_components().collect())
+
+    full = KnowledgeGraph(kg.induced_nodes(), kg.edges)
+    driver = rows(kg), rows(full)
+    real = graph.min_label_components
+    monkeypatch.setattr(
+        graph,
+        "min_label_components",
+        lambda *a, **k: real(*a, **{**k, "driver_threshold": 0}),
+    )
+    assert (rows(kg), rows(full)) == driver
+
+
+def test_components_ignore_undeclared_endpoints(spark):
+    """An edge counts only when both endpoints are declared nodes: a and c
+    linked only through the undeclared b stay apart."""
+    nodes = _nodes(spark, [("Protein", "x", "a", "A"), ("Protein", "x", "c", "C")])
+    edges = _edges(
+        spark,
+        [
+            ("x", "a", "increases", "x", "b", None, None, None, None, None),
+            ("x", "b", "increases", "x", "c", None, None, None, None, None),
+        ],
+    )
+    rows = KnowledgeGraph(nodes, edges).connected_components().collect()
+    by_node = {r["identifier"]: r["component"] for r in rows}
+    assert set(by_node) == {"a", "c"}
+    assert by_node["a"] != by_node["c"]
+
+
+def _chain(spark, depth):
+    return spark.createDataFrame(
+        [(str(i + 1), "is_a", str(i)) for i in range(depth)],
+        "child string, relation string, parent string",
+    )
+
+
+def test_descendants_truncation_warns(spark):
+    """A hierarchy deeper than max_depth=30 returns the 31 nodes within
+    the bound and says so; one exactly 30 deep converges silently."""
+    import warnings
+
+    roots = spark.createDataFrame([("0",)], "node string")
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        reached = KnowledgeGraph.descendants(_chain(spark, 39), roots).collect()
+    assert len(reached) == 31
+    assert any("did not converge" in str(w.message) for w in caught)
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        reached = KnowledgeGraph.descendants(_chain(spark, 30), roots).collect()
+    assert len(reached) == 31
+    assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
 
 
 def test_pagerank_matches_power_iteration_model(spark):

@@ -466,3 +466,31 @@ def test_subquery_limit_inside_graph_var_demands_order(quads):
             "{ SELECT ?s WHERE { ?s ex:score ?v } LIMIT 1 } } }",
             prefixes=PFX,
         )
+
+
+def test_const_endpoint_closures_stay_per_graph(spark):
+    """Both named graphs have under edges from <x>, one with a cycle back
+    to <x>: the pooled BFS from the graph-scoped seeds must return each
+    graph's own closure, in both directions, and never cross graphs
+    through a term the two share (y)."""
+    rows = [
+        (G1, EX + "x", EX + "under", EX + "y"),
+        (G1, EX + "y", EX + "under", EX + "z"),
+        (G1, EX + "z", EX + "under", EX + "x"),
+        (G2, EX + "x", EX + "under", EX + "w"),
+        (G2, EX + "w", EX + "under", EX + "v"),
+        (G2, EX + "u", EX + "under", EX + "x"),
+        (G2, EX + "y", EX + "under", EX + "q"),
+    ]
+    quads = spark.createDataFrame(rows, "g string, s string, p string, o string")
+
+    def run(query):
+        got = sparql_select(quads, query, prefixes=PFX).collect()
+        return sorted((r.g, r.y.rsplit("/", 1)[-1]) for r in got)
+
+    assert run(
+        "SELECT ?g ?y WHERE { GRAPH ?g { <http://ex.org/x> ex:under+ ?y } }"
+    ) == [(G1, "x"), (G1, "y"), (G1, "z"), (G2, "v"), (G2, "w")]
+    assert run(
+        "SELECT ?g ?y WHERE { GRAPH ?g { ?y ex:under+ <http://ex.org/x> } }"
+    ) == [(G1, "x"), (G1, "y"), (G1, "z"), (G2, "u")]
