@@ -7,26 +7,37 @@ Replaces the reference's SQLAlchemy engine/metadata layer:
   parquet directory management under a warehouse root;
 * the append-only ``Action`` provenance table
   (``/root/reference/src/bio2bel/models.py:40-133``) becomes an append-mode
-  parquet table with the same ``(resource, action, created)`` shape;
+  parquet table with the same ``(resource, action, created)`` shape, one
+  small file per event appended from the driver with pyarrow (no Spark job);
 * ``Action.ls`` ordering and "latest action per resource" (docstring pattern at
-  ``models.py:16``) become ``orderBy(desc)`` and a ``row_number`` window.
+  ``models.py:16``) become ``orderBy(desc)`` and a ``row_number`` window;
+* ``Action.count`` and per-table row counts are read from the parquet
+  footers of the table's data files (no Spark job).
 
 Scale notes
 -----------
 Tables are plain parquet directories: writes are distributed, reads get
-predicate pushdown + column pruning for free, and the same layout works on
-HDFS/S3 paths. Partition columns can be supplied per table (e.g. partition a
-100 TB edges table by source prefix). The provenance table is tiny and
-append-only; appends produce one small file per event, which is fine at any
-scale (compaction is a maintenance job, not a correctness concern).
+predicate pushdown + column pruning for free. Partition columns can be
+supplied per table (e.g. partition a 100 TB edges table by source prefix).
+The warehouse is a local or NFS directory: ``__init__`` creates it with
+``os.makedirs``, and provenance appends, footer row counts and
+``table_stats``/``compact_table`` list it with ``os``. An HDFS/S3 warehouse
+would need those listings and the event append moved to the Hadoop
+FileSystem API. The provenance table is tiny and append-only; one small
+file per event is fine at any scale (compaction is a maintenance job, not a
+correctness concern).
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import uuid
+from datetime import datetime, timezone
 from typing import Iterable, Optional
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -45,6 +56,30 @@ ACTION_SCHEMA = T.StructType(
         T.StructField("created", T.TimestampType(), False),
     ]
 )
+
+#: ``ACTION_SCHEMA`` as written by ``store_action``. ``created`` must be
+#: UTC-adjusted: a naive arrow timestamp reads back in Spark as
+#: ``timestamp_ntz``, while this one reads back as ``timestamp``, like the
+#: INT96 events older logs hold.
+_ACTION_ARROW_SCHEMA = pa.schema(
+    [
+        pa.field("resource", pa.string(), False),
+        pa.field("action", pa.string(), False),
+        pa.field("created", pa.timestamp("us", tz="UTC"), False),
+    ]
+)
+
+
+def _hidden(name: str) -> bool:
+    """Spark's file-index rule: names starting with ``.`` (checksums,
+    staging files) or ``_`` (``_SUCCESS``, ``_temporary``) are not data,
+    except ``_``-names holding ``=``, which are partition directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def footer_rows(files: Iterable[str]) -> int:
+    """Total row count of parquet files, read from their footers."""
+    return sum(pq.read_metadata(f).num_rows for f in files)
 
 
 class Catalog:
@@ -84,6 +119,17 @@ class Catalog:
     def read_table(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self.table_path(name))
 
+    def data_files(self, name: str) -> list[str]:
+        """Paths of the files a Spark read of the table scans, sorted; empty
+        for a missing table. Hidden names (see ``_hidden``) are skipped at
+        any depth, so a crashed write's ``_temporary/`` files and
+        in-progress provenance events are not listed."""
+        out = []
+        for dp, dirs, files in os.walk(self.table_path(name)):
+            dirs[:] = [d for d in dirs if not _hidden(d)]
+            out.extend(os.path.join(dp, f) for f in files if not _hidden(f))
+        return sorted(out)
+
     def compact_table(
         self,
         name: str,
@@ -107,23 +153,17 @@ class Catalog:
         import math
 
         path = self.table_path(name)
+        files = self.data_files(name)
         # a hive-partitioned layout (key=value dirs) must not be flattened:
         # rewriting it as plain files silently destroys partition pruning
         # for every downstream scan — refuse loudly; compact per-partition
-        for dp, dirs, _ in os.walk(path):
-            if any("=" in d for d in dirs):
-                raise ValueError(
-                    f"compact_table: {name!r} is hive-partitioned; a flat "
-                    "rewrite would drop the partition layout (and partition "
-                    "pruning with it). Compact each partition directory as "
-                    "its own table instead."
-                )
-        files = [
-            os.path.join(dp, f)
-            for dp, _, fs in os.walk(path)
-            for f in fs
-            if f.endswith(".parquet")
-        ]
+        if any(os.path.dirname(f) != path for f in files):
+            raise ValueError(
+                f"compact_table: {name!r} is hive-partitioned; a flat "
+                "rewrite would drop the partition layout (and partition "
+                "pruning with it). Compact each partition directory as "
+                "its own table instead."
+            )
         if len(files) < min_files:
             return len(files)
         total_bytes = sum(os.path.getsize(f) for f in files)
@@ -138,9 +178,7 @@ class Catalog:
         shutil.rmtree(path)
         os.rename(staging, path)
         self.store_action(name, "compact")
-        return len(
-            [f for f in os.listdir(path) if f.endswith(".parquet")]
-        )
+        return len(self.data_files(name))
 
     def expire_partitions(
         self,
@@ -244,25 +282,16 @@ class Catalog:
         sums), so profiling cost is a single pass regardless of column
         count.
 
-        File count/bytes are listed via ``os.walk``, which only sees LOCAL
-        paths — this Catalog's contract is a local/NFS warehouse dir (see
-        ``__init__``). On an object-store or HDFS warehouse the two file
-        metrics report 0 (row count and null fractions stay correct); a
-        cluster deployment would swap the listing for the Hadoop
-        FileSystem API (``jvm.org.apache.hadoop.fs``).
+        File count/bytes cover the files a Spark read scans
+        (``data_files``), listed with ``os.walk`` — this Catalog's contract
+        is a local/NFS warehouse dir (see ``__init__``). On an object-store
+        or HDFS warehouse the two file metrics report 0 (row count and null
+        fractions stay correct); a cluster deployment would swap the listing
+        for the Hadoop FileSystem API (``jvm.org.apache.hadoop.fs``).
         """
-        import os as _os
-
-        from pyspark.sql import functions as F
-
         df = self.read_table(name)
-        path = self.table_path(name)
-        n_files = n_bytes = 0
-        for root, _dirs, files in _os.walk(path):
-            for f in files:
-                if f.endswith(".parquet"):
-                    n_files += 1
-                    n_bytes += _os.path.getsize(_os.path.join(root, f))
+        files = self.data_files(name)
+        n_files, n_bytes = len(files), sum(os.path.getsize(f) for f in files)
         aggs = [F.count(F.lit(1)).alias("n_rows")] + [
             F.sum(F.col(c).isNull().cast("long")).alias(f"__nn_{i}")
             for i, c in enumerate(df.columns)
@@ -299,11 +328,23 @@ class Catalog:
 
     # -------------------------------------------------------------- provenance
     def store_action(self, resource: str, action: str) -> None:
-        """Append one provenance event (reference: ``models.py:70-113``)."""
-        row_df = self.spark.createDataFrame(
-            [(resource, action)], schema="resource string, action string"
-        ).withColumn("created", F.current_timestamp())
-        row_df.coalesce(1).write.mode("append").parquet(self.table_path(ACTIONS_TABLE))
+        """Append one provenance event (reference: ``models.py:70-113``).
+
+        The one-row file is written from the driver under a hidden staging
+        name, then renamed into place, so Spark reads and ``table_exists``
+        never see a half-written event."""
+        path = self.table_path(ACTIONS_TABLE)
+        os.makedirs(path, exist_ok=True)
+        event = pa.table(
+            [[resource], [action], [datetime.now(timezone.utc)]],
+            schema=_ACTION_ARROW_SCHEMA,
+        )
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        staging = os.path.join(path, f".{name}.inprogress")
+        # column statistics of a one-row file prune nothing; without them
+        # and the arrow schema an event is ~620 B (Spark's: ~1 KB + .crc)
+        pq.write_table(event, staging, store_schema=False, write_statistics=False)
+        os.rename(staging, os.path.join(path, name))
 
     def actions(self) -> DataFrame:
         """All provenance events, newest first (``Action.ls``, ``models.py:116-123``)."""
@@ -312,10 +353,8 @@ class Catalog:
         return self.read_table(ACTIONS_TABLE).orderBy(F.desc("created"))
 
     def count_actions(self) -> int:
-        """``Action.count`` (``models.py:125-133``)."""
-        if not self.table_exists(ACTIONS_TABLE):
-            return 0
-        return self.read_table(ACTIONS_TABLE).count()
+        """``Action.count`` (``models.py:125-133``), from the events' footers."""
+        return footer_rows(self.data_files(ACTIONS_TABLE))
 
     def latest_actions(self) -> DataFrame:
         """Latest event per resource — the ``order_by(desc).first()`` docstring

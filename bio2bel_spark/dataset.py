@@ -17,11 +17,14 @@ Re-expresses the reference's manager stack
   catalog/table operations;
 * the namespace-style incremental upsert (``namespace_manager.py:262-296``)
   becomes a left-anti-join append, one distributed plan instead of a
-  driver-side id-set scan.
+  driver-side id-set scan;
+* row counts (``count_table``, ``summarize``) come from parquet footers, so
+  this bookkeeping starts no Spark job.
 """
 
 from __future__ import annotations
 
+import os
 from abc import abstractmethod
 from typing import Optional
 
@@ -33,6 +36,7 @@ from bio2bel_spark.catalog import (
     ACTION_POPULATE,
     ACTION_POPULATE_FAILED,
     Catalog,
+    footer_rows,
 )
 from bio2bel_spark.exc import Bio2BELMissingNameError, Bio2BELModuleCaseError
 
@@ -152,11 +156,14 @@ class Dataset:
         )
 
     def count_table(self, logical: str) -> int:
-        """``_count_model`` (``abstract_manager.py:257-262``)."""
-        return self.table(logical).count()
+        """``_count_model`` (``abstract_manager.py:257-262``): the sum of the
+        table's parquet footer row counts, no Spark job; 0 for a table that
+        was never written."""
+        return footer_rows(self.catalog.data_files(self.table_name(logical)))
 
     def summarize(self) -> dict[str, int]:
-        """Counts per table (``abstract_manager.py:223-225``)."""
+        """Counts per table (``abstract_manager.py:223-225``), from footers
+        like ``count_table``."""
         if not self.is_populated():
             return {logical: 0 for logical in self.tables}
         return {logical: self.count_table(logical) for logical in self.tables}
@@ -172,19 +179,35 @@ class Dataset:
         """Insert-if-absent by key: the ``_update_namespace`` loop
         (``namespace_manager.py:262-296``) as one left-anti-join append.
 
-        Returns the number of rows added. At scale this is a shuffle on
-        ``key`` only for the *new* side when the existing side is large; for
-        small deltas Catalyst broadcasts the delta automatically.
+        Returns the number of rows added, read from the footers of the files
+        the append created (found by listing the table before and after it,
+        so concurrent writers to the same table are not supported). The
+        append is the only Spark job: no separate ``count()``. Spark writes
+        a 0-row file when the anti-join is empty; such files are deleted, so
+        a no-op upsert leaves the table's files as they were. At scale the
+        join is a shuffle on ``key`` only for the *new* side when the
+        existing side is large; for small deltas Catalyst broadcasts the
+        delta automatically.
         """
         name = self.table_name(logical)
+        partition_by = self.partitioning.get(logical)
         if not self.catalog.table_exists(name):
-            self.catalog.write_table(new_df, name)
-            return new_df.count()
+            self.catalog.write_table(new_df, name, partition_by=partition_by)
+            return footer_rows(self.catalog.data_files(name))
         existing = self.catalog.read_table(name)
-        to_add = new_df.join(existing.select(key), on=key, how="left_anti")
-        added = to_add.count()
-        if added:
-            # align column order with the stored table before appending
-            to_add = to_add.select(*existing.columns)
-            self.catalog.write_table(to_add, name, mode="append")
+        # align column order with the stored table before appending
+        to_add = new_df.join(existing.select(key), on=key, how="left_anti").select(
+            *existing.columns
+        )
+        before = set(self.catalog.data_files(name))
+        self.catalog.write_table(to_add, name, mode="append", partition_by=partition_by)
+        added = 0
+        for f in set(self.catalog.data_files(name)) - before:
+            rows = footer_rows([f])
+            added += rows
+            if not rows:
+                os.remove(f)
+                crc = os.path.join(os.path.dirname(f), f".{os.path.basename(f)}.crc")
+                if os.path.exists(crc):
+                    os.remove(crc)
         return added

@@ -2,9 +2,11 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
-from bio2bel_spark.catalog import ACTION_DROP, ACTION_POPULATE, Catalog
+from bio2bel_spark.catalog import ACTION_DROP, ACTION_POPULATE, ACTIONS_TABLE, Catalog
 
 
 def test_write_read_roundtrip(spark, warehouse):
@@ -44,6 +46,48 @@ def test_latest_actions_window(spark, warehouse):
     cat.store_action("test", ACTION_DROP)
     latest = {r["resource"]: r["action"] for r in cat.latest_actions().collect()}
     assert latest == {"test": ACTION_DROP}
+
+
+def test_actions_read_spark_and_driver_events(spark, warehouse):
+    """A log holding an event written by a Spark append (older logs) and
+    events appended from the driver reads as one table, ``created`` typed
+    ``timestamp``; a leftover staging file is invisible."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.types import TimestampType
+
+    cat = Catalog(spark, warehouse)
+    spark.createDataFrame(
+        [("old", ACTION_POPULATE)], "resource string, action string"
+    ).withColumn("created", F.current_timestamp()).coalesce(1).write.mode(
+        "append"
+    ).parquet(cat.table_path(ACTIONS_TABLE))
+    cat.store_action("a", ACTION_POPULATE)
+    cat.store_action("a", ACTION_DROP)
+    cat.store_action("b", ACTION_POPULATE)
+
+    def check():
+        acts = cat.actions()
+        assert acts.schema["created"].dataType == TimestampType()
+        assert [(r["resource"], r["action"]) for r in acts.collect()] == [
+            ("b", ACTION_POPULATE), ("a", ACTION_DROP),
+            ("a", ACTION_POPULATE), ("old", ACTION_POPULATE),
+        ]
+        assert {r["resource"]: r["action"] for r in cat.latest_actions().collect()} == {
+            "old": ACTION_POPULATE, "a": ACTION_DROP, "b": ACTION_POPULATE,
+        }
+        assert cat.count_actions() == cat.read_table(ACTIONS_TABLE).count() == 4
+
+    check()
+    # an append that died between write and rename leaves its staging file
+    with open(os.path.join(cat.table_path(ACTIONS_TABLE), ".part-x.parquet.inprogress"), "wb") as f:
+        f.write(b"PAR1 half-written")
+    check()
+    empty = Catalog(spark, warehouse + "-empty")
+    os.makedirs(empty.table_path(ACTIONS_TABLE))
+    with open(os.path.join(empty.table_path(ACTIONS_TABLE), ".part-y.parquet.inprogress"), "wb") as f:
+        f.write(b"PAR1 half-written")
+    assert not empty.table_exists(ACTIONS_TABLE)
+    assert empty.count_actions() == empty.actions().count() == 0
 
 
 def test_compact_table_preserves_content(spark, tmp_path):

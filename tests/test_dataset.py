@@ -4,10 +4,14 @@ Mirrors the reference's abstract-contract and populate/provenance tests
 (``/root/reference/tests/test_manager.py:18-156``,
 ``tests/test_actions.py:14-51``, ``tests/constants.py:17-97``): 5-row
 synthetic model, contract violations raise, populate/drop write exactly one
-provenance row each, upsert adds only new keys.
+provenance row each, upsert adds only new keys, row counts read from footers
+agree with Spark and start no Spark job.
 """
 
 from __future__ import annotations
+
+import os
+import time
 
 import pytest
 
@@ -100,15 +104,75 @@ def test_populate_failed_provenance(spark, warehouse):
 
 def test_upsert_adds_only_new(spark, warehouse):
     """Namespace-update semantics: +4 on overlapping delta
-    (reference tests/test_manager_namespace.py:112-128)."""
-    ds = TestDataset(spark, warehouse)
-    ds.populate()
+    (reference tests/test_manager_namespace.py:112-128), on a plain and on a
+    partitioned table."""
     delta = spark.createDataFrame(
         [(i, f"MODEL:{i}", str(i) * 5) for i in range(3, 10)],
         "id long, test_id string, name string",
     )
-    added = ds.upsert("model", delta, key="test_id")
-    assert added == 5  # ids 5..9 are new; 3,4 already present
-    assert ds.count_table("model") == 10
-    # idempotent
-    assert ds.upsert("model", delta, key="test_id") == 0
+    for k, partitioning in enumerate([{}, {"model": ["name"]}]):
+        ds = TestDataset(spark, f"{warehouse}-{k}")
+        ds.partitioning = partitioning
+        ds.populate()
+        assert ds.count_table("model") == ds.table("model").count() == 5
+        added = ds.upsert("model", delta, key="test_id")
+        assert added == 5  # ids 5..9 are new; 3,4 already present
+        assert ds.count_table("model") == ds.table("model").count() == 10
+        # idempotent, and the no-op leaves no (empty) file behind
+        files = _tree(ds.catalog.table_path(ds.table_name("model")))
+        assert ds.upsert("model", delta, key="test_id") == 0
+        assert _tree(ds.catalog.table_path(ds.table_name("model"))) == files
+        # into a table that does not exist yet: every row is added
+        fresh = TestDataset(spark, f"{warehouse}-{k}-fresh")
+        fresh.partitioning = partitioning
+        assert fresh.upsert("model", delta, key="test_id") == 7
+        assert fresh.count_table("model") == fresh.table("model").count() == 7
+
+
+def _tree(path):
+    return sorted(os.path.relpath(os.path.join(d, f), path)
+                  for d, _, fs in os.walk(path) for f in fs)
+
+
+def test_counts_skip_files_spark_does_not_read(spark, warehouse):
+    """A crashed write's ``_temporary/`` output holds parquet files Spark
+    never scans; footer counts and ``table_stats`` must skip them too."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    ds = TestDataset(spark, warehouse)
+    ds.populate()
+    name = ds.table_name("model")
+    stray = os.path.join(ds.catalog.table_path(name), "_temporary", "0")
+    os.makedirs(stray)
+    pq.write_table(pa.table({"id": [7, 8], "test_id": ["X:7", "X:8"], "name": ["7", "8"]}),
+                   os.path.join(stray, "part-x.parquet"))
+    df = ds.table("model")
+    stats = {r["metric"]: r["value"] for r in ds.catalog.table_stats(name).collect()}
+    assert ds.count_table("model") == ds.summarize()["model"] == df.count() == 5
+    assert stats["n_rows"] == 5
+    assert stats["n_files"] == len(df.inputFiles())
+
+
+def test_bookkeeping_starts_no_spark_job(spark, warehouse):
+    """Provenance appends and row counts are driver-side: no Spark job."""
+    ds = TestDataset(spark, warehouse)
+    ds.populate()
+    sc = spark.sparkContext
+    try:
+        sc.setJobGroup("bookkeeping", "no jobs expected")
+        ds.catalog.store_action("test", ACTION_POPULATE)
+        assert ds.catalog.count_actions() == 2
+        assert ds.count_table("model") == 5
+        assert ds.summarize() == {"model": 5}
+        # the status tracker is fed asynchronously, in job order: once a
+        # later group's job is visible, any job of the first group would be
+        sc.setJobGroup("fence", "one job")
+        spark.range(1).count()
+        deadline = time.time() + 30
+        while not sc.statusTracker().getJobIdsForGroup("fence") and time.time() < deadline:
+            time.sleep(0.05)
+        assert sc.statusTracker().getJobIdsForGroup("fence")
+        assert sc.statusTracker().getJobIdsForGroup("bookkeeping") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
