@@ -145,11 +145,13 @@ class Catalog:
         overhead (one task per tiny file) plus footer reads. Sizing from
         the actual on-disk bytes (not row counts) keeps output files near
         the block size whatever the schema. Rows are only moved when
-        there's something to gain (``min_files``); data is rewritten
-        atomically via a staging directory + rename so a mid-compaction
-        failure never leaves the table truncated. Content is preserved
-        exactly; file-internal row order may change (same contract as any
-        OPTIMIZE)."""
+        there's something to gain (``min_files``). The new files are
+        staged under a hidden name while the old ones stay in place; the
+        old directory is then renamed aside, the staging one renamed in,
+        and only then the old one deleted. If the swap fails the old
+        directory is renamed back, so a failure never leaves the table
+        missing or truncated. Content is preserved exactly; file-internal
+        row order may change (same contract as any OPTIMIZE)."""
         import math
 
         path = self.table_path(name)
@@ -170,13 +172,19 @@ class Catalog:
         n_out = max(1, math.ceil(total_bytes / (target_file_mb * (1 << 20))))
         if n_out >= len(files):
             return len(files)
-        staging = path + ".__compacting__"
-        # localCheckpoint pins the data before the overwrite below removes
-        # the files the plan would lazily re-read
-        df = self.read_table(name).repartition(n_out).localCheckpoint(eager=True)
-        df.write.mode("overwrite").parquet(staging)
-        shutil.rmtree(path)
-        os.rename(staging, path)
+        staging = self.table_path(f".{name}.__compacting__")
+        aside = self.table_path(f".{name}.__replaced__")
+        self.read_table(name).repartition(n_out).write.mode(
+            "overwrite"
+        ).parquet(staging)
+        os.rename(path, aside)
+        try:
+            os.rename(staging, path)
+        except OSError:
+            os.rename(aside, path)
+            shutil.rmtree(staging, ignore_errors=True)
+            raise
+        shutil.rmtree(aside)
         self.store_action(name, "compact")
         return len(self.data_files(name))
 
@@ -314,11 +322,11 @@ class Catalog:
         return False
 
     def list_tables(self) -> list[str]:
+        """Names of the warehouse's tables: directories that pass
+        ``table_exists`` (so not ``_exports/`` or other scratch)."""
         if not os.path.isdir(self.warehouse):
             return []
-        return sorted(
-            e for e in os.listdir(self.warehouse) if os.path.isdir(self.table_path(e))
-        )
+        return sorted(e for e in os.listdir(self.warehouse) if self.table_exists(e))
 
     def register_views(self, names: Optional[Iterable[str]] = None) -> None:
         """Expose managed tables to Spark SQL as temp views."""

@@ -20,6 +20,7 @@ import sys
 from typing import Optional
 
 from bio2bel_spark.dataset import get_dataset_classes
+from bio2bel_spark.io.automate import _instantiate
 
 
 def _build_parser() -> argparse.ArgumentParser:
@@ -79,14 +80,6 @@ def _parse_inputs(pairs: list[str]) -> dict[str, dict[str, str]]:
     return out
 
 
-def _instantiate(cls, spark, warehouse, input_paths):
-    from bio2bel_spark.sources.datasets import SourceDataset
-
-    if issubclass(cls, SourceDataset):
-        return cls(spark, warehouse, input_paths=input_paths.get(cls.module_name, {}))
-    return cls(spark, warehouse)
-
-
 def _selected(module: Optional[str]):
     classes = get_dataset_classes()
     if module is not None:
@@ -118,7 +111,9 @@ def main(argv: Optional[list[str]] = None, spark=None) -> int:
             # broken source must not stop the rest; provenance records the
             # failure via the Dataset.populate template method
             for name, cls in sorted(_selected(args.module).items()):
-                ds = _instantiate(cls, spark, args.warehouse, input_paths)
+                ds = _instantiate(
+                    cls, spark, args.warehouse, input_paths.get(cls.module_name)
+                )
                 try:
                     ds.populate(force=args.force)
                     print(f"{name}: populated")
@@ -127,19 +122,19 @@ def main(argv: Optional[list[str]] = None, spark=None) -> int:
                     print(f"{name}: FAILED ({type(e).__name__}: {e})", file=sys.stderr)
         elif args.command == "drop":
             for name, cls in sorted(_selected(args.module).items()):
-                ds = _instantiate(cls, spark, args.warehouse, {})
+                ds = _instantiate(cls, spark, args.warehouse)
                 ds.drop_all()
                 print(f"{name}: dropped")
         elif args.command == "summarize":
             for name, cls in sorted(_selected(args.module).items()):
-                ds = _instantiate(cls, spark, args.warehouse, {})
+                ds = _instantiate(cls, spark, args.warehouse)
                 for table, n in sorted(ds.summarize().items()):
                     print(f"{name}.{table}\t{n}")
         elif args.command == "sheet":
             # M4: one summary DataFrame across datasets (reference sheet cmd)
             rows = []
             for name, cls in sorted(get_dataset_classes().items()):
-                ds = _instantiate(cls, spark, args.warehouse, {})
+                ds = _instantiate(cls, spark, args.warehouse)
                 for table, n in sorted(ds.summarize().items()):
                     rows.append((name, table, n))
             sheet = spark.createDataFrame(

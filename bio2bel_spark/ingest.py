@@ -188,24 +188,6 @@ def read_obo(spark: SparkSession, path: str) -> tuple[DataFrame, DataFrame]:
 
 # ---------------------------------------------------------------- N-Triples (S7)
 
-def _spread_lines(spark: SparkSession, lines: DataFrame) -> DataFrame:
-    """Raw text lines, UNSPREAD (identity). A round-11 version
-    repartitioned a partition-deficient file scan to full parallelism so
-    the then per-group regex parse (3-4 full-pattern executions per
-    line) would not run nearly single-core. The round-14 one-pass parse
-    (:func:`_grouped_lines`: ONE regexp_replace+split per line) cut the
-    per-line CPU below what a keyless round-robin exchange of the raw
-    lines costs — every keyless ``repartition(n)`` also pays a local
-    sort of its input (sortBeforeRepartition) — and each BGP self-join
-    side shuffled the whole file again. Interleaved same-session A/B
-    (3 rounds, quiet host): ``sparql_ntriples_file`` no-spread wins every
-    round (5.96 vs 21.25, 3.24 vs 5.58, 3.61 vs 4.21 s), same for
-    ``sparql_nquads_file`` (3.30 vs 5.32, 2.74 vs 3.00 s). At production
-    scale the file arrives as many splits and parse parallelism comes
-    from the splits themselves — the exchange was always local-only."""
-    return lines
-
-
 #: group separator for the one-pass line parse — U+001F cannot appear in a
 #: well-formed IRI and is only LEGALLY raw inside literal bodies, which the
 #: fallback guard below detects per line
@@ -278,7 +260,9 @@ def read_ntriples(spark: SparkSession, path: str) -> DataFrame:
     Parsing is distributed: each line is independent, so we read as text and
     extract with JVM-side regexps — no driver bottleneck at 100 TB.
     """
-    lines = _spread_lines(spark, spark.read.text(path))
+    # no repartition: the one-pass parse costs less per line than a
+    # round-robin exchange; parallelism comes from the file's splits
+    lines = spark.read.text(path)
     pat = r"^\s*(<[^>]*>|_:\S+)\s+(<[^>]*>)\s+(.*?)\s*\.\s*$"
     grouped, (s_raw, p_raw, o_raw) = _grouped_lines(lines, pat, 3)
     df = grouped.select(
@@ -337,7 +321,7 @@ def read_nquads(spark: SparkSession, path: str) -> DataFrame:
     outside GRAPH match the default graph, ``GRAPH ?g``/``GRAPH <iri>``
     match the named graphs). Parsing is distributed line-regex, same as
     :func:`read_ntriples`."""
-    lines = _spread_lines(spark, spark.read.text(path))
+    lines = spark.read.text(path)
     pat = (
         r"^\s*(<[^>]*>|_:\S+)\s+(<[^>]*>)\s+"
         r"(<[^>]*>|_:\S+|\".*\"(?:\^\^<[^>]*>|@" + _LANGTAG + r")?)"

@@ -116,7 +116,9 @@ def _publish(tmp: str, path: str) -> None:
             os.remove(tmp)
 
 
-def _instantiate(cls, spark, warehouse, input_paths):
+def _instantiate(cls, spark, warehouse, input_paths=None):
+    """A registered Dataset class bound to a warehouse; a source dataset
+    also gets its ``{name: path}`` raw inputs."""
     from bio2bel_spark.sources.datasets import SourceDataset
 
     if issubclass(cls, SourceDataset):
@@ -158,20 +160,17 @@ def ensure_triples_tsv(
     **populate_kwargs,
 ) -> str:
     """Cache-or-build the ``(h, r, t)`` triples TSV for a source — the
-    ``ensure_tsv`` twin (``reference io/automate.py:30-47``): if the cached
-    file exists its path returns with no other work; otherwise the source
-    is populated on demand and its edge table exports once through the
-    knowledge-graph triples sink."""
+    ``ensure_tsv`` twin (``reference io/automate.py:30-47``): the source
+    is populated on demand (:func:`ensure_populated`); if the cached file
+    exists its path returns with no Spark job, otherwise the edge table
+    exports once through the knowledge-graph triples sink."""
     from bio2bel_spark.io.sinks import write_triples_tsv
     from bio2bel_spark.operators.graph import KnowledgeGraph
 
-    cls = ensure_dataset(name)
-    ds = _instantiate(cls, spark, warehouse, input_paths)
+    ds = ensure_populated(name, spark, warehouse, input_paths, **populate_kwargs)
     path = os.path.join(_export_dir(ds), f"{name}.bel.tsv")
     if os.path.exists(path):
         return path
-    if not ds.is_populated():
-        ds.populate(**populate_kwargs)
     kg = KnowledgeGraph(None, ds.table(edges_table))
     # write-then-rename: a crash mid-export can never leave a partial file
     # that a later call would serve as a valid cache hit
@@ -192,17 +191,16 @@ def ensure_graph_json(
     """Cache-or-build the node-link-style graph JSON for a source — the
     ``ensure_graph`` twin (``reference io/automate.py:49-71``), with the
     nodes induced from the edge endpoints (the multigraph convention) and
-    the edges written qualified. Returns the cached directory path."""
+    the edges written qualified. Like :func:`ensure_triples_tsv` it
+    populates on demand and serves a cached export with no Spark job.
+    Returns the cached directory path."""
     from bio2bel_spark.io.sinks import write_json
     from bio2bel_spark.operators.graph import KnowledgeGraph
 
-    cls = ensure_dataset(name)
-    ds = _instantiate(cls, spark, warehouse, input_paths)
+    ds = ensure_populated(name, spark, warehouse, input_paths, **populate_kwargs)
     path = os.path.join(_export_dir(ds), f"{name}.graph.json")
     if os.path.exists(path):
         return path
-    if not ds.is_populated():
-        ds.populate(**populate_kwargs)
     kg = KnowledgeGraph(None, ds.table(edges_table))
     kg.nodes = kg.induced_nodes()
     # build in a scratch dir and rename into place: a crash between the

@@ -28,6 +28,8 @@ def _finalize_single(tmp_dir: str, target: str, suffix: str) -> None:
 
 def write_tsv(df: DataFrame, path: str, single_file: bool = False, header: bool = False) -> None:
     """Tab-separated sink (triples, gene-set exports — F12/S16)."""
+    if single_file:
+        df = df.coalesce(1)
     writer = (
         df.write.mode("overwrite")
         .option("sep", "\t")
@@ -35,9 +37,7 @@ def write_tsv(df: DataFrame, path: str, single_file: bool = False, header: bool 
     )
     if single_file:
         tmp = path + ".tmp"
-        df.coalesce(1).write.mode("overwrite").option("sep", "\t").option(
-            "header", str(header).lower()
-        ).csv(tmp)
+        writer.csv(tmp)
         _finalize_single(tmp, path, ".csv")
     else:
         writer.csv(path)

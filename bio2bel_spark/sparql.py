@@ -132,6 +132,13 @@ Supported subset (everything the reference's queries use, plus FILTER)::
   input), ``MD5``/``SHA1``/``SHA256``/``SHA384``/``SHA512`` hash the
   lexical form, and numeric expressions ``+ - * /`` evaluate in double
   with the spec's precedence and type-error-as-NULL.
+* **CONSTRUCT / UPDATE templates** — one QUAD path: every template block
+  parses to ``(g, s, p, o)`` quads (g None outside a ``GRAPH`` block) and
+  instantiates as one projection of the solutions per quad. An UPDATE
+  over a plain ``(s, p, o)`` store runs as a quad store whose rows all
+  sit in the default graph (g NULL), and drops g again on return; its
+  WHERE still sees the plain triples. A CONSTRUCT template without a
+  ``GRAPH`` block returns plain ``(s, p, o)``.
 
 Plan shape (Spark-first): each triple pattern is one filtered projection of
 the triples table (constant predicates become pushable scan filters); shared
@@ -669,45 +676,13 @@ class _Parser:
             )
         return prefixes, terms, group
 
-    def parse_template_block(self, what: str, ground: bool = False):
-        """A braced block of plain triples — the template form shared by
-        CONSTRUCT and the UPDATE operations, with the Turtle sugar
-        (``;`` predicate-object lists, ``,`` object lists, ``a`` =
-        rdf:type) desugared to repeated-subject triples. ``ground=True``
-        (INSERT DATA / DELETE DATA) additionally rejects variables, per
-        spec."""
-        self.expect("{")
-        template: list = []
-
-        def add(s, p, o):
-            if ground and any(t[0] == "var" for t in (s, p, o)):
-                raise SparqlError(
-                    f"{what} triples must be ground (no variables)"
-                )
-            template.append((s, p, o))
-
-        while True:
-            kind, v = self.peek()
-            if v == "}":
-                self.next()
-                break
-            if v == ".":
-                self.next()
-                continue
-            if v == "[":
-                _reject_template_bnode()
-            self.parse_po_list(self.parse_term(), add)
-        if not template:
-            raise SparqlError(f"{what} needs at least one triple")
-        return template
-
     def parse_po_list(self, s, add) -> None:
         """One subject's predicate-object list with the Turtle sugar —
         ``;`` chains verbs, ``,`` chains objects, ``;;`` and a trailing
         ``;`` before ``.``/``}`` are tolerated per Turtle — invoking
-        ``add(s, p, o)`` per desugared triple. ONE grammar shared by
-        the template and quad-template forms (the group-pattern form
-        has its own loop because its verbs are property PATHS).
+        ``add(s, p, o)`` per desugared triple. The grammar of every
+        template block (the group-pattern form has its own loop because
+        its verbs are property PATHS).
         Blank-node forms are rejected POINTEDLY here: in a template
         they would mint fresh blank nodes per solution (rdflib
         semantics), which this engine does not do."""
@@ -745,17 +720,28 @@ class _Parser:
             + f"an IRI), got {gv!r}"
         )
 
-    def parse_quad_block(self, what: str, ground: bool = False):
+    def parse_quad_block(self, what: str, ground: bool = False, graph=None):
         """A braced block of triples and ``GRAPH term { triples }``
-        sub-blocks — the QUAD template form of the UPDATE operations
-        (round 12). Returns ``(g, s, p, o)`` 4-tuples: ``g`` is None for
-        triples outside any GRAPH (the operation's WITH target, else the
-        default graph), a const/pname term for ``GRAPH <iri>``, or a var
-        term for ``GRAPH ?g`` (template position — bound by the WHERE).
-        ``ground=True`` additionally rejects variables anywhere,
-        including the graph position, per spec."""
+        sub-blocks — the QUAD template form shared by CONSTRUCT and the
+        UPDATE operations, with the Turtle sugar of
+        :meth:`parse_po_list`. Returns ``(g, s, p, o)`` 4-tuples: ``g``
+        is None for triples outside any GRAPH (the operation's WITH
+        target, else the default graph), a const/pname term for ``GRAPH
+        <iri>``, or a var term for ``GRAPH ?g`` (template position —
+        bound by the WHERE). ``graph`` is set while parsing a GRAPH
+        sub-block, which holds plain triples only. ``ground=True``
+        (INSERT DATA / DELETE DATA) additionally rejects variables
+        anywhere, including the graph position, per spec."""
         self.expect("{")
         template: list = []
+
+        def add(s, p, o):
+            if ground and any(t[0] == "var" for t in (s, p, o)):
+                raise SparqlError(
+                    f"{what} triples must be ground (no variables)"
+                )
+            template.append((graph, s, p, o))
+
         while True:
             kind, v = self.peek()
             if v == "}":
@@ -764,22 +750,14 @@ class _Parser:
             if v == ".":
                 self.next()
                 continue
-            if kind == "keyword" and v.upper() == "GRAPH":
+            if graph is None and kind == "keyword" and v.upper() == "GRAPH":
                 self.next()
                 gterm = self.parse_graph_name(allow_var=not ground)
-                inner = self.parse_template_block(what, ground=ground)
-                template.extend((gterm, s, p, o) for s, p, o in inner)
+                template.extend(self.parse_quad_block(what, ground, gterm))
                 continue
-            def addq(s, p, o):
-                if ground and any(t[0] == "var" for t in (s, p, o)):
-                    raise SparqlError(
-                        f"{what} triples must be ground (no variables)"
-                    )
-                template.append((None, s, p, o))
-
             if v == "[":
                 _reject_template_bnode()
-            self.parse_po_list(self.parse_term(), addq)
+            self.parse_po_list(self.parse_term(), add)
         if not template:
             raise SparqlError(f"{what} needs at least one triple")
         return template
@@ -3004,12 +2982,9 @@ def _compile_subquery(
     binding-table invariant (a COUNT joins/compares by its lexical
     form, consistent with the engine's string-valued triples model).
 
-    Returns (bindings, nullable-vars): a projected variable is nullable
-    outward iff the inner group could leave it unbound (plain var under
-    OPTIONAL; SUM/AVG always — their lexical-form cast can NULL a group
-    of BOUND non-numeric values, and an all-unbound group aggregates to
-    NULL; MIN/MAX/SAMPLE over a nullable argument; a computed GROUP BY
-    key over nullable sources or null-introducing functions)."""
+    Returns (bindings, nullable-vars): the projected variables the
+    subquery can leave unbound, as :func:`_finish_select` derives
+    them."""
     _, projection, group, modifiers = el
     if modifiers.get("from_default") or modifiers.get("from_named"):
         raise SparqlError(
@@ -3054,7 +3029,7 @@ def _compile_subquery(
     internals = [c for c in out.columns if c.startswith("__path_")]
     if internals:
         out = out.drop(*internals)
-    out = _finish_select(
+    out, nullable = _finish_select(
         out, projection, modifiers, prefixes, inner_nullable,
         # subquery values re-enter the binding table as TERMS: SUM/AVG
         # over all-typed-numeric groups come out as canonical typed
@@ -3062,70 +3037,6 @@ def _compile_subquery(
         # fed from an aggregated subquery round-trip losslessly
         term_form=True,
     )
-    nullable: set[str] = set()
-    if projection is None:
-        nullable = inner_nullable & set(out.columns)
-    else:
-        for it in projection:
-            if it[0] == "var" and it[1] in inner_nullable:
-                nullable.add(it[1])
-            elif it[0] == "expr":
-                # a projection expression over nullable sources, a
-                # null-introducing fn, or an embedded aggregate that can
-                # itself be NULL (SUM/AVG lexical-cast failure; MIN/MAX/
-                # SAMPLE over a nullable argument) can leave its alias
-                # unbound — COUNT/GROUP_CONCAT never can, mirroring the
-                # plain 'agg' item logic above
-                specs: list = []
-                _having_aggs(it[1], specs)
-                agg_nullable = any(
-                    fn in ("SUM", "AVG")
-                    or (
-                        fn in ("MIN", "MAX", "SAMPLE")
-                        and arg in inner_nullable
-                    )
-                    for fn, _d, arg, _s in specs
-                )
-                if (
-                    _expr_vars(it[1]) & inner_nullable
-                    or _expr_introduces_null(it[1])
-                    or agg_nullable
-                ):
-                    nullable.add(it[2])
-            elif it[0] == "agg":
-                _, fn, _d, arg, alias, _sep = it
-                if fn in ("SUM", "AVG"):
-                    # always nullable: the lexical-form cast can fail on
-                    # a BOUND but non-numeric argument, NULLing the whole
-                    # group — not just when the argument is OPTIONAL
-                    nullable.add(alias)
-                elif (
-                    fn in ("MIN", "MAX", "SAMPLE")
-                    and arg in inner_nullable
-                ):
-                    nullable.add(alias)
-        tv = modifiers.get("trailing_values")
-        if tv:
-            # UNDEF rows in a trailing VALUES leave non-shared exported
-            # columns NULL for those rows
-            undef_names = {
-                tv[1][i]
-                for row in tv[2]
-                for i, t in enumerate(row)
-                if t is None
-            }
-            nullable |= undef_names & set(out.columns)
-        names = set(out.columns)
-        for g in modifiers["group_by"]:
-            if (
-                not isinstance(g, str)
-                and g[2] in names
-                and (
-                    _expr_vars(g[1]) & inner_nullable
-                    or _expr_introduces_null(g[1])
-                )
-            ):
-                nullable.add(g[2])
     out = out.select(
         *[F.col(c).cast("string").alias(c) for c in out.columns]
     )
@@ -3453,7 +3364,7 @@ def _compile_group(
             # unbound (spec: expression error -> var unbound = NULL); so
             # can LANG/DATATYPE/numeric fns over BOUND inputs (error on
             # IRI-shaped / non-numeric terms)
-            if _expr_vars(expr) & nullable or _expr_introduces_null(expr):
+            if _expr_nullable(expr, nullable):
                 nullable.add(var)
         elif el[0] == "filter":
             pending_filters.append(el[1])
@@ -3699,76 +3610,64 @@ def _agg_term_form(val: Column, fn: str, col: Column) -> Column:
     )
 
 
+def _operands(expr) -> list:
+    """The sub-expressions of an expression node, left to right. Leaves
+    (``var``, ``lit``, ``agg_expr`` — its argument is a variable name —
+    and ``exists_expr`` — its operand is a group pattern) have none."""
+    kind = expr[0]
+    if kind in ("or", "and", "not"):
+        return list(expr[1:])
+    if kind in ("cmp", "arith"):
+        return [expr[2], expr[3]]
+    if kind == "in":
+        return [expr[1], *expr[2]]
+    if kind == "call":
+        return list(expr[2])
+    return []
+
+
+def _rebuild(expr, operands: list):
+    """``expr`` with its sub-expressions replaced by ``operands`` (same
+    order as :func:`_operands`); a leaf comes back unchanged."""
+    kind = expr[0]
+    if kind in ("or", "and", "not"):
+        return (kind, *operands)
+    if kind in ("cmp", "arith"):
+        return (kind, expr[1], *operands)
+    if kind == "in":
+        return ("in", operands[0], operands[1:], expr[3])
+    if kind == "call":
+        return ("call", expr[1], operands)
+    return expr
+
+
 def _having_aggs(expr, found: list) -> None:
     """Collect ``("agg_expr", fn, distinct, arg, sep)`` nodes from a
     HAVING expression tree in deterministic left-to-right order."""
-    kind = expr[0]
-    if kind == "agg_expr":
-        key = expr[1:]
-        if key not in found:
-            found.append(key)
-    elif kind in ("or", "and"):
-        _having_aggs(expr[1], found)
-        _having_aggs(expr[2], found)
-    elif kind == "not":
-        _having_aggs(expr[1], found)
-    elif kind == "cmp":
-        _having_aggs(expr[2], found)
-        _having_aggs(expr[3], found)
-    elif kind == "arith":
-        _having_aggs(expr[2], found)
-        _having_aggs(expr[3], found)
-    elif kind == "in":
-        _having_aggs(expr[1], found)
-        for i in expr[2]:
-            _having_aggs(i, found)
-    elif kind == "call":
-        for a in expr[2]:
-            _having_aggs(a, found)
+    if expr[0] == "agg_expr" and expr[1:] not in found:
+        found.append(expr[1:])
+    for sub in _operands(expr):
+        _having_aggs(sub, found)
 
 
 def _rewrite_having(expr, aliases: dict):
     """Replace aggregate calls with references to their synthesized
     post-aggregation columns, leaving a plain filter expression."""
-    kind = expr[0]
-    if kind == "agg_expr":
+    if expr[0] == "agg_expr":
         return ("var", aliases[expr[1:]])
-    if kind in ("or", "and"):
-        return (
-            kind,
-            _rewrite_having(expr[1], aliases),
-            _rewrite_having(expr[2], aliases),
-        )
-    if kind == "not":
-        return ("not", _rewrite_having(expr[1], aliases))
-    if kind == "cmp":
-        return (
-            "cmp",
-            expr[1],
-            _rewrite_having(expr[2], aliases),
-            _rewrite_having(expr[3], aliases),
-        )
-    if kind == "in":
-        return (
-            "in",
-            _rewrite_having(expr[1], aliases),
-            [_rewrite_having(i, aliases) for i in expr[2]],
-            expr[3],
-        )
-    if kind == "arith":
-        return (
-            "arith",
-            expr[1],
-            _rewrite_having(expr[2], aliases),
-            _rewrite_having(expr[3], aliases),
-        )
-    if kind == "call":
-        return (
-            "call",
-            expr[1],
-            [_rewrite_having(a, aliases) for a in expr[2]],
-        )
-    return expr
+    return _rebuild(
+        expr, [_rewrite_having(sub, aliases) for sub in _operands(expr)]
+    )
+
+
+def _agg_nullable(fn: str, arg, nullable: set) -> bool:
+    """Whether an aggregate's output can be unbound: SUM/AVG always (an
+    all-unbound group aggregates to NULL, and the lexical-form cast can
+    NULL a group of BOUND non-numeric values), MIN/MAX/SAMPLE when their
+    argument can be; COUNT/GROUP_CONCAT never."""
+    return fn in ("SUM", "AVG") or (
+        fn in ("MIN", "MAX", "SAMPLE") and arg in nullable
+    )
 
 
 def _apply_aggregation(
@@ -3908,53 +3807,36 @@ def _expr_introduces_null(expr) -> bool:
     even over fully-bound inputs (see _NULL_INTRODUCING_FNS). COALESCE is
     deliberately NOT exempted — treating its result as possibly-null is
     conservative and only costs the IS-NULL-OR-= residual form downstream."""
-    kind = expr[0]
-    if kind == "call":
-        if expr[1] in _NULL_INTRODUCING_FNS:
-            return True
-        return any(_expr_introduces_null(a) for a in expr[2])
-    if kind in ("or", "and"):
-        return _expr_introduces_null(expr[1]) or _expr_introduces_null(expr[2])
-    if kind == "not":
-        return _expr_introduces_null(expr[1])
-    if kind == "cmp":
-        return _expr_introduces_null(expr[2]) or _expr_introduces_null(expr[3])
-    if kind == "arith":
+    if expr[0] == "arith":
         return True  # a non-numeric operand / division by zero NULLs
-    if kind == "in":
-        return _expr_introduces_null(expr[1]) or any(
-            _expr_introduces_null(i) for i in expr[2]
-        )
-    return False
+    if expr[0] == "call" and expr[1] in _NULL_INTRODUCING_FNS:
+        return True
+    return any(_expr_introduces_null(sub) for sub in _operands(expr))
+
+
+def _expr_nullable(expr, nullable: set) -> bool:
+    """Whether a computed value (BIND, computed GROUP BY key, SELECT
+    expression) can be unbound: it reads a variable in ``nullable``,
+    calls a null-introducing function, or embeds an aggregate whose
+    output can be unbound (:func:`_agg_nullable`)."""
+    specs: list = []
+    _having_aggs(expr, specs)
+    return (
+        bool(_expr_vars(expr) & nullable)
+        or _expr_introduces_null(expr)
+        or any(_agg_nullable(fn, arg, nullable) for fn, _d, arg, _s in specs)
+    )
 
 
 def _expr_vars(expr) -> set:
     kind = expr[0]
     if kind == "var":
         return {expr[1]}
-    if kind == "arith":
-        return _expr_vars(expr[2]) | _expr_vars(expr[3])
-    if kind in ("or", "and"):
-        return _expr_vars(expr[1]) | _expr_vars(expr[2])
-    if kind == "not":
-        return _expr_vars(expr[1])
-    if kind == "cmp":
-        return _expr_vars(expr[2]) | _expr_vars(expr[3])
-    if kind == "in":
-        out = _expr_vars(expr[1])
-        for i in expr[2]:
-            out |= _expr_vars(i)
-        return out
     if kind == "agg_expr":
         return {expr[3]} if expr[3] is not None else set()
     if kind == "exists_expr":
         return _collect_vars(expr[1])
-    if kind == "call":
-        out: set = set()
-        for a in expr[2]:
-            out |= _expr_vars(a)
-        return out
-    return set()
+    return set().union(*map(_expr_vars, _operands(expr)))
 
 
 def _collect_vars(elements) -> set:
@@ -4001,35 +3883,11 @@ def _subst_expr(expr, binds: dict, prefixes: dict):
     kind = expr[0]
     if kind == "var":
         return ("lit", binds[expr[1]]) if expr[1] in binds else expr
-    if kind in ("or", "and"):
-        return (
-            kind,
-            _subst_expr(expr[1], binds, prefixes),
-            _subst_expr(expr[2], binds, prefixes),
-        )
-    if kind == "not":
-        return ("not", _subst_expr(expr[1], binds, prefixes))
     if kind == "exists_expr":
         return ("exists_expr", _substitute(expr[1], binds, prefixes))
-    if kind == "cmp":
-        return (
-            "cmp", expr[1],
-            _subst_expr(expr[2], binds, prefixes), _subst_expr(expr[3], binds, prefixes),
-        )
-    if kind == "in":
-        return (
-            "in", _subst_expr(expr[1], binds, prefixes),
-            [_subst_expr(i, binds, prefixes) for i in expr[2]], expr[3],
-        )
-    if kind == "arith":
-        return (
-            "arith", expr[1],
-            _subst_expr(expr[2], binds, prefixes),
-            _subst_expr(expr[3], binds, prefixes),
-        )
-    if kind == "call":
-        return ("call", expr[1], [_subst_expr(a, binds, prefixes) for a in expr[2]])
-    return expr
+    return _rebuild(
+        expr, [_subst_expr(sub, binds, prefixes) for sub in _operands(expr)]
+    )
 
 
 def _substitute(elements, binds: dict, prefixes: dict) -> list:
@@ -4133,6 +3991,16 @@ def _substitute(elements, binds: dict, prefixes: dict) -> list:
     return out
 
 
+def _default_graph(triples: DataFrame) -> DataFrame:
+    """The default graph of the input as plain ``(s, p, o)``: per SPARQL
+    dataset semantics, what patterns OUTSIDE any GRAPH clause match is
+    a quad store's (g, s, p, o) g-IS-NULL rows; GRAPH clauses read the
+    named graphs. A plain triple store is its own default graph."""
+    if "g" not in triples.columns:
+        return triples
+    return triples.filter(F.col("g").isNull()).drop("g")
+
+
 def _solutions(
     triples: DataFrame,
     group: list,
@@ -4161,15 +4029,9 @@ def _solutions(
                 f"bindings for variables not in the pattern: {missing}"
             )
         group = _substitute(group, binds, pfx)
-    quads = None
-    if "g" in triples.columns:
-        # quad store (g, s, p, o): per SPARQL dataset semantics the
-        # default graph — what patterns OUTSIDE any GRAPH clause match —
-        # is the g-IS-NULL rows; GRAPH clauses read the named graphs
-        quads = triples
-        triples = triples.filter(F.col("g").isNull()).drop("g")
+    quads = triples if "g" in triples.columns else None
     out, nullable = _compile_group(
-        triples, group, pfx, max_path_depth, quads=quads
+        _default_graph(triples), group, pfx, max_path_depth, quads=quads
     )
     for var, value in binds.items():
         out = out.withColumn(var, F.lit(value))
@@ -4279,7 +4141,7 @@ def sparql_select(
     pfx.update(declared)
     triples = _apply_dataset_clauses(triples, modifiers, pfx)
     out, nullable = _solutions(triples, group, pfx, bindings, max_path_depth)
-    return _finish_select(out, projection, modifiers, pfx, nullable)
+    return _finish_select(out, projection, modifiers, pfx, nullable)[0]
 
 
 def _apply_dataset_clauses(triples: DataFrame, modifiers, pfx) -> DataFrame:
@@ -4326,7 +4188,7 @@ def _apply_dataset_clauses(triples: DataFrame, modifiers, pfx) -> DataFrame:
 def _finish_select(
     out: DataFrame, projection, modifiers: dict, pfx=None,
     nullable: "set[str] | None" = None, term_form: bool = False,
-) -> DataFrame:
+) -> "tuple[DataFrame, set[str]]":
     """The post-WHERE SELECT pipeline (shared by the top-level query and
     subqueries), in the spec's stage order: aggregation + HAVING
     (§18.2.4.1-2), trailing VALUES join (§18.2.4.3), SELECT-expression
@@ -4334,7 +4196,13 @@ def _finish_select(
     project -> DISTINCT -> ORDER -> OFFSET/LIMIT. ``nullable`` is the
     WHERE group's can-be-unbound variable set; the trailing-VALUES join
     uses it (re-derived through the aggregation stage) to pick the
-    compatible-mapping join form for unbound shared variables."""
+    compatible-mapping join form for unbound shared variables.
+
+    Returns ``(solutions, nullable-out)``: the output columns that can
+    be unbound — a plain variable or group key the WHERE can leave
+    unbound, an aggregate per :func:`_agg_nullable`, a computed GROUP BY
+    key or SELECT expression per :func:`_expr_nullable`, and a
+    trailing-VALUES variable with an ``UNDEF`` row."""
     group_by = modifiers["group_by"]
     having = modifiers["having"]
     agg_items = [it for it in (projection or []) if it[0] == "agg"]
@@ -4357,29 +4225,22 @@ def _finish_select(
             out, projection, group_by, having, extend_specs, term_form
         )
         # re-derive nullability through the aggregation stage: a plain
-        # group key stays nullable (grouping keeps a NULL-keyed group), a
-        # computed key is nullable over nullable sources or null-
-        # introducing fns, SUM/AVG are always nullable (all-unbound group
-        # -> NULL; lexical cast can NULL a bound non-numeric group),
-        # MIN/MAX/SAMPLE follow their argument; COUNT/GROUP_CONCAT never
-        tv_nullable = set()
+        # group key stays nullable (grouping keeps a NULL-keyed group)
+        out_nullable = set()
         for g in group_by:
             if isinstance(g, str):
                 if g in where_nullable:
-                    tv_nullable.add(g)
-            elif (
-                _expr_vars(g[1]) & where_nullable
-                or _expr_introduces_null(g[1])
-            ):
-                tv_nullable.add(g[2])
+                    out_nullable.add(g)
+            elif _expr_nullable(g[1], where_nullable):
+                out_nullable.add(g[2])
         for _, fn, _d, arg, alias, _sep in agg_items:
-            if fn in ("SUM", "AVG") or (
-                fn in ("MIN", "MAX", "SAMPLE") and arg in where_nullable
-            ):
-                tv_nullable.add(alias)
+            if _agg_nullable(fn, arg, where_nullable):
+                out_nullable.add(alias)
     else:
-        tv_nullable = where_nullable
-    out = _apply_trailing_values(out, modifiers, pfx, tv_nullable)
+        out_nullable = set(where_nullable)
+    out, out_nullable = _apply_trailing_values(
+        out, modifiers, pfx, out_nullable
+    )
     if expr_items:
         # the spec's Extend step: evaluated over the COMPLETED (and,
         # in an aggregate query, GROUPED) solutions, after the
@@ -4399,6 +4260,8 @@ def _finish_select(
                 alias,
                 _materialize_value(rewritten, set(out.columns)),
             )
+            if _expr_nullable(expr, where_nullable):
+                out_nullable.add(alias)
         if extend_aliases:
             out = out.drop(*extend_aliases.values())
     projection_names = (
@@ -4438,16 +4301,16 @@ def _finish_select(
         if projection_names is not None:
             out = out.select(*projection_names)
         out = out.dropDuplicates()
-        return _apply_order_limit(out)
+        return _apply_order_limit(out), out_nullable & set(out.columns)
     out = _apply_order_limit(out)
     if projection_names is not None:
         out = out.select(*projection_names)
-    return out
+    return out, out_nullable & set(out.columns)
 
 
 def _apply_trailing_values(
-    out: DataFrame, modifiers: dict, pfx, nullable: "set[str] | None" = None
-) -> DataFrame:
+    out: DataFrame, modifiers: dict, pfx, nullable: set
+) -> "tuple[DataFrame, set[str]]":
     """§18.2.4.3: join the trailing VALUES data AFTER aggregation and
     HAVING, with the spec's compatible-mapping semantics: per shared
     variable the bindings agree where BOTH are bound; a solution row
@@ -4464,10 +4327,13 @@ def _apply_trailing_values(
     is not allowed on a shared variable (the inline side of the join
     must be fully bound). The join compares lexical forms — the result
     side is cast to string so a native aggregate alias (BIGINT COUNT)
-    matches its lexical spelling instead of tripping an ANSI cast."""
+    matches its lexical spelling instead of tripping an ANSI cast.
+
+    Returns ``(joined, nullable)``: ``nullable`` grows by the (new)
+    variables an ``UNDEF`` row leaves unbound."""
     tv = modifiers.get("trailing_values")
     if not tv:
-        return out
+        return out, nullable
     _, names, rows = tv
     undef = {
         names[i] for row in rows for i, t in enumerate(row) if t is None
@@ -4484,8 +4350,8 @@ def _apply_trailing_values(
             f"UNDEF on shared trailing-VALUES variables {bad} would "
             "need a null-tolerant join — outside the subset"
         )
-    soft = [n for n in shared if n in (nullable or ())]
-    hard = [n for n in shared if n not in (nullable or ())]
+    soft = [n for n in shared if n in nullable]
+    hard = [n for n in shared if n not in nullable]
     if not hard:
         raise SparqlError(
             f"trailing VALUES shares only nullable variables {soft} "
@@ -4523,7 +4389,7 @@ def _apply_trailing_values(
             joined = joined.drop(f"__tv_{n}")
         else:
             joined = joined.withColumnRenamed(f"__tv_{n}", n)
-    return joined
+    return joined, nullable | undef
 
 
 def sparql_ask(
@@ -4575,10 +4441,7 @@ def sparql_describe(
     (g IS NULL) — the same dataset rule as every pattern outside a
     GRAPH clause, and the WHERE group may still use GRAPH clauses to
     find the resources (round 12; previously rejected)."""
-    quads = None
-    if "g" in triples.columns:
-        quads = triples
-        triples = triples.filter(F.col("g").isNull()).drop("g")
+    default = _default_graph(triples)
     toks = _tokenize(query)
     declared, terms, group = _Parser(toks, prefixes).parse_describe()
     pfx = dict(prefixes or {})
@@ -4590,11 +4453,8 @@ def sparql_describe(
             raise SparqlError(
                 "DESCRIBE bindings= need a WHERE group to constrain"
             )
-        return triples.filter(F.col("s").isin(consts)).distinct()
-    sol, _ = _solutions(
-        quads if quads is not None else triples,
-        group, pfx, bindings, max_path_depth,
-    )
+        return default.filter(F.col("s").isin(consts)).distinct()
+    sol, _ = _solutions(triples, group, pfx, bindings, max_path_depth)
     missing = [v for v in varnames if v not in sol.columns]
     if missing:
         raise SparqlError(f"DESCRIBE vars never bound: {missing}")
@@ -4611,7 +4471,7 @@ def sparql_describe(
             [(c,) for c in consts], "`s` string"
         )
         res = cdf if res is None else res.unionByName(cdf)
-    return triples.join(F.broadcast(res.distinct()), "s", "left_semi").distinct()
+    return default.join(F.broadcast(res.distinct()), "s", "left_semi").distinct()
 
 
 def sparql_construct(
@@ -4649,18 +4509,10 @@ def sparql_construct(
     ).parse_construct()
     pfx = dict(prefixes or {})
     pfx.update(declared)
-    # a binding may target a variable used ONLY in the template (rdflib
-    # emits the constant into every instantiated triple) — admit those
-    # names; _solutions re-projects every binding as a constant column
-    template_vars = {
-        t[1]
-        for tri in template
-        for t in tri
-        if t is not None and t[0] == "var"
-    }
+    # _solutions re-projects every binding as a constant column
     out, _ = _solutions(
         triples, group, pfx, bindings, max_path_depth,
-        extra_bindable=template_vars,
+        extra_bindable=_template_vars(template),
     )
     out = _order_page(out, order, limit, offset)
     # fail fast on an invalid template BEFORE any materialization below
@@ -4681,22 +4533,33 @@ def sparql_construct(
 
             out = tracked_persist(out)
 
-    if any(g is not None for g, _s, _p, _o in template):
-        # at least one GRAPH block: emit QUADS (outside-GRAPH triples
-        # target the default graph — with_g None -> g NULL)
-        return _instantiate_quads(
-            out, template, pfx, with_g=None
-        ).dropDuplicates()
-    return _instantiate_template(
-        out, [q[1:] for q in template], pfx
-    ).dropDuplicates()
+    # outside-GRAPH triples target the default graph (with_g None -> g
+    # NULL); a template with no GRAPH block emits plain triples
+    built = _instantiate_quads(out, template, pfx, with_g=None)
+    if all(g is None for g, _s, _p, _o in template):
+        built = built.drop("g")
+    return built.dropDuplicates()
+
+
+def _template_vars(*templates) -> set:
+    """The variables of quad templates (None for an absent one). A
+    binding may target a variable used ONLY in a template (rdflib emits
+    the constant into every instantiated triple), so these names are
+    bindable even when the WHERE never mentions them."""
+    return {
+        t[1]
+        for tmpl in templates
+        if tmpl
+        for quad in tmpl
+        for t in quad
+        if t is not None and t[0] == "var"
+    }
 
 
 def _validate_template(template, columns, label: str) -> None:
     """Reject a template referencing a variable the WHERE pattern never
-    binds — at compile time, before any job can run. Accepts triple
-    (s, p, o) and quad (g, s, p, o) templates — a quad's graph position
-    is None for outside-GRAPH triples."""
+    binds — at compile time, before any job can run. A quad's graph
+    position is None for outside-GRAPH triples."""
     cols = set(columns)
     for tri in template:
         for term in tri:
@@ -4705,29 +4568,6 @@ def _validate_template(template, columns, label: str) -> None:
                     f"{label} template variable ?{term[1]} is never "
                     "bound by the WHERE pattern"
                 )
-
-
-def _instantiate_template(out: DataFrame, template, pfx) -> DataFrame:
-    """Instantiate plain-triple templates over a solution table (shared
-    by CONSTRUCT and the UPDATE modify forms): each template triple is a
-    projection of the solutions; a solution leaving any position unbound
-    (an OPTIONAL miss) emits no triple for that template row, per spec.
-    Returns the unioned instantiations WITHOUT dedup — callers decide
-    (CONSTRUCT dedups to a graph; UPDATE's anti-join/union don't care
-    about multiplicity)."""
-
-    def _pos(term) -> Column:
-        if term[0] == "var":
-            return F.col(term[1])
-        return F.lit(str(_resolve(term, pfx)[1]))
-
-    built = None
-    for s, p, o in template:
-        row = out.select(
-            _pos(s).alias("s"), _pos(p).alias("p"), _pos(o).alias("o")
-        ).na.drop()  # an unbound (OPTIONAL-miss) position emits no triple
-        built = row if built is None else built.unionByName(row)
-    return built
 
 
 def sparql_update(
@@ -4765,9 +4605,10 @@ def sparql_update(
     ``USING NAMED`` build the WHERE dataset exactly like FROM / FROM
     NAMED, and CLEAR/DROP remove graphs (DROP == CLEAR: a graph IS its
     rows — no empty-graph bookkeeping exists to distinguish them).
-    Over a plain TRIPLE input the graph-targeted forms raise; the
-    non-graph subset behaves exactly as before (CLEAR DEFAULT / ALL
-    empty the store, CLEAR NAMED is a no-op).
+    A plain TRIPLE input runs through the same quad path as one default
+    graph (g NULL on every row, dropped again on return; its WHERE sees
+    the plain triples). Over it the graph-targeted forms raise (CLEAR
+    DEFAULT / ALL empty the store, CLEAR NAMED is a no-op).
 
     Set semantics: the input is assumed to be a graph (a SET of
     triples — dropDuplicates first if unsure) and the result is a
@@ -4783,10 +4624,10 @@ def sparql_update(
     subset its own pattern/templates mention — a binding consumed by op
     1 must not make op 2 raise.
 
-    Scale shape: deletes are hash anti-joins on ``(s, p, o)`` — over a
-    quad store on ``(g, s, p, o)`` with a NULL-SAFE g key (the default
-    graph is g IS NULL; EqualNullSafe is still a hash-join key, never a
-    nested loop) — CLEAR/DROP are pushed scan filters; DATA
+    Scale shape: deletes are hash anti-joins on ``(g, s, p, o)`` with a
+    NULL-SAFE g key (the default graph is g IS NULL; EqualNullSafe is
+    still a hash-join key, never a nested loop); CLEAR/DROP are pushed
+    scan filters; DATA
     payloads are driver-literal by construction and broadcast; a modify
     carrying BOTH templates computes its solution table once and shares
     it across the two instantiations (tracked_persist — the same
@@ -4810,7 +4651,11 @@ def sparql_update(
                 "bindings for variables not in any operation's pattern "
                 f"or template: {unknown}"
             )
-    graph = triples
+    # every operation runs over quads: a plain triple store is one
+    # default graph, g NULL on every row (dropped again on return)
+    graph = triples if has_g else triples.withColumn(
+        "g", F.lit(None).cast("string")
+    )
     dirty = False  # an earlier op inserted rows -> graph may be a bag
     for (declared, op), opvars in zip(ops, per_op_vars):
         pfx = dict(prefixes or {})
@@ -4820,11 +4665,15 @@ def sparql_update(
             if bindings
             else None
         )
+        # the WHERE of a plain store sees the plain triples, so GRAPH
+        # clauses over it keep their loud error
+        sol_graph = graph if has_g else graph.drop("g")
         if not has_g:
             _reject_graph_targeting(op)
-        sol_graph = graph.dropDuplicates() if dirty else graph
+        if dirty:
+            sol_graph = sol_graph.dropDuplicates()
         graph = _apply_update_op(
-            graph, op, pfx, op_bindings, max_path_depth, sol_graph, has_g
+            graph, op, pfx, op_bindings, max_path_depth, sol_graph
         )
         if (
             (op[0] in ("data", "modify") and op[2])
@@ -4835,7 +4684,7 @@ def sparql_update(
             # deduped solution graph. COPY/MOVE cannot: their output is
             # a disjoint-by-graph union of set inputs.
             dirty = True
-    return graph.dropDuplicates()
+    return (graph if has_g else graph.drop("g")).dropDuplicates()
 
 
 def _reject_graph_targeting(op) -> None:
@@ -4883,26 +4732,14 @@ def _update_op_vars(op) -> set:
     if op[0] != "modify":
         return set()
     delete_t, insert_t, group = op[1], op[2], op[3]
-    vars_ = set(_collect_vars(group))
-    for tmpl in (delete_t, insert_t):
-        if tmpl:
-            vars_ |= {
-                t[1]
-                for quad in tmpl
-                for t in quad
-                if t is not None and t[0] == "var"
-            }
-    return vars_
+    return _collect_vars(group) | _template_vars(delete_t, insert_t)
 
 
-def _apply_clear(graph: DataFrame, target, pfx, has_g: bool) -> DataFrame:
+def _apply_clear(graph: DataFrame, target, pfx) -> DataFrame:
     """CLEAR / DROP as a pushed scan filter over the store. The NULL-
     aware forms: the default graph is the g-IS-NULL rows, so CLEAR
     GRAPH <g> must KEEP them (plain ``g != iri`` would three-value-NULL
     them away)."""
-    if not has_g:
-        # a triple store is exactly one default graph
-        return graph if target == "named" else graph.limit(0)
     if target == "all":
         return graph.limit(0)
     if target == "default":
@@ -4934,11 +4771,14 @@ def _anti_join_quads(graph: DataFrame, dels: DataFrame) -> DataFrame:
 def _instantiate_quads(
     out: DataFrame, template, pfx, with_g: "str | None"
 ) -> DataFrame:
-    """Instantiate QUAD templates over a solution table: each template
-    quad is a projection of the solutions; triples outside any GRAPH
-    block target the WITH graph (or the default graph — g NULL); a
-    solution leaving s/p/o (or a variable graph position) unbound emits
-    no quad, per spec."""
+    """Instantiate QUAD templates over a solution table (shared by
+    CONSTRUCT and the UPDATE modify forms): each template quad is a
+    projection of the solutions; triples outside any GRAPH block target
+    the WITH graph (or the default graph — g NULL); a solution leaving
+    s/p/o (or a variable graph position) unbound (an OPTIONAL miss)
+    emits no quad, per spec. Returns the unioned instantiations WITHOUT
+    dedup — callers decide (CONSTRUCT dedups to a graph; UPDATE's
+    anti-join/union don't care about multiplicity)."""
 
     def _pos(term) -> Column:
         if term[0] == "var":
@@ -4968,21 +4808,19 @@ def _apply_update_op(
     pfx,
     bindings,
     max_path_depth: int,
-    sol_graph: "DataFrame | None" = None,
-    has_g: bool = False,
+    sol_graph: DataFrame,
 ) -> DataFrame:
-    """``sol_graph`` is the graph the WHERE pattern evaluates over —
+    """Apply one operation to the quad store ``graph``: templates
+    instantiate (g, s, p, o), deletes null-safe-join on g, and WITH /
+    USING shape the WHERE dataset. ``sol_graph`` is the graph the WHERE
+    pattern evaluates over — plain triples for a plain store, and
     deduped by the caller when an earlier op may have introduced
     duplicates (multiplicity is invisible to anti-join/union but NOT to
     aggregates inside the pattern); deletes/inserts still apply to the
-    raw ``graph``. ``has_g`` switches the quad-store path: templates
-    instantiate (g, s, p, o), deletes null-safe-join on g, and WITH /
-    USING shape the WHERE dataset."""
-    if sol_graph is None:
-        sol_graph = graph
+    raw ``graph``."""
     spark = graph.sparkSession
     if op[0] == "clear":
-        return _apply_clear(graph, op[1], pfx, has_g)
+        return _apply_clear(graph, op[1], pfx)
     if op[0] == "create":
         return graph  # validated no-op: a graph IS its rows
     if op[0] == "load":
@@ -5008,14 +4846,10 @@ def _apply_update_op(
                 f"LOAD source not found: {src} (use LOAD SILENT to "
                 "treat a missing source as a no-op)"
             )
-        loaded = read_ntriples(spark, src)
-        if has_g:
-            target = (
-                None if op[2] is None else str(_resolve(op[2], pfx)[1])
-            )
-            loaded = loaded.select(
-                F.lit(target).cast("string").alias("g"), "s", "p", "o"
-            )
+        target = None if op[2] is None else str(_resolve(op[2], pfx)[1])
+        loaded = read_ntriples(spark, src).select(
+            F.lit(target).cast("string").alias("g"), "s", "p", "o"
+        )
         return graph.unionByName(loaded)
     if op[0] == "gmove":
         # COPY/MOVE/ADD src TO dst over the quad store: retarget src's
@@ -5065,55 +4899,34 @@ def _apply_update_op(
                 for (g, s, p, o) in quads
             ]
 
-        if has_g:
-            schema = "g string, s string, p string, o string"
-            if dels:
-                ddf = spark.createDataFrame(_ground(dels), schema)
-                graph = _anti_join_quads(graph, F.broadcast(ddf))
-            if ins:
-                graph = graph.unionByName(
-                    spark.createDataFrame(_ground(ins), schema)
-                )
-            return graph
+        schema = "g string, s string, p string, o string"
         if dels:
-            ddf = spark.createDataFrame(
-                [r[1:] for r in _ground(dels)], "s string, p string, o string"
-            )
-            graph = graph.join(F.broadcast(ddf), ["s", "p", "o"], "left_anti")
+            ddf = spark.createDataFrame(_ground(dels), schema)
+            graph = _anti_join_quads(graph, F.broadcast(ddf))
         if ins:
-            idf = spark.createDataFrame(
-                [r[1:] for r in _ground(ins)], "s string, p string, o string"
+            graph = graph.unionByName(
+                spark.createDataFrame(_ground(ins), schema)
             )
-            graph = graph.unionByName(idf)
         return graph
     _, delete_t, insert_t, group, with_g, using = op
     wg = None if with_g is None else str(_resolve(with_g, pfx)[1])
     where_graph = sol_graph
-    if has_g:
-        if using is not None:
-            # USING / USING NAMED are FROM / FROM NAMED for the WHERE
-            where_graph = _apply_dataset_clauses(
-                sol_graph,
-                {"from_default": using[0], "from_named": using[1]},
-                pfx,
-            )
-        elif wg is not None:
-            # WITH: the WHERE's default graph is g's contents; named
-            # graphs stay addressable (g itself included), per §3.1.3
-            where_graph = sol_graph.filter(F.col("g") == wg).withColumn(
-                "g", F.lit(None).cast("string")
-            ).unionByName(sol_graph.filter(F.col("g").isNotNull()))
-    template_vars = {
-        t[1]
-        for tmpl in (delete_t, insert_t)
-        if tmpl
-        for quad in tmpl
-        for t in quad
-        if t is not None and t[0] == "var"
-    }
+    if using is not None:
+        # USING / USING NAMED are FROM / FROM NAMED for the WHERE
+        where_graph = _apply_dataset_clauses(
+            sol_graph,
+            {"from_default": using[0], "from_named": using[1]},
+            pfx,
+        )
+    elif wg is not None:
+        # WITH: the WHERE's default graph is g's contents; named
+        # graphs stay addressable (g itself included), per §3.1.3
+        where_graph = sol_graph.filter(F.col("g") == wg).withColumn(
+            "g", F.lit(None).cast("string")
+        ).unionByName(sol_graph.filter(F.col("g").isNotNull()))
     sol, _ = _solutions(
         where_graph, group, pfx, bindings, max_path_depth,
-        extra_bindable=template_vars,
+        extra_bindable=_template_vars(delete_t, insert_t),
     )
     for tmpl, label in ((delete_t, "DELETE"), (insert_t, "INSERT")):
         if tmpl:
@@ -5123,24 +4936,8 @@ def _apply_update_op(
 
         sol = tracked_persist(sol)
     out = graph
-    if has_g:
-        if delete_t:
-            out = _anti_join_quads(
-                out, _instantiate_quads(sol, delete_t, pfx, wg)
-            )
-        if insert_t:
-            out = out.unionByName(
-                _instantiate_quads(sol, insert_t, pfx, wg)
-            )
-        return out
     if delete_t:
-        out = out.join(
-            _instantiate_template(sol, [q[1:] for q in delete_t], pfx),
-            ["s", "p", "o"],
-            "left_anti",
-        )
+        out = _anti_join_quads(out, _instantiate_quads(sol, delete_t, pfx, wg))
     if insert_t:
-        out = out.unionByName(
-            _instantiate_template(sol, [q[1:] for q in insert_t], pfx)
-        )
+        out = out.unionByName(_instantiate_quads(sol, insert_t, pfx, wg))
     return out

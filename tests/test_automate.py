@@ -61,6 +61,12 @@ def test_ensure_triples_tsv_cache_or_build(spark, tmp_path, tf_inputs):
     again = ensure_triples_tsv("tfregulons", spark, warehouse=wh,
                                input_paths=tf_inputs)
     assert again == path and os.path.getmtime(path) == mtime
+    # the export directory sits in the warehouse but is not a table
+    ds = ensure_populated("tfregulons", spark, warehouse=wh)
+    tables = ds.catalog.list_tables()
+    assert {ds.table_name(t) for t in ds.tables} | {"_actions"} <= set(tables)
+    assert os.path.isdir(os.path.join(wh, "_exports"))
+    assert "_exports" not in tables
 
 
 def test_ensure_graph_json_cache_or_build(spark, tmp_path, tf_inputs):

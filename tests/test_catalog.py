@@ -117,6 +117,31 @@ def test_compact_table_preserves_content(spark, tmp_path):
     assert catalog.compact_table("frag") == 1
 
 
+def test_compact_table_failed_swap_keeps_the_table(spark, tmp_path, monkeypatch):
+    """Fault injection: the rename that swaps the compacted files in
+    fails. The old files must be back in place and no staging or
+    set-aside directory may be left in the warehouse."""
+    catalog = Catalog(spark, str(tmp_path / "wh"))
+    df = spark.range(1000).selectExpr("id", "id * 2 AS v")
+    catalog.write_table(df.repartition(20), "frag")
+    real_rename = os.rename
+
+    def failing_rename(src, dst):
+        # the rename that moves the compacted (staged) files into place
+        if dst == catalog.table_path("frag") and "compacting" in src:
+            raise OSError("injected rename failure")
+        return real_rename(src, dst)
+
+    monkeypatch.setattr(os, "rename", failing_rename)
+    with pytest.raises(OSError, match="injected"):
+        catalog.compact_table("frag", target_file_mb=128)
+    monkeypatch.setattr(os, "rename", real_rename)
+    assert catalog.read_table("frag").count() == 1000
+    assert len(catalog.data_files("frag")) == 20
+    assert catalog.list_tables() == ["frag"]
+    assert os.listdir(catalog.warehouse) == ["frag"]
+
+
 def test_compact_table_refuses_partitioned_layout(spark, tmp_path):
     from bio2bel_spark.catalog import Catalog
 

@@ -728,6 +728,19 @@ def test_bindings_filter_values_interplay(triples):
         bindings={"want": "beta", "n": "beta"},
     )
     assert [r.e for r in got.collect()] == [EX + "b"]
+    # bindings substitute inside IN lists, arithmetic, function arguments
+    # and boolean operators (and only appear there)
+    got = sparql_select(
+        triples,
+        """SELECT ?e WHERE { ?e ex:name ?n .
+             FILTER(?n IN (?w1, ?w2))
+             FILTER(STRLEN(?n) + ?k > 5)
+             FILTER(!(?n = ?bad) && (CONTAINS(?n, ?frag) || ?n = ?bad)) }""",
+        prefixes=PFX,
+        bindings={"w1": "alpha", "w2": "delta", "k": "1", "bad": "alpha",
+                  "frag": "el"},
+    )
+    assert [r.e for r in got.collect()] == [EX + "d"]
     # binding incompatible with every VALUES row empties the result
     got = sparql_select(
         triples,

@@ -362,6 +362,19 @@ def test_having_mixes_alias_key_and_direct_agg(typed_triples):
         prefixes=PFX,
     )
     assert {(r.t, r.n) for r in got.collect()} == {("gene", 3)}
+    # aggregate calls nested under IN, !, || and function arguments
+    for having, want in (
+        ("(COUNT(?e) IN (2, 3) && !(SUM(?v) < 10))", {"gene"}),
+        ("(COUNT(?e) IN (1) || SUM(?v) > 100)", {"pathway"}),
+        ("(STRLEN(STR(MAX(?v))) = 1 && ABS(0 - SUM(?v)) < 5)", {"pathway"}),
+    ):
+        got = sparql_select(
+            typed_triples,
+            "SELECT ?t WHERE { ?e ex:type ?t . ?e ex:score ?v } "
+            f"GROUP BY ?t HAVING {having}",
+            prefixes=PFX,
+        )
+        assert {r.t for r in got.collect()} == want, having
 
 
 def test_having_errors(typed_triples):

@@ -239,6 +239,31 @@ def test_bind_introduced_null_keeps_compatible_mapping(spark):
     # a: ?n bound to "2.0" by the BIND, the OPTIONAL row agrees
     # b: ?n unbound by the BIND (error), compatible -> takes "anything"
     assert by_s == {"a": "2.0", "b": "anything"}
+    # the error source (ABS, or ?w that only OPTIONAL binds) nested
+    # under each boolean operator still makes ?n nullable: b keeps
+    # "anything", a keeps its own boolean
+    t = spark.createDataFrame(
+        rows + [(EX + "a", EX + "opt", "1")], "s string, p string, o string"
+    )
+    for expr in (
+        "!(ABS(?v) > 5)",
+        'ABS(?v) > 5 || ?v = "-2"',
+        'ABS(?v) > 0 && ?v != "q"',
+        "ABS(?v) IN (2)",
+        '!(?w = "0")',
+        '?w = "1" || ?v = "zz"',
+        '?w = "1" && ?v != "q"',
+        '?w IN ("1")',
+    ):
+        got = sparql_select(
+            t,
+            "SELECT ?s ?n WHERE { ?s ex:val ?v . OPTIONAL { ?s ex:opt ?w } "
+            f"BIND({expr} AS ?n) OPTIONAL {{ ?s ex:abs ?n }} }}",
+            prefixes=PFX,
+        ).collect()
+        by_s = {r.s[-1]: r.n for r in got}
+        assert by_s["b"] == "anything", expr
+        assert by_s["a"] not in (None, "2.0"), expr
 
 
 def test_nested_null_introducer_detected(spark):

@@ -519,6 +519,28 @@ def test_subquery_null_introducing_group_key_is_guarded(spark):
         ).collect()
 
 
+def test_subquery_trailing_undef_exports_nullable(spark):
+    """A trailing-VALUES UNDEF leaves its variable unbound on that row,
+    so the subquery exports it as nullable and the outer join treats the
+    unbound row as compatible with every ?z — for SELECT * exactly as
+    for an explicit projection (SELECT * used to export ?z as never
+    unbound, and the equi-join dropped the UNDEF row)."""
+    t = spark.createDataFrame(
+        [("a", "p", "x"), ("b", "p", "y"), ("a", "q", "1"),
+         ("b", "q", "1"), ("a", "q", "2")],
+        "s string, p string, o string",
+    )
+    for proj in ("*", "?s ?z"):
+        got = sparql_select(
+            t,
+            f"SELECT ?s ?z WHERE {{ {{ SELECT {proj} WHERE {{ ?s <p> ?o }} "
+            'VALUES (?s ?z) { (<a> UNDEF) (<b> "1") } } ?s <q> ?z }',
+        ).collect()
+        assert sorted((r.s, r.z) for r in got) == [
+            ("a", "1"), ("a", "2"), ("b", "1"),
+        ], proj
+
+
 # ------------------------------------------------- SELECT (expr AS ?x)
 
 
