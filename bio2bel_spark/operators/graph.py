@@ -14,12 +14,13 @@ Multigraph semantics (SURVEY §7.4 hard part 2): node identity is
 relation + citation + annotations, so duplicate qualified edges are
 well-defined for dedup/counting while plain duplicates keep multiplicity.
 
-Everything here is a DataFrame transform. The one exception is the size
-gate in :func:`min_label_components`: an edge list at or below its
-``driver_threshold`` is collected and resolved by a driver union-find, and
-anything larger stays distributed (the reference holds the whole graph in
-RAM, ``compath/manager.py:384-394``; at 100 TB that is not an option).
-Each traversal exists once: :func:`reachable` is the frontier BFS behind
+Everything here is a DataFrame transform, except behind the one size gate
+(:mod:`bio2bel_spark.operators._local`): :func:`min_label_components` and
+:func:`reachable` collect an input at or below the gate and resolve it on
+the driver (a union-find, a BFS), and anything larger stays distributed
+(the reference holds the whole graph in RAM,
+``compath/manager.py:384-394``; at 100 TB that is not an option). Each
+traversal exists once: :func:`reachable` is the BFS behind
 :meth:`KnowledgeGraph.descendants` and SPARQL's constant-endpoint closures,
 and :func:`min_label_components` is the components path.
 """
@@ -30,6 +31,9 @@ import warnings
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+
+from bio2bel_spark.operators._local import collect_if_small, local_frame
 
 NODE_KEY = ["namespace", "identifier"]
 
@@ -141,7 +145,7 @@ def min_label_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    driver_threshold: int = 100_000,
+    driver_threshold: "int | None" = None,
 ) -> DataFrame:
     """Connected components of an undirected pair list, labeled by the
     MINIMUM node value in each component.
@@ -152,32 +156,20 @@ def min_label_components(
     the label (vs. a hash) makes the component id meaningful — for dedup it
     IS the surviving doc id.
 
-    Adaptive tier (the AQE-style runtime pivot): a bounded
-    ``limit(threshold+1)`` collect probes the pair-list size. At or below
-    ``driver_threshold`` pairs the transfer is bounded (≲ a few MB) and
-    latency dominates data — a driver union-find resolves the components
-    in ONE collect instead of per-iteration shuffle rounds (dedup batches:
-    dozens of verified pairs, ~2 s of pure job latency saved per call),
-    and that probe is the only execution of the upstream pipeline. Above
-    it the pair list is checkpointed once (the symmetrize union reads it
-    twice) and the distributed min-label propagation runs as before; both
-    tiers produce the identical min-label result.
+    Adaptive tier (the AQE-style runtime pivot), by the shared size gate
+    :func:`~bio2bel_spark.operators._local.collect_if_small`: at or below
+    ``driver_threshold`` pairs (default
+    :data:`~bio2bel_spark.operators._local.DRIVER_ROWS`) a driver
+    union-find resolves the components from ONE collect instead of
+    per-iteration shuffle rounds (dedup batches: dozens of verified pairs,
+    ~2 s of pure job latency saved per call). Above it the pair list is
+    checkpointed once (the symmetrize union reads it twice) and the
+    distributed min-label propagation runs; both tiers produce the
+    identical min-label result.
     """
-    from pyspark.sql import types as T
-
     pairs = pairs.select(src, dst)
-    # ONE bounded action decides the tier AND feeds the driver tier: a
-    # limit(threshold+1) collect is complete when the result fits, and the
-    # +1 sentinel row proves overflow without counting the full table.
-    # The collect runs on the UN-checkpointed pipeline: in the driver tier
-    # (the common dedup-batch case) that makes it the only execution —
-    # checkpointing first would materialize the whole LSH+verify chain a
-    # second time just to read it back once. At scale the distributed tier
-    # fires instead, and executeTake's incremental strategy overflows the
-    # threshold after a handful of partitions, so the probe stays bounded
-    # before the one real materialization below.
-    head = pairs.limit(driver_threshold + 1).collect()
-    if len(head) <= driver_threshold:
+    head = collect_if_small(pairs, driver_threshold)
+    if head is not None:
         parent: dict = {}
 
         def find(x):
@@ -207,7 +199,7 @@ def min_label_components(
                 T.StructField("component", node_type),
             ]
         )
-        return pairs.sparkSession.createDataFrame(rows, schema)
+        return local_frame(pairs.sparkSession, rows, schema)
     # distributed tier: materialize the pair list ONCE before symmetrizing —
     # the union reads `pairs` twice, and without this the whole upstream
     # pipeline (e.g. an LSH+verify chain) executes once per branch
@@ -230,19 +222,57 @@ def reachable(
 ) -> "tuple[DataFrame, bool]":
     """Zero-or-more reachability BFS: every ``node`` reached from
     ``starts(node)`` along ``hop(src, dst)`` in at most ``max_depth``
-    rounds, plus whether the traversal converged within that bound.
+    rounds, plus whether the traversal converged within that bound. A
+    null ``src``, ``dst`` or start is no node.
 
-    Each round broadcasts the frontier (the small side) into a join
-    against ``hop``, anti-joins the result against the reached set and
-    eagerly checkpoints the delta, so lineage stays O(1) deep and the
-    emptiness test reads materialized data. The reached set is a flat
-    union of pinned deltas, never re-materialized as a whole. Per-round
-    state is the frontier, never the graph's pair closure.
+    Two tiers behind the shared size gate
+    (:func:`~bio2bel_spark.operators._local.collect_if_small`), with the
+    same rows and the same ``converged``:
 
-    ``hop`` is not pinned here: a caller that reads it again afterwards
-    checkpoints it first. ``converged`` costs one extra probe round, run
-    only when the bound is hit.
+    * **driver** — when ``hop`` fits the gate, it and ``starts`` are
+      collected once, the BFS runs over a Python adjacency map and the
+      reached set comes back as a local relation: two collects, whatever
+      the depth (the reference walks the same subhierarchy in networkx,
+      ``sources/go.py:106-122``).
+    * **Spark** — otherwise ``hop`` is de-duplicated and pinned once. Each
+      round broadcasts the frontier (the small side) into a join against
+      ``hop``, anti-joins the result against the reached set and eagerly
+      checkpoints the delta, so lineage stays O(1) deep and the emptiness
+      test reads materialized data. The reached set is a flat union of
+      pinned deltas, never re-materialized as a whole. Per-round state is
+      the frontier, never the graph's pair closure.
+
+    ``converged`` costs one extra probe round, run only when the bound is
+    hit.
     """
+    hop = hop.select("src", "dst").filter(
+        F.col("src").isNotNull() & F.col("dst").isNotNull()
+    )
+    starts = starts.select("node").filter(F.col("node").isNotNull())
+    edges = collect_if_small(hop)
+    if edges is not None:
+        succ: dict = {}
+        for src, dst in edges:
+            succ.setdefault(src, []).append(dst)
+        # the seeds (a caller's roots, or nodes of ``hop`` itself) are
+        # collected whole and de-duplicated here: a Spark distinct would
+        # add a shuffle job
+        seen = dict.fromkeys(r[0] for r in starts.collect())
+
+        def _next(level) -> dict:
+            return dict.fromkeys(
+                d for n in level for d in succ.get(n, ()) if d not in seen
+            )
+
+        level = list(seen)
+        for _ in range(max_depth):
+            level = _next(level)
+            if not level:
+                break
+            seen.update(level)
+        schema = T.StructType([starts.schema["node"]])
+        frame = local_frame(starts.sparkSession, [(n,) for n in seen], schema)
+        return frame, not level or not _next(level)
 
     def _new(frontier: DataFrame, reached: DataFrame) -> DataFrame:
         return (
@@ -252,7 +282,9 @@ def reachable(
             .join(reached, "node", "left_anti")
         )
 
-    reached = starts.select("node").distinct().localCheckpoint(eager=True)
+    # pin the hop relation once, after the probe: every round joins it
+    hop = hop.distinct().localCheckpoint(eager=True)
+    reached = starts.distinct().localCheckpoint(eager=True)
     frontier = reached
     for _ in range(max_depth):
         new = _new(frontier, reached).localCheckpoint(eager=True)
@@ -448,10 +480,13 @@ class KnowledgeGraph:
         """Subhierarchy traversal (``pyobo.get_subhierarchy`` usage,
         reference ``sources/go.py:106-122``): the roots and every node
         reachable downward from ``roots(node)`` via ``edges(child, parent)``
-        within ``max_depth`` levels, by :func:`reachable`.
+        within ``max_depth`` levels, by :func:`reachable` (a hierarchy
+        within its size gate is walked on the driver, as the reference's
+        networkx subhierarchy is). A null endpoint or root is no node.
 
         A hierarchy deeper than ``max_depth`` below a root returns the
-        nodes within the bound and raises a ``RuntimeWarning``.
+        nodes within the bound and raises a ``RuntimeWarning``, in either
+        tier.
         """
         hop = edges.select(
             F.col(parent_col).alias("src"), F.col(child_col).alias("dst")

@@ -52,7 +52,8 @@ Supported subset (everything the reference's queries use, plus FILTER)::
   path length doubles per equi-join round, so a depth-D hierarchy
   closes in ``ceil(log2(D))`` rounds, bounded by ``max_path_depth``;
   a constant endpoint instead seeds an O(frontier)-state reachability
-  BFS, ``operators.graph.reachable``; evaluation of a closing hop is
+  BFS, ``operators.graph.reachable``, which walks a hop relation within
+  its size gate on the driver; evaluation of a closing hop is
   eager), ``p*`` zero-or-more (the closure plus the zero-length rows:
   a constant endpoint matches itself, two variables bind every
   subject/object in the graph),
@@ -2176,9 +2177,9 @@ def _compile_pathhop(
         """``(const, reached)`` pairs of the one-or-more closure FROM a
         constant subject: a BFS whose per-round state is the frontier,
         never the relation's pair closure (pointer doubling would
-        materialize exactly that O(nodes × depth) state)."""
-        # pin the hop relation once: every BFS round joins against it
-        r = r.distinct().localCheckpoint(eager=True)
+        materialize exactly that O(nodes × depth) state). ``r`` is not
+        pinned here: :func:`reachable` collects it under its size gate
+        and pins it once above."""
         subject = _dec("__ps") if scoped else F.col("__ps")
         starts = r.filter(subject == F.lit(const)).select(
             F.col("__po").alias("node")

@@ -55,6 +55,15 @@ def _release_operator_persists():
 
 
 @pytest.fixture()
+def size_gate(monkeypatch):
+    """Set the shared driver-tier size gate for one test: ``size_gate(0)``
+    sends every gated operator to its Spark tier."""
+    from bio2bel_spark.operators import _local
+
+    return lambda rows: monkeypatch.setattr(_local, "DRIVER_ROWS", rows)
+
+
+@pytest.fixture()
 def warehouse(tmp_path):
     return str(tmp_path / "warehouse")
 
