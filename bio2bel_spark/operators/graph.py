@@ -15,19 +15,23 @@ relation + citation + annotations, so duplicate qualified edges are
 well-defined for dedup/counting while plain duplicates keep multiplicity.
 
 Everything here is a DataFrame transform, except behind the one size gate
-(:mod:`bio2bel_spark.operators._local`): :func:`min_label_components` and
-:func:`reachable` collect an input at or below the gate and resolve it on
-the driver (a union-find, a BFS), and anything larger stays distributed
-(the reference holds the whole graph in RAM,
-``compath/manager.py:384-394``; at 100 TB that is not an option). Each
-traversal exists once: :func:`reachable` is the BFS behind
+(:mod:`bio2bel_spark.operators._local`): :func:`min_label_components`,
+:func:`reachable` and the whole-graph ops of :class:`KnowledgeGraph`
+(``summary``, ``connected_components``, ``degree_distribution``,
+``edge_list``) collect an input at or below the gate and resolve it on the
+driver, as the reference does from its in-memory ``BELGraph``
+(``bel_manager.py:61-94``, ``compath/manager.py:384-394``); anything
+larger stays distributed (at 100 TB RAM is not an option). Each traversal
+exists once: :func:`reachable` is the BFS behind
 :meth:`KnowledgeGraph.descendants` and SPARQL's constant-endpoint closures,
-and :func:`min_label_components` is the components path.
+:func:`_min_labels` is the one driver union-find, and
+:func:`min_label_components` is the distributed components path.
 """
 
 from __future__ import annotations
 
 import warnings
+from collections import Counter
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -140,6 +144,53 @@ def _propagate_min_labels(
     return labels
 
 
+def _min_labels(pairs) -> dict:
+    """The driver union-find: ``{node: minimum node of its component}``
+    for every node of an ``(a, b)`` pair in ``pairs``. A pair with a
+    ``None`` end, or a self-loop, joins nothing and adds no node. The
+    driver tier of :func:`min_label_components` and of the whole-graph
+    ops of :class:`KnowledgeGraph`."""
+    parent: dict = {}
+
+    def find(x):
+        root = x
+        while parent[root] != root:
+            root = parent[root]
+        while parent[x] != root:  # path compression
+            parent[x], x = root, parent[x]
+        return root
+
+    for a, b in pairs:
+        if a is None or b is None or a == b:
+            continue
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            # union by MIN so the root IS the min-label
+            lo, hi = (ra, rb) if ra < rb else (rb, ra)
+            parent[hi] = lo
+    return {n: find(n) for n in parent}
+
+
+def _local_components(nodes: list, edges: list) -> dict:
+    """``{node key: component}`` of :meth:`KnowledgeGraph._collect_small`'s
+    rows, by :func:`_min_labels` over the edges whose endpoint hashes are
+    both declared: the driver tier of the components ops, with the Spark
+    tier's minimum-hash labels."""
+    declared = {h for _, h in nodes}
+    labels = _min_labels(
+        (a, b) for _, _, a, b, _ in edges if a in declared and b in declared
+    )
+    return {key: labels.get(h, h) for key, h in nodes}
+
+
+def _not_null(*fields) -> T.StructType:
+    """A schema of non-nullable ``(name, type)`` fields: a driver tier's
+    result schema, equal to its Spark tier's."""
+    return T.StructType([T.StructField(n, t, False) for n, t in fields])
+
+
 def min_label_components(
     pairs: DataFrame,
     src: str = "src",
@@ -159,39 +210,18 @@ def min_label_components(
     Adaptive tier (the AQE-style runtime pivot), by the shared size gate
     :func:`~bio2bel_spark.operators._local.collect_if_small`: at or below
     ``driver_threshold`` pairs (default
-    :data:`~bio2bel_spark.operators._local.DRIVER_ROWS`) a driver
-    union-find resolves the components from ONE collect instead of
-    per-iteration shuffle rounds (dedup batches: dozens of verified pairs,
-    ~2 s of pure job latency saved per call). Above it the pair list is
-    checkpointed once (the symmetrize union reads it twice) and the
-    distributed min-label propagation runs; both tiers produce the
-    identical min-label result.
+    :data:`~bio2bel_spark.operators._local.DRIVER_ROWS`) the driver
+    union-find :func:`_min_labels` resolves the components from ONE
+    collect instead of per-iteration shuffle rounds (dedup batches: dozens
+    of verified pairs, ~2 s of pure job latency saved per call). Above it
+    the pair list is checkpointed once (the symmetrize union reads it
+    twice) and the distributed min-label propagation runs; both tiers
+    produce the identical min-label result.
     """
     pairs = pairs.select(src, dst)
     head = collect_if_small(pairs, driver_threshold)
     if head is not None:
-        parent: dict = {}
-
-        def find(x):
-            root = x
-            while parent[root] != root:
-                root = parent[root]
-            while parent[x] != root:  # path compression
-                parent[x], x = root, parent[x]
-            return root
-
-        for r in head:
-            a, b = r[0], r[1]
-            if a is None or b is None or a == b:
-                continue
-            parent.setdefault(a, a)
-            parent.setdefault(b, b)
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                # union by MIN so the root IS the min-label
-                lo, hi = (ra, rb) if ra < rb else (rb, ra)
-                parent[hi] = lo
-        rows = [(n, find(n)) for n in parent]
+        labels = _min_labels((r[0], r[1]) for r in head)
         node_type = pairs.schema[src].dataType
         schema = T.StructType(
             [
@@ -199,7 +229,7 @@ def min_label_components(
                 T.StructField("component", node_type),
             ]
         )
-        return local_frame(pairs.sparkSession, rows, schema)
+        return local_frame(pairs.sparkSession, list(labels.items()), schema)
     # distributed tier: materialize the pair list ONCE before symmetrizing —
     # the union reads `pairs` twice, and without this the whole upstream
     # pipeline (e.g. an LSH+verify chain) executes once per branch
@@ -396,18 +426,71 @@ class KnowledgeGraph:
         )
         return s.unionByName(t).dropDuplicates(NODE_KEY)
 
+    # ------------------------------------------------------ driver tier (G4)
+    def _collect_small(self, with_nodes: bool = True):
+        """The input of the whole-graph ops' driver tier, or ``None`` when
+        a table is over the shared size gate
+        (:func:`~bio2bel_spark.operators._local.collect_if_small`): one
+        gated collect per table, the edge probe skipped when the nodes are
+        already over.
+
+        Returns ``(nodes, edges)``: node rows ``(key, hash)`` (``None``
+        without ``with_nodes``) and edge rows ``(source key, target key,
+        source hash, target hash, citation or None)``. Spark computes the
+        ``xxhash64`` in the projection, so a driver label is the Spark
+        tier's label bit for bit.
+        """
+        nodes = None
+        if with_nodes:
+            key = node_key_col()
+            nodes = collect_if_small(
+                self.nodes.select(key.alias("node"), F.xxhash64(key).alias("h"))
+            )
+            if nodes is None:
+                return None
+        src = F.concat_ws(":", "source_ns", "source_id")
+        dst = F.concat_ws(":", "target_ns", "target_id")
+        citation = (
+            F.col("citation") if "citation" in self.edges.columns else F.lit(None)
+        )
+        edges = collect_if_small(
+            self.edges.select(
+                src.alias("src"),
+                dst.alias("dst"),
+                F.xxhash64(src).alias("a"),
+                F.xxhash64(dst).alias("b"),
+                citation.alias("citation"),
+            )
+        )
+        return None if edges is None else (nodes, edges)
+
     # ------------------------------------------------------------ summary (G4)
     def summary(self, with_components: bool = True) -> dict:
         """Graph summary stats matching the reference's published metrics
-        (``sources/intact.py:174-190``): nodes, edges, citations, components,
-        density. Edge and citation counts share one aggregate job."""
-        n_nodes = self.nodes.count()
-        citations = (
-            F.countDistinct("citation")
-            if "citation" in self.edges.columns
-            else F.lit(0)
-        )
-        n_edges, n_citations = self.edges.agg(F.count(F.lit(1)), citations).first()
+        (``sources/intact.py:174-190``): nodes (node rows), edges, distinct
+        citations, components, density.
+
+        At or below the size gate the counts come from the driver tier's
+        two collects (:meth:`_collect_small`), components included, as the
+        reference reads them off its in-memory ``BELGraph``. Above it each
+        count is a Spark job (edge and citation counts share one aggregate)
+        and components are :meth:`connected_components`' Spark tier.
+        """
+        small = self._collect_small()
+        if small is not None:
+            nodes, edges = small
+            n_nodes, n_edges = len(nodes), len(edges)
+            n_citations = len({e[4] for e in edges} - {None})
+        else:
+            n_nodes = self.nodes.count()
+            citations = (
+                F.countDistinct("citation")
+                if "citation" in self.edges.columns
+                else F.lit(0)
+            )
+            n_edges, n_citations = self.edges.agg(
+                F.count(F.lit(1)), citations
+            ).first()
         density = (
             float(n_edges) / (n_nodes * (n_nodes - 1)) if n_nodes > 1 else 0.0
         )
@@ -418,9 +501,11 @@ class KnowledgeGraph:
             "density": density,
         }
         if with_components:
-            out["components"] = self.connected_components().select(
-                "component"
-            ).distinct().count()
+            out["components"] = (
+                len(set(_local_components(*small).values()))
+                if small is not None
+                else self._spark_components().select("component").distinct().count()
+            )
         return out
 
     # ------------------------------------------------------ components (G4/G5)
@@ -429,16 +514,38 @@ class KnowledgeGraph:
         nodes.
 
         Returns ``(namespace, identifier, component)`` for every declared
-        node, where ``component`` is the minimum 64-bit node hash
+        node key, where ``component`` is the minimum 64-bit node hash
         (``xxhash64`` of ``namespace:identifier``) in the component. An edge
         counts only when both endpoints are declared nodes; a node with no
-        such edge is its own component.
+        such edge is its own component. The key is split on its first
+        ``:``, since identifiers may contain one (``GO:0001``).
 
-        The hashed pair list goes to :func:`min_label_components`, so a
-        graph at or below its size gate is resolved by one driver
-        union-find, and a larger one by distributed min-label propagation
-        (``max_iterations`` bounds its rounds).
+        Two tiers with the same rows: at or below the size gate the
+        driver union-find :func:`_min_labels` runs over the collected
+        tables (:meth:`_collect_small`) and the rows come back as a local
+        relation; above it the hashed pair list goes to
+        :func:`min_label_components` (``max_iterations`` bounds its
+        distributed rounds).
         """
+        small = self._collect_small()
+        if small is None:
+            return self._spark_components(max_iterations)
+        rows = []
+        for key, component in _local_components(*small).items():
+            ns, _, ident = key.partition(":")
+            rows.append((ns, ident, component))
+        return local_frame(
+            self.nodes.sparkSession,
+            rows,
+            _not_null(
+                ("namespace", T.StringType()),
+                ("identifier", T.StringType()),
+                ("component", T.LongType()),
+            ),
+        )
+
+    def _spark_components(self, max_iterations: int = 50) -> DataFrame:
+        """The Spark tier of :meth:`connected_components`."""
         nodes = (
             self.nodes.select(node_key_col().alias("node"))
             .dropDuplicates(["node"])
@@ -503,13 +610,25 @@ class KnowledgeGraph:
         return reached
 
     def degree_distribution(self) -> DataFrame:
-        """Histogram of total (in+out) node degree: ``(degree, n_nodes)``.
+        """Histogram of total (in+out) node degree over the endpoint keys of
+        every edge: ``(degree, n_nodes)``.
 
-        Two aggregations, both map-side combinable; endpoint extraction is a
-        projection of the edge table (nodes never materialize). The
+        At or below the size gate the edge table alone is collected
+        (:meth:`_collect_small`) and counted on the driver, as the
         reference computes per-node degrees in networkx RAM
-        (``summary.py``-style stats); this shape survives any edge count.
+        (``summary.py``-style stats). Above it: two aggregations, both
+        map-side combinable; endpoint extraction is a projection of the
+        edge table (nodes never materialize), a shape that survives any
+        edge count.
         """
+        small = self._collect_small(with_nodes=False)
+        if small is not None:
+            degree = Counter(key for e in small[1] for key in e[:2])
+            return local_frame(
+                self.edges.sparkSession,
+                list(Counter(degree.values()).items()),
+                _not_null(("degree", T.LongType()), ("n_nodes", T.LongType())),
+            )
         ends = self.edges.select(
             F.concat_ws(":", "source_ns", "source_id").alias("node")
         ).unionAll(
@@ -552,12 +671,26 @@ class KnowledgeGraph:
         return enumerate_sorted(distinct_nodes, "node", "node_id")
 
     def edge_list(self) -> DataFrame:
-        """Integer edge list via two joins against the node index (J8).
+        """Integer edge list ``(source_id, target_id)``: node ids number the
+        sorted distinct node keys (:meth:`node_index`), and an edge is kept,
+        with its multiplicity, when both endpoints are declared nodes (J8;
+        the artifact the reference writes to disk at this point,
+        ``bel_manager.py:145-161``).
 
-        The index feeds both the source and the target join; persisting it
-        runs the range-partitioned enumeration once instead of once per
-        side (node-id-sized rows — the artifact the reference writes to
-        disk at this point, ``bel_manager.py:145-161``)."""
+        At or below the size gate the driver numbers the collected keys
+        (:meth:`_collect_small`; Python's ``str`` order is Spark's UTF-8
+        binary order) and pins nothing. Above it: two joins against the
+        node index, which is persisted so the range-partitioned enumeration
+        runs once instead of once per side."""
+        small = self._collect_small()
+        if small is not None:
+            nodes, edges = small
+            ids = {key: i for i, key in enumerate(sorted({key for key, _ in nodes}))}
+            return local_frame(
+                self.edges.sparkSession,
+                [(ids[s], ids[t]) for s, t, *_ in edges if s in ids and t in ids],
+                _not_null(("source_id", T.LongType()), ("target_id", T.LongType())),
+            )
         from bio2bel_spark.operators.caching import tracked_persist
 
         idx = self.node_index().transform(tracked_persist)

@@ -44,11 +44,12 @@ def test_operator_persists_are_tracked(spark, monkeypatch):
     assert not any(df.storageLevel.useMemory for df in pinned)
 
 
-def test_release_cached_empties_the_jvm_cache(spark):
+def test_release_cached_empties_the_jvm_cache(spark, size_gate):
     """Persists an op made on locals that died when it returned are still
     unpersisted: the registry holds them until release."""
     from bio2bel_spark.operators.graph import KnowledgeGraph, pagerank
 
+    size_gate(0)  # edge_list's Spark tier pins its node index
     release_cached(spark)
     spark.catalog.clearCache()
     cache = spark._jsparkSession.sharedState().cacheManager()
@@ -69,3 +70,22 @@ def test_release_cached_empties_the_jvm_cache(spark):
     assert not cache.isEmpty()
     assert release_cached(spark) == 3
     assert cache.isEmpty()
+
+
+def test_edge_list_under_the_gate_pins_nothing(spark):
+    """At or below the size gate edge_list numbers the nodes on the
+    driver: nothing is persisted, so there is nothing to release."""
+    from bio2bel_spark.operators.graph import KnowledgeGraph
+
+    release_cached(spark)
+    kg = KnowledgeGraph(
+        spark.createDataFrame(
+            [("x", "1"), ("x", "2")], "namespace string, identifier string"
+        ),
+        spark.createDataFrame(
+            [("x", "1", "x", "2")],
+            "source_ns string, source_id string, target_ns string, target_id string",
+        ),
+    )
+    assert [tuple(r) for r in kg.edge_list().collect()] == [(0, 1)]
+    assert release_cached(spark) == 0
