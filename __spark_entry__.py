@@ -335,7 +335,7 @@ def q_relation_dispatch(spark, sf_dir):
 
     # no _spread: the dispatch-code projection is cheap arithmetic — the
     # r14 interleaved A/B read 1.49s with the local round-robin exchange
-    # vs 1.32s without (plans/r14/ab_spread_results.log)
+    # vs 1.32s without
     li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
     psi = F.element_at(
         F.array(*[F.lit(c) for c in _DISPATCH_CODES]),
@@ -1095,9 +1095,9 @@ def _scale_triples(spark, sf_dir):
     # work — the r14 interleaved A/B showed the local round-robin exchange
     # LOSES for every `_scale_triples` consumer (sparql_scale_bgp 1.85s →
     # 1.23s without, scale_builtins 6.0 → 3.8, arith 2.2 → 1.1,
-    # update_graph 2.5 → 1.3; plans/r14/ab_spread_results.log). The
-    # heavy-regex datetime substrate keeps its spread
-    # (`_scale_datetime_triples`), where the A/B goes the other way.
+    # update_graph 2.5 → 1.3). The heavy-regex datetime substrate keeps
+    # its spread (`_scale_datetime_triples`), where the A/B goes the other
+    # way.
     return (
         has_part.unionByName(shipped).unionByName(in_brand)
         .unionByName(child_of).unionByName(is_root).unionByName(status)
@@ -1619,8 +1619,7 @@ def _scale_typed_triples(spark, sf_dir):
     )
     # no _spread: see _scale_triples — the typed-term pipelines lose with
     # the local exchange too (distinct_agg 0.85s → 0.61 without,
-    # typed_literals 2.84 → 2.09, bnode_iri 1.10 → 0.79;
-    # plans/r14/ab_spread_results.log)
+    # typed_literals 2.84 → 2.09, bnode_iri 1.10 → 0.79)
     return (
         price.unionByName(size)
         .unionByName(name)
@@ -2203,9 +2202,9 @@ def _docs_augmented(spark, sf_dir):
     )
     # no _spread here: most consumers' per-row work is too light to pay for
     # the local round-robin exchange (dedup_exact 0.63s → 0.30 without,
-    # lsh_fast 1.70 → 0.93, split_leakage 2.02 → 1.34;
-    # plans/r14/ab_spread_results.log). The two consumers the A/B showed
-    # gaining (ngram_jaccard_pairs, lsh_recall) spread at their call site.
+    # lsh_fast 1.70 → 0.93, split_leakage 2.02 → 1.34). The two consumers
+    # the A/B showed gaining (ngram_jaccard_pairs, lsh_recall) spread at
+    # their call site.
     return docs.unionByName(dups)
 
 
@@ -2831,8 +2830,7 @@ def _docs_multiline(spark, sf_dir):
     header on every doc and a footer shared by the even half — the input a
     C4-style line-dedup stage expects."""
     # no _spread: line-splitting consumers lose with the local exchange
-    # (line_dedup 1.06s → 0.67 without, training_pipeline 1.52 → 1.16;
-    # plans/r14/ab_spread_results.log)
+    # (line_dedup 1.06s → 0.67 without, training_pipeline 1.52 → 1.16)
     d = _t(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
@@ -5204,7 +5202,7 @@ def q_quantile_transform(spark, sf_dir):
 # The driver reads correctness results for the FIRST 50 entries of QUERIES.
 # Standing rotation convention: newest / most regression-prone queries take
 # window slots; displaced stable queries stay hash-checked by the local
-# oracle sweep (tests/test_entry_oracle.py, scripts/oracle_check.py).
+# oracle sweep (tests/test_entry_oracle.py).
 QUERIES: dict[str, Callable] = {
     # STALEST-FIRST rotation (scripts/rotate_window.py): the first
     # 50 entries are the driver's correctness window — queries never
@@ -5850,7 +5848,7 @@ def _compression_ratio_sql() -> "str | None":
     check end-to-end (same-level determinism: zlib level 6, identical
     library in-container). The corpus scale follows the harness:
     ``SPARK_GRAFT_ORACLE_SF`` (tests/conftest.py exports the suite's
-    sf_dir) or ``ORACLE_SF_DIR`` (scripts/oracle_check.py), defaulting to
+    sf_dir) or ``ORACLE_SF_DIR``, defaulting to
     sf0.01 — the scale the driver compares at. Returns None (driver falls
     back to rows-only) only if the corpus is unreadable."""
     import os

@@ -20,20 +20,22 @@ from pyspark.sql.types import StructType
 DRIVER_ROWS = 100_000
 
 
-def collect_if_small(df: DataFrame, n: Optional[int] = None) -> Optional[list]:
-    """All rows of ``df`` when there are at most ``n`` (default
-    :data:`DRIVER_ROWS`), else ``None``.
+def collect_if_small(df: DataFrame) -> Optional[list]:
+    """All rows of ``df`` when there are at most :data:`DRIVER_ROWS`, else
+    ``None``. The gate is read at call time, so setting the module global
+    moves it for every operator at once.
 
     ONE bounded action decides the tier AND feeds the driver tier: a
-    ``limit(n+1)`` collect is complete when the result fits, and the
-    sentinel row proves overflow without counting the full input. In the
-    driver tier this probe is the only execution of the upstream pipeline.
-    In the Spark tier it is one more: ``executeTake`` stops early only on
-    the final stage, so upstream shuffle and join stages run in full in
-    the probe and again when the caller pins the input — at scale, about
-    twice the upstream cost, accepted for not pinning a small input first.
+    ``limit(DRIVER_ROWS + 1)`` collect is complete when the result fits,
+    and the sentinel row proves overflow without counting the full input.
+    In the driver tier this probe is the only execution of the upstream
+    pipeline. In the Spark tier it is one more: ``executeTake`` stops
+    early only on the final stage, so upstream shuffle and join stages run
+    in full in the probe and again when the caller pins the input — at
+    scale, about twice the upstream cost, accepted for not pinning a small
+    input first.
     """
-    n = DRIVER_ROWS if n is None else n
+    n = DRIVER_ROWS
     rows = df.limit(n + 1).collect()
     return rows if len(rows) <= n else None
 

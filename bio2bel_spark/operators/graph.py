@@ -196,7 +196,6 @@ def min_label_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 50,
-    driver_threshold: "int | None" = None,
 ) -> DataFrame:
     """Connected components of an undirected pair list, labeled by the
     MINIMUM node value in each component.
@@ -209,8 +208,7 @@ def min_label_components(
 
     Adaptive tier (the AQE-style runtime pivot), by the shared size gate
     :func:`~bio2bel_spark.operators._local.collect_if_small`: at or below
-    ``driver_threshold`` pairs (default
-    :data:`~bio2bel_spark.operators._local.DRIVER_ROWS`) the driver
+    :data:`~bio2bel_spark.operators._local.DRIVER_ROWS` pairs the driver
     union-find :func:`_min_labels` resolves the components from ONE
     collect instead of per-iteration shuffle rounds (dedup batches: dozens
     of verified pairs, ~2 s of pure job latency saved per call). Above it
@@ -219,7 +217,7 @@ def min_label_components(
     produce the identical min-label result.
     """
     pairs = pairs.select(src, dst)
-    head = collect_if_small(pairs, driver_threshold)
+    head = collect_if_small(pairs)
     if head is not None:
         labels = _min_labels((r[0], r[1]) for r in head)
         node_type = pairs.schema[src].dataType

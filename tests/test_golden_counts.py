@@ -109,7 +109,7 @@ def test_golden_counts_10x(spark):
     assert got["components"] == 10 * C
 
 
-def test_components_driver_and_distributed_tiers_agree(spark):
+def test_components_driver_and_distributed_tiers_agree(spark, size_gate):
     """min_label_components' adaptive driver tier (round-7) must produce
     the identical labeling as the distributed propagation path."""
     from bio2bel_spark.operators.graph import min_label_components
@@ -122,11 +122,10 @@ def test_components_driver_and_distributed_tiers_agree(spark):
         (r.node, r.component)
         for r in min_label_components(pairs, "src", "dst").collect()
     }
+    size_gate(0)
     dist = {
         (r.node, r.component)
-        for r in min_label_components(
-            pairs, "src", "dst", driver_threshold=0
-        ).collect()
+        for r in min_label_components(pairs, "src", "dst").collect()
     }
     assert driver == dist
     assert driver == {

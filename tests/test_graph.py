@@ -188,7 +188,7 @@ def test_components_long_chain_converges(spark):
     assert comp.count() == 30
 
 
-def test_components_nonconvergence_warns(spark):
+def test_components_nonconvergence_warns(spark, size_gate):
     """Only the distributed tier of min_label_components can truncate; a
     10-node chain under the size gate is resolved exactly by the driver
     union-find even with a 2-round budget."""
@@ -205,29 +205,24 @@ def test_components_nonconvergence_warns(spark):
     kg.nodes = kg.induced_nodes()
     comp = kg.connected_components(max_iterations=2)
     assert comp.select("component").distinct().count() == 1
+    size_gate(0)
     pairs = edges.select(F.col("source_id").alias("src"), F.col("target_id").alias("dst"))
     with warnings.catch_warnings(record=True) as caught:
         warnings.simplefilter("always")
-        min_label_components(pairs, driver_threshold=0, max_iterations=2).collect()
+        min_label_components(pairs, max_iterations=2).collect()
     assert any("did not converge" in str(w.message) for w in caught)
 
 
-def test_components_tiers_agree(spark, kg, monkeypatch):
-    """connected_components returns the same rows whichever tier of
-    min_label_components resolves it."""
-    from bio2bel_spark.operators import graph
+def test_components_tiers_agree(spark, kg, size_gate):
+    """connected_components returns the same rows in the driver tier and
+    in the Spark tier (min_label_components' distributed propagation)."""
 
     def rows(g):
         return sorted(tuple(r) for r in g.connected_components().collect())
 
     full = KnowledgeGraph(kg.induced_nodes(), kg.edges)
     driver = rows(kg), rows(full)
-    real = graph.min_label_components
-    monkeypatch.setattr(
-        graph,
-        "min_label_components",
-        lambda *a, **k: real(*a, **{**k, "driver_threshold": 0}),
-    )
+    size_gate(0)
     assert (rows(kg), rows(full)) == driver
 
 
