@@ -12,7 +12,11 @@ Replaces the reference's SQLAlchemy engine/metadata layer:
 * ``Action.ls`` ordering and "latest action per resource" (docstring pattern at
   ``models.py:16``) become ``orderBy(desc)`` and a ``row_number`` window;
 * ``Action.count`` and per-table row counts are read from the parquet
-  footers of the table's data files (no Spark job).
+  footers of the table's data files (no Spark job);
+* a lookup on a small table is answered like a SQL point query: a flat
+  table under the operators' shared size gate
+  (:mod:`bio2bel_spark.operators._local`) is read with pyarrow into a local
+  relation, so filters, projections and limits over it start no Spark job.
 
 Scale notes
 -----------
@@ -30,6 +34,7 @@ correctness concern).
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 import uuid
@@ -41,6 +46,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+
+from bio2bel_spark.operators import _local
 
 #: Provenance action labels (reference: ``src/bio2bel/models.py:70-113``).
 ACTION_POPULATE = "populate"
@@ -82,6 +90,38 @@ def footer_rows(files: Iterable[str]) -> int:
     return sum(pq.read_metadata(f).num_rows for f in files)
 
 
+#: footer key under which Spark stores its own schema of the rows; Spark's
+#: parquet reader prefers it to the file's parquet schema
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and map value nullable, as Spark's
+    parquet reader reports a schema."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+             for f in dt.fields]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _spark_schema(pf: pq.ParquetFile) -> T.StructType:
+    """The schema Spark's parquet reader reports for one file: the Spark
+    schema in its footer when Spark wrote it, else the arrow schema's Spark
+    form (a naive timestamp is ``timestamp_ntz``, as Spark infers it)."""
+    stored = (pf.metadata.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if stored is not None:
+        schema = T.StructType.fromJson(json.loads(stored))
+    else:
+        schema = from_arrow_schema(pf.schema_arrow, prefer_timestamp_ntz=True)
+    return _nullable(schema)
+
+
 class Catalog:
     """Parquet-backed table catalog rooted at a warehouse directory."""
 
@@ -117,7 +157,67 @@ class Catalog:
         writer.parquet(self.table_path(name))
 
     def read_table(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.table_path(name))
+        """The table as a DataFrame, in one of two tiers behind the shared
+        size gate (:mod:`bio2bel_spark.operators._local`).
+
+        * **Driver tier:** a flat table (every data file directly under its
+          directory) whose footers count at most ``DRIVER_ROWS`` values
+          (rows times leaf columns) and ``DRIVER_BYTES`` uncompressed
+          bytes, and whose decoded arrow table also fits ``DRIVER_BYTES``,
+          is read with pyarrow into a local relation. Catalyst folds
+          filters, projections and limits over it, so a point lookup or a
+          search on it starts no Spark job.
+        * **Spark tier:** a partitioned table (partition pruning stays a
+          scan-time filter), a table over the gate, a table with no data
+          files, or one whose files disagree on the schema is a parquet
+          scan, as Spark plans it.
+
+        Either way the frame is a snapshot: it holds the rows the table had
+        when it was read, and a later write to the table does not show in
+        it (a parquet scan lists its files once, when it is created).
+        """
+        local = self._read_small(name)
+        return local if local is not None else self.spark.read.parquet(self.table_path(name))
+
+    def _read_small(self, name: str) -> Optional[DataFrame]:
+        """``read_table``'s driver tier, or ``None`` when the table is not
+        for it. Each file is read on its own: Spark-written INT96 and
+        driver-written UTC timestamps do not concatenate until both are cast
+        to the shared schema."""
+        path = self.table_path(name)
+        files = self.data_files(name)
+        if not files or any(os.path.dirname(f) != path for f in files):
+            return None
+        metas, values, nbytes = [], 0, 0
+        for f in files:
+            meta = pq.read_metadata(f)
+            # a local relation converts every value on each read: at about
+            # 160k-190k values (40k rows of 4 columns, 16k of 12) a lookup,
+            # a join or a limited read cost as much as the parquet scan
+            values += meta.num_rows * meta.num_columns
+            nbytes += sum(meta.row_group(i).total_byte_size for i in range(meta.num_row_groups))
+            # stop at the first footer past the gate: the table goes to Spark
+            if values > _local.DRIVER_ROWS or nbytes > _local.DRIVER_BYTES:
+                return None
+            metas.append(meta)
+        schema, parts = None, []
+        for f, meta in zip(files, metas):
+            with pq.ParquetFile(f, metadata=meta, coerce_int96_timestamp_unit="us") as pf:
+                file_schema = _spark_schema(pf)
+                if schema is None:
+                    schema, arrow_schema = file_schema, to_arrow_schema(file_schema)
+                elif file_schema != schema:
+                    return None
+                # INT96 reads as a naive timestamp; its values are UTC instants
+                parts.append(pf.read().cast(arrow_schema))
+        # one chunk: createDataFrame dropped the rows of a table whose
+        # leading chunks were empty (Spark's 0-row part files sort first)
+        table = pa.concat_tables(parts).combine_chunks()
+        # parquet encodings (dictionary, RLE) can make the decoded table
+        # much larger than its footers' byte count
+        if table.nbytes > _local.DRIVER_BYTES:
+            return None
+        return self.spark.createDataFrame(table, schema)
 
     def data_files(self, name: str) -> list[str]:
         """Paths of the files a Spark read of the table scans, sorted; empty
@@ -354,11 +454,15 @@ class Catalog:
         pq.write_table(event, staging, store_schema=False, write_statistics=False)
         os.rename(staging, os.path.join(path, name))
 
-    def actions(self) -> DataFrame:
-        """All provenance events, newest first (``Action.ls``, ``models.py:116-123``)."""
+    def _action_log(self) -> DataFrame:
+        """Every provenance event, in no particular order."""
         if not self.table_exists(ACTIONS_TABLE):
             return self.spark.createDataFrame([], ACTION_SCHEMA)
-        return self.read_table(ACTIONS_TABLE).orderBy(F.desc("created"))
+        return self.read_table(ACTIONS_TABLE)
+
+    def actions(self) -> DataFrame:
+        """All provenance events, newest first (``Action.ls``, ``models.py:116-123``)."""
+        return self._action_log().orderBy(F.desc("created"))
 
     def count_actions(self) -> int:
         """``Action.count`` (``models.py:125-133``), from the events' footers."""
@@ -366,10 +470,12 @@ class Catalog:
 
     def latest_actions(self) -> DataFrame:
         """Latest event per resource — the ``order_by(desc).first()`` docstring
-        pattern (``models.py:16``) as a single window plan (SURVEY §2.6 O1)."""
+        pattern (``models.py:16``) as a single window plan (SURVEY §2.6 O1).
+        The window's own order picks the latest event, so it reads the raw
+        log: a sort under it would only add a range-sampling job."""
         w = Window.partitionBy("resource").orderBy(F.desc("created"))
         return (
-            self.actions()
+            self._action_log()
             .withColumn("_rn", F.row_number().over(w))
             .filter(F.col("_rn") == 1)
             .drop("_rn")

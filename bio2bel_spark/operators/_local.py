@@ -5,6 +5,14 @@ in driver memory, where a few Python loops cost less than the job launches
 of a distributed loop; a larger input keeps the Spark plan. Every operator
 with a driver tier asks :func:`collect_if_small` and builds its result with
 :func:`local_frame`, so there is one threshold and one way to cross it.
+
+``Catalog.read_table`` is the gate's one other user: a flat table whose
+parquet footers count at most :data:`DRIVER_ROWS` values (rows times leaf
+columns, since the read converts every value) and :data:`DRIVER_BYTES`
+uncompressed bytes, and whose decoded table also fits :data:`DRIVER_BYTES`,
+is read on the driver into a local relation. Both globals are read at call
+time, so setting :data:`DRIVER_ROWS` moves the operators and the catalog
+reads together.
 """
 
 from __future__ import annotations
@@ -18,6 +26,12 @@ from pyspark.sql.types import StructType
 
 # at this many rows a collect is a few MB: latency, not data, dominates
 DRIVER_ROWS = 100_000
+# a table read on the driver must also fit this many bytes, both in its
+# footers' uncompressed row groups and as the decoded arrow table, so a few
+# wide rows cannot fill driver memory. It stays under Spark's arrow
+# ``localRelationThreshold`` (48 MiB by default): past that,
+# ``createDataFrame`` ships the rows as an RDD and every action is a job.
+DRIVER_BYTES = 16 << 20
 
 
 def collect_if_small(df: DataFrame) -> Optional[list]:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import os
 import sys
+import time
 
 import pytest
 
@@ -57,10 +58,41 @@ def _release_operator_persists():
 @pytest.fixture()
 def size_gate(monkeypatch):
     """Set the shared driver-tier size gate for one test: ``size_gate(0)``
-    sends every gated operator to its Spark tier."""
+    sends every gated operator, and ``Catalog.read_table`` of a non-empty
+    table, to its Spark tier."""
     from bio2bel_spark.operators import _local
 
     return lambda rows: monkeypatch.setattr(_local, "DRIVER_ROWS", rows)
+
+
+@pytest.fixture()
+def spark_jobs(spark):
+    """``spark_jobs(fn)`` runs ``fn()`` under a fresh job group and returns
+    ``(fn's result, the number of Spark jobs it started)``."""
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        tag = uuid.uuid4().hex
+        group, fence = f"counted-{tag}", f"fence-{tag}"
+        try:
+            sc.setJobGroup(group, "jobs counted")
+            value = fn()
+            # the status tracker is fed asynchronously, in job order: once
+            # a later group's job is visible, every job of ``group`` is
+            sc.setJobGroup(fence, "one job")
+            spark.range(1).count()
+            deadline = time.time() + 30
+            while not tracker.getJobIdsForGroup(fence) and time.time() < deadline:
+                time.sleep(0.05)
+            assert tracker.getJobIdsForGroup(fence)
+            return value, len(tracker.getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    return run
 
 
 @pytest.fixture()

@@ -134,7 +134,7 @@ def _tree(path):
                   for d, _, fs in os.walk(path) for f in fs)
 
 
-def test_counts_skip_files_spark_does_not_read(spark, warehouse):
+def test_counts_skip_files_spark_does_not_read(spark, warehouse, size_gate):
     """A crashed write's ``_temporary/`` output holds parquet files Spark
     never scans; footer counts and ``table_stats`` must skip them too."""
     import pyarrow as pa
@@ -147,6 +147,7 @@ def test_counts_skip_files_spark_does_not_read(spark, warehouse):
     os.makedirs(stray)
     pq.write_table(pa.table({"id": [7, 8], "test_id": ["X:7", "X:8"], "name": ["7", "8"]}),
                    os.path.join(stray, "part-x.parquet"))
+    size_gate(0)
     df = ds.table("model")
     stats = {r["metric"]: r["value"] for r in ds.catalog.table_stats(name).collect()}
     assert ds.count_table("model") == ds.summarize()["model"] == df.count() == 5
@@ -176,3 +177,17 @@ def test_bookkeeping_starts_no_spark_job(spark, warehouse):
         assert sc.statusTracker().getJobIdsForGroup("bookkeeping") == []
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def test_latest_actions_runs_no_sort_job(spark, warehouse, spark_jobs):
+    """``latest_actions`` windows over the raw log: sorting the log first
+    only added a range-sampling job."""
+    ds = TestDataset(spark, warehouse)
+    for i in range(6):
+        ds.catalog.store_action(f"r{i % 3}", ACTION_POPULATE)
+        ds.catalog.store_action(f"r{i % 3}", ACTION_DROP if i % 2 else ACTION_POPULATE)
+    latest, jobs = spark_jobs(lambda: ds.catalog.latest_actions().collect())
+    assert jobs <= 2
+    assert sorted((r["resource"], r["action"]) for r in latest) == [
+        ("r0", ACTION_DROP), ("r1", ACTION_POPULATE), ("r2", ACTION_DROP),
+    ]
