@@ -13,6 +13,11 @@ uncompressed bytes, and whose decoded table also fits :data:`DRIVER_BYTES`,
 is read on the driver into a local relation. Both globals are read at call
 time, so setting :data:`DRIVER_ROWS` moves the operators and the catalog
 reads together.
+
+:func:`rows_are_fixed` says when a gated collect may be kept and reused:
+only for a plan whose every collect returns the same rows. A holder reuses
+such rows only while :func:`within_gate` still accepts them, so a lowered
+gate sends it to the Spark tier as it would a fresh input.
 """
 
 from __future__ import annotations
@@ -49,9 +54,43 @@ def collect_if_small(df: DataFrame) -> Optional[list]:
     scale, about twice the upstream cost, accepted for not pinning a small
     input first.
     """
-    n = DRIVER_ROWS
-    rows = df.limit(n + 1).collect()
-    return rows if len(rows) <= n else None
+    rows = df.limit(DRIVER_ROWS + 1).collect()
+    return rows if within_gate(rows) else None
+
+
+def within_gate(rows: list) -> bool:
+    """Whether ``rows`` fit the gate as it is set now."""
+    return len(rows) <= DRIVER_ROWS
+
+
+def rows_are_fixed(df: DataFrame) -> bool:
+    """Whether every collect of ``df`` returns the same rows, so one
+    collect may stand for all later ones.
+
+    True when ``df``'s analysed plan, its subqueries included, is
+    deterministic, reads no clock, and has only ``LocalRelation`` leaves: a
+    local relation carries its rows inside the plan. Any other leaf (a file
+    scan, an RDD, a catalog table) is read anew by every action and may
+    change, so it is never fixed; neither is ``rand()`` or ``uuid()``, nor
+    ``current_date()`` and its kin, which Spark calls deterministic because
+    they hold still within one query, not across queries. A few JVM calls,
+    no Spark job.
+    """
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    plan = df._jdf.queryExecution().analyzed()
+    subqueries = plan.subqueriesAll()
+    for p in [plan, *(subqueries.apply(i) for i in range(subqueries.size()))]:
+        leaves = p.collectLeaves()
+        if (
+            not p.deterministic()
+            or p.containsPattern(patterns.CURRENT_LIKE())
+            or any(
+                leaves.apply(i).nodeName() != "LocalRelation"
+                for i in range(leaves.size())
+            )
+        ):
+            return False
+    return True
 
 
 def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:

@@ -45,7 +45,9 @@ def release_cached(spark: SparkSession) -> int:
 
     Returns the number of DataFrames released. Non-blocking unpersist: the
     executors drop blocks asynchronously, the plans stay valid (re-running
-    them just recomputes).
+    them just recomputes). Driver-tier rows a ``KnowledgeGraph`` holds are
+    Python objects on that graph, not Spark storage: they are not released
+    here, and go when the graph does.
     """
     released = 0
     for df in _REGISTRY.pop(spark, []):

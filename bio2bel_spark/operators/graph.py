@@ -20,7 +20,8 @@ Everything here is a DataFrame transform, except behind the one size gate
 (``summary``, ``connected_components``, ``degree_distribution``,
 ``edge_list``) collect an input at or below the gate and resolve it on the
 driver, as the reference does from its in-memory ``BELGraph``
-(``bel_manager.py:61-94``, ``compath/manager.py:384-394``); anything
+(``bel_manager.py:61-94``, ``compath/manager.py:384-394``), and a graph
+over fixed rows keeps those collects for its later calls; anything
 larger stays distributed (at 100 TB RAM is not an option). Each traversal
 exists once: :func:`reachable` is the BFS behind
 :meth:`KnowledgeGraph.descendants` and SPARQL's constant-endpoint closures,
@@ -37,7 +38,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from bio2bel_spark.operators._local import collect_if_small, local_frame
+from bio2bel_spark.operators._local import (
+    collect_if_small,
+    local_frame,
+    rows_are_fixed,
+    within_gate,
+)
 
 NODE_KEY = ["namespace", "identifier"]
 
@@ -391,11 +397,19 @@ def pagerank(
 
 
 class KnowledgeGraph:
-    """Distributed property multigraph."""
+    """Distributed property multigraph.
+
+    A graph over fixed rows (:func:`~bio2bel_spark.operators._local.rows_are_fixed`:
+    local relations only, nothing non-deterministic) holds its driver-tier
+    collects once taken, as the reference holds its ``BELGraph`` in memory:
+    the rows live and die with this object (:meth:`_collect_small`).
+    """
 
     def __init__(self, nodes: DataFrame, edges: DataFrame):
         self.nodes = nodes
         self.edges = edges
+        # projection name -> (the frame it was collected from, its rows)
+        self._held = {}
 
     # ------------------------------------------------------------------ algebra
     def union(self, other: "KnowledgeGraph") -> "KnowledgeGraph":
@@ -437,12 +451,21 @@ class KnowledgeGraph:
         source hash, target hash, citation or None)``. Spark computes the
         ``xxhash64`` in the projection, so a driver label is the Spark
         tier's label bit for bit.
+
+        A collect whose projection has fixed rows
+        (:func:`~bio2bel_spark.operators._local.rows_are_fixed`) is held on
+        this graph and answers later calls with no Spark job, while
+        ``self.nodes`` or ``self.edges`` is still the frame it came from
+        and its rows still fit the gate as set at that call; an over-gate
+        ``None`` is never held. Held rows live as long as this object and
+        are not Spark storage, so ``release_cached`` leaves them be. Any
+        other graph collects on every call.
         """
         nodes = None
         if with_nodes:
             key = node_key_col()
-            nodes = collect_if_small(
-                self.nodes.select(key.alias("node"), F.xxhash64(key).alias("h"))
+            nodes = self._gated(
+                "nodes", self.nodes, key.alias("node"), F.xxhash64(key).alias("h")
             )
             if nodes is None:
                 return None
@@ -451,16 +474,28 @@ class KnowledgeGraph:
         citation = (
             F.col("citation") if "citation" in self.edges.columns else F.lit(None)
         )
-        edges = collect_if_small(
-            self.edges.select(
-                src.alias("src"),
-                dst.alias("dst"),
-                F.xxhash64(src).alias("a"),
-                F.xxhash64(dst).alias("b"),
-                citation.alias("citation"),
-            )
+        edges = self._gated(
+            "edges",
+            self.edges,
+            src.alias("src"),
+            dst.alias("dst"),
+            F.xxhash64(src).alias("a"),
+            F.xxhash64(dst).alias("b"),
+            citation.alias("citation"),
         )
         return None if edges is None else (nodes, edges)
+
+    def _gated(self, name: str, frame: DataFrame, *columns):
+        """The gated collect of ``frame.select(*columns)``, held under
+        ``name`` when its rows are fixed (see :meth:`_collect_small`)."""
+        held = self._held.get(name)
+        if held is not None and held[0] is frame:
+            return held[1] if within_gate(held[1]) else None
+        projection = frame.select(*columns)
+        rows = collect_if_small(projection)
+        if rows is not None and rows_are_fixed(projection):
+            self._held[name] = (frame, rows)
+        return rows
 
     # ------------------------------------------------------------ summary (G4)
     def summary(self, with_components: bool = True) -> dict:

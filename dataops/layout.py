@@ -136,11 +136,20 @@ def hilbert_value(x: Column, y: Column, bits: int = 8) -> Column:
     would triple per level). Bit tests use integer shifts by the bound
     level column via ``call_function`` (the python shift wrappers only
     accept literal amounts; the Catalyst expressions do not care).
+
+    A negative coordinate is outside the curve's domain and fails the
+    query; a null one gives a null index.
     """
     levels = F.sequence(F.lit(bits - 1), F.lit(0), F.lit(-1))
+
+    def nonnegative(c: Column, name: str) -> Column:
+        c = c.cast("long")
+        message = F.concat(F.lit(f"hilbert_value: negative {name} "), c.cast("string"))
+        return F.when(c < 0, F.raise_error(message)).otherwise(c)
+
     init = F.struct(
-        x.cast("long").alias("x"),
-        y.cast("long").alias("y"),
+        nonnegative(x, "x").alias("x"),
+        nonnegative(y, "y").alias("y"),
         F.lit(0).cast("long").alias("d"),
     )
 

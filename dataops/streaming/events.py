@@ -211,7 +211,6 @@ def _sessionize_group(
             out.append((user_id, start_us, end_us, n, total))
             start_us, end_us, n, total = ts_us, ts_us, 1, float(value)
     state.update((start_us, end_us, n, total))
-    state.setTimeoutDuration(gap_seconds * 1000)
     if out:
         yield pd.DataFrame(
             {
@@ -230,6 +229,10 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
     Emits a session row once a later event arrives more than ``gap_seconds``
     after the session's last event (the still-open session stays in state).
     State is one tiny tuple per user — bounded, shuffle-partitioned by key.
+
+    No state timeout: a processing-time timeout makes Spark run a no-data
+    batch after every batch, so an ``availableNow`` query over this operator
+    would never terminate.
     """
 
     def fn(key, pdf_iter, state):
@@ -243,7 +246,7 @@ def sessionize(events: DataFrame, gap_seconds: int = 1800) -> DataFrame:
             outputStructType=SESSION_SCHEMA,
             stateStructType=_STATE_SCHEMA,
             outputMode="append",
-            timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+            timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
 

@@ -11,7 +11,6 @@ agree with Spark and start no Spark job.
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 
@@ -155,28 +154,18 @@ def test_counts_skip_files_spark_does_not_read(spark, warehouse, size_gate):
     assert stats["n_files"] == len(df.inputFiles())
 
 
-def test_bookkeeping_starts_no_spark_job(spark, warehouse):
+def test_bookkeeping_starts_no_spark_job(spark, warehouse, spark_jobs):
     """Provenance appends and row counts are driver-side: no Spark job."""
     ds = TestDataset(spark, warehouse)
     ds.populate()
-    sc = spark.sparkContext
-    try:
-        sc.setJobGroup("bookkeeping", "no jobs expected")
+
+    def bookkeeping():
         ds.catalog.store_action("test", ACTION_POPULATE)
         assert ds.catalog.count_actions() == 2
         assert ds.count_table("model") == 5
         assert ds.summarize() == {"model": 5}
-        # the status tracker is fed asynchronously, in job order: once a
-        # later group's job is visible, any job of the first group would be
-        sc.setJobGroup("fence", "one job")
-        spark.range(1).count()
-        deadline = time.time() + 30
-        while not sc.statusTracker().getJobIdsForGroup("fence") and time.time() < deadline:
-            time.sleep(0.05)
-        assert sc.statusTracker().getJobIdsForGroup("fence")
-        assert sc.statusTracker().getJobIdsForGroup("bookkeeping") == []
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
+
+    assert spark_jobs(bookkeeping)[1] == 0
 
 
 def test_latest_actions_runs_no_sort_job(spark, warehouse, spark_jobs):

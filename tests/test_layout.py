@@ -162,6 +162,21 @@ def test_hilbert_value_matches_model_and_is_a_curve(spark):
         assert abs(xa - xb) + abs(ya - yb) == 1
 
 
+def test_hilbert_value_rejects_negative_coordinates(spark):
+    """A negative coordinate fails loudly instead of mapping to some other
+    cell's index; a null one stays null."""
+    from dataops.layout import hilbert_value
+
+    def h(x, y):
+        df = spark.createDataFrame([(x, y)], "x long, y long")
+        return df.select(hilbert_value(F.col("x"), F.col("y"), bits=4)).first()[0]
+
+    assert h(None, 3) is None
+    for x, y in [(-1, 0), (0, -1)]:
+        with pytest.raises(Exception, match="hilbert_value: negative"):
+            h(x, y)
+
+
 def test_hilbert_layout_prunes_both_dims(spark):
     from dataops.layout import hilbert_layout
     import pytest

@@ -52,7 +52,7 @@ def _run_to_memory(df, name, tmp_path_factory, mode="append", timeout=240):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(timeout)
+    return q.awaitTermination(timeout)
 
 
 def test_hourly_rollup_matches_batch(spark, events_dir, tmp_path_factory):
@@ -100,7 +100,8 @@ def test_session_rollup_builtin(spark, events_dir, tmp_path_factory):
 
 def test_sessionize_stateful(spark, events_dir, tmp_path_factory):
     sess = sev.sessionize(sev.stream_events(spark, events_dir), gap_seconds=900)
-    _run_to_memory(sess, "t_sess_state", tmp_path_factory)
+    # the availableNow query ends once its input is drained
+    assert _run_to_memory(sess, "t_sess_state", tmp_path_factory)
     rows = spark.sql("select * from t_sess_state").collect()
     # only CLOSED sessions are emitted: user 1's first session closes when
     # t=60 arrives; the t=60 session and user 2's stay open in state
