@@ -302,8 +302,7 @@ class _Handler(BaseHTTPRequestHandler):
                     return self._send({"error": f"no table {name!r}"}, 404)
                 return self._send(_json_rows(cat.table_stats(name), limit))
             if parts[0] == "actions":
-                df = cat.actions().orderBy(F.desc("created"))
-                return self._send(_json_rows(df, limit))
+                return self._send(_json_rows(cat.actions(), limit))
             return self._send({"error": "unknown endpoint"}, 404)
         except Exception as exc:  # noqa: BLE001 — surface, don't kill server
             return self._send({"error": str(exc)[:500]}, 500)

@@ -131,17 +131,12 @@ def main(argv: Optional[list[str]] = None, spark=None) -> int:
                 for table, n in sorted(ds.summarize().items()):
                     print(f"{name}.{table}\t{n}")
         elif args.command == "sheet":
-            # M4: one summary DataFrame across datasets (reference sheet cmd)
-            rows = []
+            # M4: one summary table across datasets (reference sheet cmd),
+            # sorted by module, then table
             for name, cls in sorted(get_dataset_classes().items()):
                 ds = _instantiate(cls, spark, args.warehouse)
                 for table, n in sorted(ds.summarize().items()):
-                    rows.append((name, table, n))
-            sheet = spark.createDataFrame(
-                rows, "module string, table string, n_rows long"
-            )
-            for r in sheet.orderBy("module", "table").collect():
-                print(f"{r['module']}\t{r['table']}\t{r['n_rows']}")
+                    print(f"{name}\t{table}\t{n}")
         elif args.command == "actions":
             from bio2bel_spark.catalog import Catalog
 

@@ -161,22 +161,15 @@ def relation_table(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(RELATION_ROWS, RELATION_SCHEMA)
 
 
-def _lookup(df, key_expr, mapping, value_alias, name_alias=None):
-    """Broadcast left-join helper: mapping(key, value[, name]) onto key_expr."""
+def _lookup(df, key_expr, mapping, value_alias):
+    """Broadcast left-join helper: mapping(key, value) onto key_expr."""
     if mapping is None:
-        df = df.withColumn(value_alias, F.lit(None).cast("string"))
-        if name_alias:
-            df = df.withColumn(name_alias, F.lit(None).cast("string"))
-        return df
+        return df.withColumn(value_alias, F.lit(None).cast("string"))
     cols = mapping.columns
-    sel = [F.col(cols[0]).alias("__k"), F.col(cols[1]).alias(value_alias)]
-    if name_alias and len(cols) > 2:
-        sel.append(F.col(cols[2]).alias(name_alias))
-    m = mapping.select(*sel).dropDuplicates(["__k"])
-    out = df.withColumn("__k", key_expr).join(F.broadcast(m), "__k", "left").drop("__k")
-    if name_alias and len(cols) <= 2:
-        out = out.withColumn(name_alias, F.lit(None).cast("string"))
-    return out
+    m = mapping.select(
+        F.col(cols[0]).alias("__k"), F.col(cols[1]).alias(value_alias)
+    ).dropDuplicates(["__k"])
+    return df.withColumn("__k", key_expr).join(F.broadcast(m), "__k", "left").drop("__k")
 
 
 def _parse_interactor(

@@ -573,6 +573,23 @@ class _Parser:
         if v.upper() != value and v != value:
             raise SparqlError(f"expected {value!r}, got {v!r}")
 
+    def expect_eof(self) -> None:
+        if self.peek()[0] != "eof":
+            raise SparqlError(f"trailing input at {self.peek()[1]!r}")
+
+    def parse_as_var(self, missing: str) -> str:
+        """``AS ?var )`` — the name that closes a parenthesized SELECT
+        expression, GROUP BY key or BIND; ``missing`` is the error when
+        the ``AS`` is absent."""
+        if not self.at_keyword("AS"):
+            raise SparqlError(missing)
+        self.next()
+        kind, v = self.next()
+        if kind != "var":
+            raise SparqlError(f"AS expects ?var, got {v!r}")
+        self.expect(")")
+        return v[1:]
+
     def at_keyword(self, word: str) -> bool:
         kind, v = self.peek()
         return kind == "keyword" and v.upper() == word
@@ -635,8 +652,7 @@ class _Parser:
         if self.at_keyword("WHERE"):
             self.next()
         group = self.parse_group()
-        if self.peek()[0] != "eof":
-            raise SparqlError(f"trailing input at {self.peek()[1]!r}")
+        self.expect_eof()
         return prefixes, group
 
     def parse_describe(self):
@@ -669,8 +685,7 @@ class _Parser:
             group = self.parse_group()
         elif self.peek()[1] == "{":
             group = self.parse_group()
-        if self.peek()[0] != "eof":
-            raise SparqlError(f"trailing input at {self.peek()[1]!r}")
+        self.expect_eof()
         if group is None and any(t[0] == "var" for t in terms):
             raise SparqlError(
                 "DESCRIBE ?var needs a WHERE group that binds it"
@@ -780,8 +795,7 @@ class _Parser:
         group = self.parse_group()
         order = self.parse_order()
         limit, offset = self.parse_limit_offset()
-        if self.peek()[0] != "eof":
-            raise SparqlError(f"trailing input at {self.peek()[1]!r}")
+        self.expect_eof()
         return prefixes, template, group, order, limit, offset
 
     #: graph-management / federation forms that cannot mean anything over
@@ -970,8 +984,7 @@ class _Parser:
                 break  # a trailing ';' is legal in the grammar
             prefixes.update(self.parse_prefixes())
             ops.append((dict(prefixes), self.parse_update_op()))
-        if self.peek()[0] != "eof":
-            raise SparqlError(f"trailing input at {self.peek()[1]!r}")
+        self.expect_eof()
         return ops
 
     def parse_query(self):
@@ -982,8 +995,7 @@ class _Parser:
                 "for ASK / sparql_construct for CONSTRUCT)"
             )
         projection, group, modifiers = self.parse_select_body()
-        if self.peek()[0] != "eof":
-            raise SparqlError(f"trailing input at {self.peek()[1]!r}")
+        self.expect_eof()
         return prefixes, projection, group, modifiers
 
     def parse_select_body(self):
@@ -1070,23 +1082,11 @@ class _Parser:
         kind0, v0 = self.peek()
         if not (kind0 == "keyword" and v0.upper() in _AGG_FNS):
             expr = self.parse_or()
-            if not self.at_keyword("AS"):
-                raise SparqlError("projection expression needs AS ?alias")
-            self.next()
-            kind3, alias = self.next()
-            if kind3 != "var":
-                raise SparqlError(f"AS expects ?alias, got {alias!r}")
-            self.expect(")")
-            return ("expr", expr, alias[1:])
+            alias = self.parse_as_var("projection expression needs AS ?alias")
+            return ("expr", expr, alias)
         fn, distinct, arg, sep = self.parse_agg_call()
-        if not self.at_keyword("AS"):
-            raise SparqlError("aggregate projection needs AS ?alias")
-        self.next()
-        kind3, alias = self.next()
-        if kind3 != "var":
-            raise SparqlError(f"AS expects ?alias, got {alias!r}")
-        self.expect(")")
-        return ("agg", fn, distinct, arg, alias[1:], sep)
+        alias = self.parse_as_var("aggregate projection needs AS ?alias")
+        return ("agg", fn, distinct, arg, alias, sep)
 
     def parse_agg_call(self) -> tuple:
         """``AGG([DISTINCT] ?v|*[; SEPARATOR="s"])`` — the aggregate call
@@ -1154,16 +1154,10 @@ class _Parser:
             elif v == "(":
                 self.next()
                 expr = self.parse_or()
-                if not self.at_keyword("AS"):
-                    raise SparqlError(
-                        "a GROUP BY expression needs (expr AS ?var)"
-                    )
-                self.next()
-                kind2, v2 = self.next()
-                if kind2 != "var":
-                    raise SparqlError(f"AS expects ?var, got {v2!r}")
-                self.expect(")")
-                keys.append(("expr", expr, v2[1:]))
+                name = self.parse_as_var(
+                    "a GROUP BY expression needs (expr AS ?var)"
+                )
+                keys.append(("expr", expr, name))
             else:
                 break
         if not keys:
@@ -1336,14 +1330,8 @@ class _Parser:
                 self.next()
                 self.expect("(")
                 expr = self.parse_or()
-                if not self.at_keyword("AS"):
-                    raise SparqlError("BIND needs (expr AS ?var)")
-                self.next()
-                kind2, v2 = self.next()
-                if kind2 != "var":
-                    raise SparqlError(f"BIND AS expects ?var, got {v2!r}")
-                self.expect(")")
-                elements.append(("bind", expr, v2[1:]))
+                var = self.parse_as_var("BIND needs (expr AS ?var)")
+                elements.append(("bind", expr, var))
             elif self.at_keyword("MINUS"):
                 self.next()
                 elements.append(("minus", self.parse_group()))
@@ -1992,55 +1980,6 @@ def _pair_closure(rel: DataFrame, max_depth: int) -> DataFrame:
     return paths
 
 
-def _zero_length_rows(triples: DataFrame, s, o) -> DataFrame:
-    """The zero-length-path solutions a ``*``/``?`` hop adds: a constant
-    endpoint matches ITSELF (the spec's zero-length path relates every
-    term to itself, whether or not it appears in the graph), and two
-    variable endpoints bind every subject/object term in the graph."""
-    spark = triples.sparkSession
-    if s[0] == "const":
-        return spark.createDataFrame(
-            [(s[1], s[1])], "`__ps` string, `__po` string"
-        )
-    if o[0] == "const":
-        return spark.createDataFrame(
-            [(o[1], o[1])], "`__ps` string, `__po` string"
-        )
-    nodes = (
-        triples.select(F.col("s").alias("__ps"))
-        .unionByName(triples.select(F.col("o").alias("__ps")))
-        .distinct()
-    )
-    return nodes.select("__ps", F.col("__ps").alias("__po"))
-
-
-def _zero_length_rows_scoped(triples: DataFrame, s, o) -> DataFrame:
-    """:func:`_zero_length_rows` inside ``GRAPH ?var`` — the zero-length
-    relation exists PER NAMED GRAPH, in the graph-scoped node encoding
-    (``g + _GSEP + term``): a constant endpoint matches itself in every
-    named graph; variable endpoints bind each graph's own terms."""
-    if s[0] == "const" or o[0] == "const":
-        const = s[1] if s[0] == "const" else o[1]
-        seeds = triples.select("g").distinct().select(
-            F.concat(F.col("g"), F.lit(_GSEP), F.lit(const)).alias("__ps")
-        )
-        return seeds.select("__ps", F.col("__ps").alias("__po"))
-    nodes = (
-        triples.select(
-            F.concat(F.col("g"), F.lit(_GSEP), F.col("s")).alias("__ps")
-        )
-        .unionByName(
-            triples.select(
-                F.concat(F.col("g"), F.lit(_GSEP), F.col("o")).alias(
-                    "__ps"
-                )
-            )
-        )
-        .distinct()
-    )
-    return nodes.select("__ps", F.col("__ps").alias("__po"))
-
-
 def _range_paths(
     rel: DataFrame,
     lo: int,
@@ -2133,8 +2072,7 @@ def _compile_pathhop(
     own graph prefix plus the constant."""
     scoped = gvar is not None
 
-    def _node(col: str) -> Column:
-        c = F.col(col)
+    def _node(c: Column) -> Column:
         return F.concat(F.col("g"), F.lit(_GSEP), c) if scoped else c
 
     def _dec(col: str) -> Column:
@@ -2151,14 +2089,15 @@ def _compile_pathhop(
         # complement, still a single pushable NOT-IN filter.
         consts = [str(_resolve(p, prefixes)[1]) for p in seg["preds"]]
         rel = triples.filter(~F.col("p").isin(consts)).select(
-            _node("s").alias("__ps"), _node("o").alias("__po")
+            _node(F.col("s")).alias("__ps"), _node(F.col("o")).alias("__po")
         )
     else:
         rel = None
         for p in seg["preds"]:
             pr = _resolve(p, prefixes)
             r = triples.filter(F.col("p") == F.lit(pr[1])).select(
-                _node("s").alias("__ps"), _node("o").alias("__po")
+                _node(F.col("s")).alias("__ps"),
+                _node(F.col("o")).alias("__po"),
             )
             rel = r if rel is None else rel.unionByName(r)
     if seg["inverse"]:
@@ -2166,12 +2105,30 @@ def _compile_pathhop(
             F.col("__po").alias("__ps"), F.col("__ps").alias("__po")
         )
 
-    def _zero_rows() -> DataFrame:
-        return (
-            _zero_length_rows_scoped(triples, s, o)
-            if scoped
-            else _zero_length_rows(triples, s, o)
-        )
+    def _zero_length_rows() -> DataFrame:
+        """The zero-length-path solutions a ``*``/``?``/``{0,m}`` hop
+        adds, in the hop's node encoding: a constant endpoint matches
+        ITSELF (the spec's zero-length path relates every term to
+        itself, whether or not it appears in the graph; inside ``GRAPH
+        ?var`` once per named graph), and two variable endpoints bind
+        every subject/object term (of each named graph)."""
+        if s[0] == "const" or o[0] == "const":
+            const = s[1] if s[0] == "const" else o[1]
+            if not scoped:
+                # one local row: no scan of the triples
+                return triples.sparkSession.createDataFrame(
+                    [(const, const)], "`__ps` string, `__po` string"
+                )
+            nodes = triples.select("g").distinct().select(
+                _node(F.lit(const)).alias("__ps")
+            )
+        else:
+            nodes = (
+                triples.select(_node(F.col("s")).alias("__ps"))
+                .unionByName(triples.select(_node(F.col("o")).alias("__ps")))
+                .distinct()
+            )
+        return nodes.select("__ps", F.col("__ps").alias("__po"))
 
     def _seeded(r: DataFrame, const: str) -> DataFrame:
         """``(const, reached)`` pairs of the one-or-more closure FROM a
@@ -2207,7 +2164,7 @@ def _compile_pathhop(
         # the relation carries; only the zero-length rows (lo == 0) are
         # encoding-aware, supplied here.
         rel = _range_paths(
-            rel, rng[0], rng[1], max_path_depth, _zero_rows
+            rel, rng[0], rng[1], max_path_depth, _zero_length_rows
         )
     closing = seg["plus"] or seg["star"]
     if not eager:
@@ -2235,7 +2192,7 @@ def _compile_pathhop(
         # zero-or-more / zero-or-one: union the zero-length solutions;
         # both forms are set semantics, so de-dup after the union (the
         # closure may already contain (x, x) cycle pairs)
-        rel = rel.unionByName(_zero_rows()).distinct()
+        rel = rel.unionByName(_zero_length_rows()).distinct()
     if scoped:
         # decode the composite nodes: graph prefix -> the GRAPH
         # variable (both endpoints carry the same graph by
@@ -2964,6 +2921,39 @@ def _join_compatible(
     return joined
 
 
+def _join_element(
+    current: "DataFrame | None",
+    nullable: "set[str]",
+    df: DataFrame,
+    df_nullable: "set[str]" = frozenset(),
+    error: str = "",
+) -> "tuple[DataFrame, set[str]]":
+    """Join one group element's bindings ``df`` (a triple/path hop, a
+    UNION, a subquery, a GRAPH group or a VALUES block) into the group
+    so far, ``current`` (None before the first element, which becomes
+    the binding table). A shared variable the element may leave unbound
+    (``df_nullable``) would need a RIGHT-nullable compatible join —
+    outside the subset — so it raises ``error`` with the variables
+    formatted in as ``{bad}``. The inner join re-binds the shared
+    variables to the element's non-null values; the element's other
+    variables keep its nullability.
+
+    Returns the group's new (bindings, nullable-vars)."""
+    if current is None:
+        return df, nullable | df_nullable
+    shared = [c for c in current.columns if c in df.columns]
+    bad = [v for v in shared if v in df_nullable]
+    if bad:
+        raise SparqlError(error.format(bad=bad))
+    joined = _join_compatible(current, df, "inner", nullable)
+    return joined, (nullable | df_nullable) - set(shared)
+
+
+def _empty_mapping(spark) -> DataFrame:
+    """The single EMPTY solution mapping: one zero-column row."""
+    return spark.range(1).select()
+
+
 def _compile_subquery(
     triples: DataFrame,
     el: tuple,
@@ -3106,21 +3096,14 @@ def _compile_group(
                     if pat.limit(1).count() == 0:
                         group_unsat = True
                 continue
-            if current is None:
-                current = pat
-            else:
-                shared = [c for c in current.columns if c in pat.columns]
-                current = _join_compatible(current, pat, "inner", nullable)
-                # an inner join against a pattern re-binds shared nullable
-                # vars to the pattern's (non-null) values
-                nullable -= set(shared)
+            current, nullable = _join_element(current, nullable, pat)
         elif el[0] == "optional":
             if current is None:
                 if not saw_guard:
                     raise SparqlError("OPTIONAL cannot be the first pattern")
                 # constant guards preceded it: OPTIONAL extends the single
                 # empty solution mapping
-                current = triples.sparkSession.range(1).select()
+                current = _empty_mapping(triples.sparkSession)
             sub, sub_nullable = _compile_group(
                 triples, el[1], prefixes, max_path_depth,
                 skip_eager=group_unsat or skip_eager,
@@ -3164,48 +3147,24 @@ def _compile_group(
                     ]
                 )
                 padded = out if padded is None else padded.unionByName(out)
-            if current is None:
-                current = padded
-            else:
-                shared = [c for c in current.columns if c in padded.columns]
-                # a shared var the union may leave unbound would need a
-                # RIGHT-nullable compatible join — outside the subset
-                bad = [v for v in shared if v in u_nullable]
-                if bad:
-                    raise SparqlError(
-                        f"joining a UNION on variables {bad} that are not "
-                        "bound in every branch is not supported; bind them "
-                        "in all branches or restructure the query"
-                    )
-                current = _join_compatible(current, padded, "inner", nullable)
-                nullable -= {v for v in shared if v not in u_nullable}
-            nullable |= u_nullable
+            current, nullable = _join_element(
+                current, nullable, padded, u_nullable,
+                "joining a UNION on variables {bad} that are not bound in "
+                "every branch is not supported; bind them in all branches "
+                "or restructure the query",
+            )
         elif el[0] == "subquery":
             sub, sub_nullable = _compile_subquery(
                 triples, el, prefixes, max_path_depth,
                 skip_eager=group_unsat or skip_eager, quads=quads,
                 gvar=gvar,
             )
-            if current is None:
-                current = sub
-                nullable |= sub_nullable
-                continue
-            shared = [c for c in current.columns if c in sub.columns]
-            bad = [v for v in shared if v in sub_nullable]
-            if bad:
-                # the subquery side being unbound would need a
-                # RIGHT-nullable compatible join — outside the subset
-                # (same restriction as UNION branches)
-                raise SparqlError(
-                    f"joining a subquery on variables {bad} it may leave "
-                    "unbound is not supported; bind them in required "
-                    "patterns inside the subquery"
-                )
-            current = _join_compatible(current, sub, "inner", nullable)
-            # shared vars re-bind to the subquery's (non-null) values;
-            # new subquery vars inherit its nullability
-            nullable -= set(shared)
-            nullable |= sub_nullable - set(shared)
+            current, nullable = _join_element(
+                current, nullable, sub, sub_nullable,
+                "joining a subquery on variables {bad} it may leave "
+                "unbound is not supported; bind them in required patterns "
+                "inside the subquery",
+            )
         elif el[0] in ("exists", "notexists", "minus"):
             if current is None:
                 raise SparqlError(
@@ -3288,23 +3247,12 @@ def _compile_group(
                         f"GRAPH ?{gt[1]} group binds the graph variable "
                         "only through triple patterns — add at least one"
                     )
-            if current is None:
-                current = sub
-                nullable |= sub_nullable
-            else:
-                shared = [c for c in current.columns if c in sub.columns]
-                bad = [v for v in shared if v in sub_nullable]
-                if bad:
-                    # right-nullable compatible join — outside the subset
-                    # (same restriction as UNION branches / subqueries)
-                    raise SparqlError(
-                        f"joining a GRAPH group on variables {bad} it "
-                        "may leave unbound is not supported; bind them "
-                        "in required patterns inside the GRAPH group"
-                    )
-                current = _join_compatible(current, sub, "inner", nullable)
-                nullable -= set(shared)
-                nullable |= sub_nullable - set(shared)
+            current, nullable = _join_element(
+                current, nullable, sub, sub_nullable,
+                "joining a GRAPH group on variables {bad} it may leave "
+                "unbound is not supported; bind them in required patterns "
+                "inside the GRAPH group",
+            )
         elif el[0] == "values":
             _, names, rows = el
             undef = {
@@ -3322,32 +3270,21 @@ def _compile_group(
             ]
             schema = ", ".join(f"`{n}` string" for n in names)
             vdf = triples.sparkSession.createDataFrame(data, schema=schema)
-            if current is None:
-                current = vdf
-                nullable |= undef
-            else:
-                shared = set(current.columns) & set(names)
-                bad = sorted(shared & undef)
-                if bad:
-                    raise SparqlError(
-                        f"UNDEF on already-bound VALUES variables {bad} "
-                        "would need a right-nullable compatible join — "
-                        "outside the subset; move the VALUES before the "
-                        "patterns that bind them"
-                    )
-                # inline data is tiny by construction — broadcast it so the
-                # binding join never shuffles the pattern side
-                current = _join_compatible(
-                    current, F.broadcast(vdf), "inner", nullable
-                )
-                nullable -= shared  # re-bound to the VALUES' non-null data
-                nullable |= undef - shared
+            current, nullable = _join_element(
+                current, nullable,
+                # inline data is tiny by construction — broadcast it so
+                # the binding join never shuffles the pattern side
+                vdf if current is None else F.broadcast(vdf), undef,
+                "UNDEF on already-bound VALUES variables {bad} would need "
+                "a right-nullable compatible join — outside the subset; "
+                "move the VALUES before the patterns that bind them",
+            )
         elif el[0] == "bind":
             _, expr, var = el
             if current is None:
                 # BIND may open a group: it extends the single empty
                 # solution mapping (spec: BIND over the pattern so far)
-                current = triples.sparkSession.range(1).select()
+                current = _empty_mapping(triples.sparkSession)
             if var in current.columns:
                 raise SparqlError(
                     f"BIND target ?{var} is already bound in scope"
@@ -3375,7 +3312,7 @@ def _compile_group(
         # only constant existence guards: the group yields the single
         # EMPTY solution mapping (one zero-column row) when they all
         # match — bindings= re-projects the constants over it
-        current = triples.sparkSession.range(1).select()
+        current = _empty_mapping(triples.sparkSession)
     if group_unsat:
         current = current.filter(F.lit(False))
     # filters apply to the completed group (correct for group-local vars)
@@ -3748,6 +3685,10 @@ def _apply_aggregation(
                 _compile_filter(having, set(grouped.columns))
             )
         return grouped, {}
+
+    def agg_column(fn, distinct, arg, sep) -> Column:
+        return _agg_column(out, fn, distinct, arg, sep, bool(group_by))
+
     exprs = []
     seen = set(plain)
     for _, fn, distinct, arg, alias, sep in agg_items:
@@ -3761,7 +3702,7 @@ def _apply_aggregation(
                 "column needs a distinct name"
             )
         seen.add(alias)
-        agg = _agg_column(out, fn, distinct, arg, sep, bool(group_by))
+        agg = agg_column(fn, distinct, arg, sep)
         if term_form and fn in ("SUM", "AVG") and arg is not None:
             # subquery results re-enter the term world: emit the typed
             # term form (see _agg_term_form) instead of a bare DOUBLE
@@ -3772,12 +3713,7 @@ def _apply_aggregation(
     having_aliases = {
         spec: f"__having_{i}" for i, spec in enumerate(having_specs)
     }
-    for spec, alias in having_aliases.items():
-        fn, distinct, arg, sep = spec
-        exprs.append(
-            _agg_column(out, fn, distinct, arg, sep, bool(group_by))
-            .alias(alias)
-        )
+    exprs += [agg_column(*s).alias(a) for s, a in having_aliases.items()]
     # aggregate calls inside SELECT expressions: same single
     # aggregation, string-cast (the Extend computes on lexical forms —
     # e.g. ROUND's isNumeric-shape guard needs a string), kept until
@@ -3785,13 +3721,10 @@ def _apply_aggregation(
     extend_aliases = {
         spec: f"__having_x{i}" for i, spec in enumerate(extend_specs)
     }
-    for spec, alias in extend_aliases.items():
-        fn, distinct, arg, sep = spec
-        exprs.append(
-            _agg_column(out, fn, distinct, arg, sep, bool(group_by))
-            .cast("string")
-            .alias(alias)
-        )
+    exprs += [
+        agg_column(*s).cast("string").alias(a)
+        for s, a in extend_aliases.items()
+    ]
     grouped = out.groupBy(*group_by).agg(*exprs) if group_by else out.agg(*exprs)
     if having is not None:
         plainified = _rewrite_having(having, having_aliases)
@@ -3868,16 +3801,21 @@ def _collect_vars(elements) -> set:
             # only the PROJECTED names are visible outward (SELECT * =
             # everything the inner group mentions)
             _, projection, grp, _mods = el
-            if projection is None:
-                out |= _collect_vars(grp)
-            else:
-                out |= {
-                    it[1] if it[0] == "var"
-                    else it[2] if it[0] == "expr"
-                    else it[4]
-                    for it in projection
-                }
+            names = _projected_names(projection)
+            out |= _collect_vars(grp) if names is None else set(names)
     return out
+
+
+def _projected_names(projection) -> "list[str] | None":
+    """The names a SELECT projection exports, in projection order: each
+    ``?var``, and the alias of each ``(expr AS ?alias)`` and
+    ``(AGG(...) AS ?alias)`` item. None for ``SELECT *``."""
+    if projection is None:
+        return None
+    return [
+        it[1] if it[0] == "var" else it[2] if it[0] == "expr" else it[4]
+        for it in projection
+    ]
 
 
 def _subst_expr(expr, binds: dict, prefixes: dict):
@@ -3974,11 +3912,7 @@ def _substitute(elements, binds: dict, prefixes: dict) -> list:
             # reject rather than silently cross-joining or corrupting;
             # constrain the subquery's OUTPUT with VALUES/FILTER instead
             _, projection, grp, _mods = el
-            inner = _collect_vars(grp) | (
-                set()
-                if projection is None
-                else {it[1] if it[0] == "var" else it[4] for it in projection}
-            )
+            inner = _collect_vars(grp) | set(_projected_names(projection) or ())
             hit = sorted(set(binds) & inner)
             if hit:
                 raise SparqlError(
@@ -4116,6 +4050,15 @@ def _order_page(
     return df
 
 
+def _parse(query: str, prefixes: "dict[str, str] | None", form) -> tuple:
+    """Tokenize ``query`` and parse it with ``form``, a ``_Parser``
+    query-form method whose result starts with the query's PREFIX
+    declarations. Returns the prefixes in effect (``prefixes`` merged
+    under the declared ones) followed by the rest of that result."""
+    declared, *parsed = form(_Parser(_tokenize(query), prefixes))
+    return ({**(prefixes or {}), **declared}, *parsed)
+
+
 def sparql_select(
     triples: DataFrame,
     query: str,
@@ -4134,12 +4077,9 @@ def sparql_select(
     optional side doesn't match, exactly like rdflib. Returns one column
     per projected variable, named after the variable.
     """
-    toks = _tokenize(query)
-    declared, projection, group, modifiers = _Parser(
-        toks, prefixes
-    ).parse_query()
-    pfx = dict(prefixes or {})
-    pfx.update(declared)
+    pfx, projection, group, modifiers = _parse(
+        query, prefixes, _Parser.parse_query
+    )
     triples = _apply_dataset_clauses(triples, modifiers, pfx)
     out, nullable = _solutions(triples, group, pfx, bindings, max_path_depth)
     return _finish_select(out, projection, modifiers, pfx, nullable)[0]
@@ -4265,16 +4205,7 @@ def _finish_select(
                 out_nullable.add(alias)
         if extend_aliases:
             out = out.drop(*extend_aliases.values())
-    projection_names = (
-        None
-        if projection is None
-        else [
-            it[1] if it[0] == "var"
-            else it[2] if it[0] == "expr"
-            else it[4]
-            for it in projection
-        ]
-    )
+    projection_names = _projected_names(projection)
     if projection_names is not None:
         if len(set(projection_names)) != len(projection_names):
             dups = sorted(
@@ -4408,10 +4339,7 @@ def sparql_ask(
     :func:`sparql_select` (rdflib ``initBindings`` parity —
     reference src/bio2bel/sources/rhea.py:38-47 runs arbitrary rdflib
     query forms, ASK included)."""
-    toks = _tokenize(query)
-    declared, group = _Parser(toks, prefixes).parse_ask()
-    pfx = dict(prefixes or {})
-    pfx.update(declared)
+    pfx, group = _parse(query, prefixes, _Parser.parse_ask)
     out, _ = _solutions(triples, group, pfx, bindings, max_path_depth)
     return out.limit(1).count() > 0
 
@@ -4443,10 +4371,7 @@ def sparql_describe(
     GRAPH clause, and the WHERE group may still use GRAPH clauses to
     find the resources (round 12; previously rejected)."""
     default = _default_graph(triples)
-    toks = _tokenize(query)
-    declared, terms, group = _Parser(toks, prefixes).parse_describe()
-    pfx = dict(prefixes or {})
-    pfx.update(declared)
+    pfx, terms, group = _parse(query, prefixes, _Parser.parse_describe)
     consts = [str(_resolve(t, pfx)[1]) for t in terms if t[0] != "var"]
     varnames = [t[1] for t in terms if t[0] == "var"]
     if group is None:
@@ -4504,12 +4429,9 @@ def sparql_construct(
     feeds straight back into the quad-store query/UPDATE forms. A
     template with no GRAPH block keeps the plain ``(s, p, o)``
     schema."""
-    toks = _tokenize(query)
-    declared, template, group, order, limit, offset = _Parser(
-        toks, prefixes
-    ).parse_construct()
-    pfx = dict(prefixes or {})
-    pfx.update(declared)
+    pfx, template, group, order, limit, offset = _parse(
+        query, prefixes, _Parser.parse_construct
+    )
     # _solutions re-projects every binding as a constant column
     out, _ = _solutions(
         triples, group, pfx, bindings, max_path_depth,

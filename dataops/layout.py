@@ -123,6 +123,15 @@ def zorder_layout(
     return out.repartitionByRange(F.col(out_col))
 
 
+def _nonnegative(c: Column, fn: str, name: str) -> Column:
+    """``c`` as a long, failing the query on a negative value: a Hilbert
+    index is defined on the nonnegative grid only, and a negative
+    coordinate would otherwise collide with a valid cell's index."""
+    c = c.cast("long")
+    message = F.concat(F.lit(f"{fn}: negative {name} "), c.cast("string"))
+    return F.when(c < 0, F.raise_error(message)).otherwise(c)
+
+
 def hilbert_value(x: Column, y: Column, bits: int = 8) -> Column:
     """Hilbert-curve index of an already-normalized 2-D integer point —
     the space-filling curve with strictly better locality than Z-order
@@ -141,15 +150,9 @@ def hilbert_value(x: Column, y: Column, bits: int = 8) -> Column:
     query; a null one gives a null index.
     """
     levels = F.sequence(F.lit(bits - 1), F.lit(0), F.lit(-1))
-
-    def nonnegative(c: Column, name: str) -> Column:
-        c = c.cast("long")
-        message = F.concat(F.lit(f"hilbert_value: negative {name} "), c.cast("string"))
-        return F.when(c < 0, F.raise_error(message)).otherwise(c)
-
     init = F.struct(
-        nonnegative(x, "x").alias("x"),
-        nonnegative(y, "y").alias("y"),
+        _nonnegative(x, "hilbert_value", "x").alias("x"),
+        _nonnegative(y, "hilbert_value", "y").alias("y"),
         F.lit(0).cast("long").alias("d"),
     )
 
@@ -193,7 +196,8 @@ def hilbert_value_nd(cols: Sequence[Column], bits: int = 8) -> Column:
     d = 2 orientation differs from :func:`hilbert_value` (both are true
     Hilbert curves; locality properties are identical).
 
-    ``d * bits`` must fit a signed long (<= 62).
+    ``d * bits`` must fit a signed long (<= 62). A negative coordinate
+    fails the query; a null one gives a null index.
     """
     n = len(cols)
     if n < 2:
@@ -201,9 +205,10 @@ def hilbert_value_nd(cols: Sequence[Column], bits: int = 8) -> Column:
     if n * bits > 62:
         raise ValueError(f"n_cols*bits = {n * bits} exceeds the 62-bit budget")
     levels = F.sequence(F.lit(bits - 1), F.lit(1), F.lit(-1))
-    init = F.struct(
-        *[c.cast("long").alias(f"x{i}") for i, c in enumerate(cols)]
-    )
+    init = F.struct(*[
+        _nonnegative(c, "hilbert_value_nd", f"x{i}").alias(f"x{i}")
+        for i, c in enumerate(cols)
+    ])
 
     def step(acc, q):
         # 1 << q and bit tests via integer shifts (see hilbert_value)

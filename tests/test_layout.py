@@ -177,6 +177,23 @@ def test_hilbert_value_rejects_negative_coordinates(spark):
             h(x, y)
 
 
+def test_hilbert_value_nd_rejects_negative_coordinates(spark):
+    """(-1, 0) must not share (15, 0)'s index at bits=4: a negative
+    coordinate fails the query; a null one stays null."""
+    from dataops.layout import hilbert_value_nd
+
+    def h(*xs):
+        cols = [f"x{i}" for i in range(len(xs))]
+        df = spark.createDataFrame([xs], ", ".join(f"{c} long" for c in cols))
+        return df.select(hilbert_value_nd([F.col(c) for c in cols], bits=4)).first()[0]
+
+    assert h(15, 0) == 255
+    assert h(None, 3) is None
+    for xs in [(-1, 0), (0, -1), (1, 2, -3)]:
+        with pytest.raises(Exception, match="hilbert_value_nd: negative"):
+            h(*xs)
+
+
 def test_hilbert_layout_prunes_both_dims(spark):
     from dataops.layout import hilbert_layout
     import pytest

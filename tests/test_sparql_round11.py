@@ -417,6 +417,20 @@ def test_subquery_scope_and_binding_errors(pathways):
         )
 
 
+@pytest.mark.parametrize("bound", ["pw", "n"])
+def test_binding_into_subquery_with_expression_projection(pathways, bound):
+    # an (expr AS ?alias) projection names its alias like any other
+    # projected variable: binding it, or an inner variable, is rejected
+    with pytest.raises(SparqlError, match="inside a subquery"):
+        sparql_select(
+            pathways,
+            "SELECT ?pw WHERE { { SELECT ?pw (STRLEN(?lab) AS ?n) "
+            "WHERE { ?pw ex:label ?lab } } }",
+            prefixes=PFX,
+            bindings={bound: EX + "p1"},
+        )
+
+
 def test_describe_iri_only_is_pushable_scan(pathways):
     from bio2bel_spark.sparql import sparql_describe
 
